@@ -145,218 +145,205 @@ def warm_up(spark) -> None:
             spark.conf.set("spark.sql.shuffle.partitions", _prev)
 
 
-def run_setup(spark, sf_dir: str, only: set | None = None) -> dict[str, float]:
-    # One-time ingest-style costs, timed as named setup line items so
-    # per-query timings measure steady state (VERDICT r2 #7): the
-    # bucketed-table write behind ql_bucketed_join (at 100 TB an
-    # ingest-time cost, never a per-query one) and the derived-edge
-    # scan+persist shared by all graph keys.
-    #
-    # `only`: optional set of line-item names to fill — the bench run
-    # itself always fills everything (only=None); targeted harnesses
-    # (tools/scale_probe.py probing a key subset at an expensive SF)
-    # pass the items their keys consume so a 19-key probe doesn't pay
-    # the other 200 keys' ingest builds.
+# One-time ingest-style costs, timed as named setup line items so
+# per-query timings measure steady state (VERDICT r2 #7): the
+# bucketed-table write behind ql_bucketed_join (at 100 TB an
+# ingest-time cost, never a per-query one), the derived-edge
+# scan+persist shared by all graph keys, and every cache.shared
+# materialized intermediate — filled HERE regardless of registry
+# iteration order, which LRU-rotates per round
+# (registry._rotate_for_driver), so "owner key runs before its
+# composites" can no longer be guaranteed by insertion order (r4 item
+# 8's fix). At 100 TB each of these is an ingest-time materialized
+# table (the engine's own docstrings for cache.shared); the JSON keeps
+# the builds visible.
+#
+# Each entry is (line-item name, fill(spark, sf_dir), serves). `serves`
+# names the declared keys whose per-key bench number measures only a
+# checkpoint/parquet read because the item moves ESSENTIALLY ALL of
+# their work into setup (ADVICE r9 #5) — it becomes the JSON
+# `setup_serves` map, keeping that accounting auditable from
+# BENCH_DETAIL.json alone. Items that are partial inputs (e.g.
+# graph_derive_persist feeds every graph key) serve nothing in that
+# sense.
+def _setup_items() -> list:
+    from distributed_graph_database_spark import ops as ops_mod
     from distributed_graph_database_spark import registry, relational
-
-    def want(name: str) -> bool:
-        return only is None or name in only
-
-    setup: dict[str, float] = {}
-    if want("bucketed_table_write"):
-        t0 = time.perf_counter()
-        relational._bucketed_pair(spark, sf_dir)
-        setup["bucketed_table_write"] = round(time.perf_counter() - t0, 4)
-    if want("graph_derive_persist"):
-        t0 = time.perf_counter()
-        edges, _start = registry._graph_ctx(spark, sf_dir)
-        edges.count()
-        setup["graph_derive_persist"] = round(time.perf_counter() - t0, 4)
-
-    # Every cache.shared materialized intermediate is filled HERE as a
-    # named setup line item, so per-key timings measure steady state
-    # REGARDLESS of registry iteration order — which now LRU-rotates
-    # per round (registry._rotate_for_driver), so "owner key runs
-    # before its composites" can no longer be guaranteed by insertion
-    # order (r4 item 8's fix). At 100 TB each of these is an
-    # ingest-time materialized table (the engine's own docstrings for
-    # cache.shared); billing the build to setup matches how
-    # bucketed_table_write and graph_derive_persist are already
-    # reported, and the JSON keeps the builds visible.
+    from distributed_graph_database_spark.cache import shared
     from distributed_graph_database_spark.graph import analytics as g_an
     from distributed_graph_database_spark.pipeline import dedup as pl_dedup
     from distributed_graph_database_spark.pipeline import multimodal as pl_mm
     from distributed_graph_database_spark.pipeline import similarity as pl_sim
     from distributed_graph_database_spark.pipeline import text as pl_text
-    from distributed_graph_database_spark.cache import shared as _shared
     from distributed_graph_database_spark.sources import formats as fmt_mod
-    from distributed_graph_database_spark import ops as ops_mod
-
     from distributed_graph_database_spark.streaming import (
         events_stream as streaming,
     )
 
-    cache_fills = [
-        ("stream_source_stage", lambda: streaming._events_src_dir(spark, sf_dir)),
-        ("copurchase_project", lambda: g_an._copurchase_edges(spark, sf_dir)),
-        ("triangle_enumerate", lambda: g_an._tri_cached(spark, sf_dir)),
-        ("bfs_levels_persist", lambda: registry._bfs_levels_cached(spark, sf_dir)),
-        ("dedup_near_pairs", lambda: pl_dedup.dedup_near_pairs(spark, sf_dir)),
+    return [
+        ("bucketed_table_write", relational._bucketed_pair, []),
+        (
+            "graph_derive_persist",
+            lambda spark, sf_dir: registry._graph_ctx(spark, sf_dir)[0].count(),
+            [],
+        ),
+        ("stream_source_stage", streaming._events_src_dir, []),
+        ("copurchase_project", g_an._copurchase_edges, []),
+        ("triangle_enumerate", g_an._tri_cached, []),
+        ("bfs_levels_persist", registry._bfs_levels_cached, []),
+        ("dedup_near_pairs", pl_dedup.dedup_near_pairs, ["dedup_near"]),
         # The corpus-wide exact truth leg the dedup_near audit signs
         # precision/recall against (r11 graduation) — at 100 TB an
         # ingest-time materialized table like the pair set above.
-        ("dedup_near_truth", lambda: pl_dedup._near_truth_cached(spark, sf_dir)),
-        ("dedup_ngram_pairs", lambda: pl_dedup.dedup_ngram(spark, sf_dir)),
+        ("dedup_near_truth", pl_dedup._near_truth_cached, ["dedup_near"]),
+        ("dedup_ngram_pairs", pl_dedup.dedup_ngram, ["dedup_ngram"]),
         # The tree-quantizer (cells ∝ N, two-level routed — r13 re-pin,
         # VERDICT r12 #1) blocked pair table dedup_embed, its
         # dedup_embed_tree alias, AND corpus_semdedup consume.
-        ("dedup_embed_pairs", lambda: pl_sim.dedup_embed(spark, sf_dir)),
+        ("dedup_embed_pairs", pl_sim.dedup_embed, ["dedup_embed", "dedup_embed_tree"]),
         # Alias read since r13 (dedup_embed_tree serves the same
         # shared artifact as the primary): ~0 s, kept as a line item
         # so round-over-round bench JSON stays comparable.
-        ("dedup_embed_tree_pairs", lambda: pl_sim.dedup_embed_tree(spark, sf_dir)),
-        ("sim_topk_result", lambda: pl_sim.sim_topk(spark, sf_dir)),
-        ("sim_topk_ivf_result", lambda: pl_sim.sim_topk_ivf(spark, sf_dir)),
+        ("dedup_embed_tree_pairs", pl_sim.dedup_embed_tree, ["dedup_embed_tree"]),
+        ("sim_topk_result", pl_sim.sim_topk, ["sim_topk"]),
+        ("sim_topk_ivf_result", pl_sim.sim_topk_ivf, ["sim_topk_ivf"]),
         # The tree-quantizer (cells ∝ N, two-level routed — r13 re-pin,
         # VERDICT r12 #1) kNN graph; serves sim_knn_graph, its
         # sim_knn_graph_tree alias, and both recall keys.
-        ("sim_knn_graph_result", lambda: pl_sim.sim_knn_graph(spark, sf_dir)),
+        (
+            "sim_knn_graph_result",
+            pl_sim.sim_knn_graph,
+            ["sim_knn_graph", "sim_knn_graph_tree"],
+        ),
         # Alias read since r13 (sim_knn_graph_tree serves the same
         # shared artifact as the primary): ~0 s, kept for bench-JSON
         # continuity.
-        ("sim_knn_tree_result", lambda: pl_sim.sim_knn_graph_tree(spark, sf_dir)),
+        ("sim_knn_tree_result", pl_sim.sim_knn_graph_tree, ["sim_knn_graph_tree"]),
         # The exact CAP×corpus ground-truth top-k (r13): consumed by
         # sim_knn_recall, its sim_knn_tree_recall twin, AND
         # ml_knn_classify's neighbor vote — the recall monitor's
         # ingest-time truth table, built once per (session, sf).
-        ("knn_exact_topk", lambda: pl_sim._knn_exact_topk(spark, sf_dir)),
-        ("pq_corpus_encode", lambda: pl_sim._pq_codes_long(spark, sf_dir)),
+        ("knn_exact_topk", pl_sim._knn_exact_topk, []),
+        ("pq_corpus_encode", pl_sim._pq_codes_long, []),
         # The ADC/top-k result both PQ keys consume: without this line
         # item, whichever of sim_pq_topk/sim_pq_recall the LRU rotation
         # ordered first paid the shared build that round (r6/r7 swapped
         # 0.02 s ↔ 2.2 s between them — VERDICT r7 item 3), making
         # per-key round-over-round comparison lie.
-        ("pq_adc_topk", lambda: pl_sim.sim_pq_topk(spark, sf_dir)),
-        ("ivfpq_adc_topk", lambda: pl_sim.sim_ivfpq_topk(spark, sf_dir)),
+        ("pq_adc_topk", pl_sim.sim_pq_topk, ["sim_pq_topk"]),
+        ("ivfpq_adc_topk", pl_sim.sim_ivfpq_topk, ["sim_ivfpq_topk"]),
         # The (doc_id, phash) feature table all three phash keys scan
         # from: the Arrow synthesis+hash corpus pass is the dominant
         # cost, paid once here instead of once per key.
-        ("mm_phash_features", lambda: pl_mm.mm_phash(spark, sf_dir)),
+        ("mm_phash_features", pl_mm.mm_phash, ["mm_phash"]),
         # The (doc_id, afp) fingerprint table all three audio keys
         # consume — the Arrow chunk_audio scan + per-doc window pass,
         # paid once here (the mm_phash rule).
-        ("mm_audio_fp_features", lambda: pl_mm.mm_audio_fingerprint(spark, sf_dir)),
+        (
+            "mm_audio_fp_features",
+            pl_mm.mm_audio_fingerprint,
+            ["mm_audio_fingerprint"],
+        ),
         # The (doc_id, simhash) sketch table dedup_simhash AND
         # mm_clip_filter's text side consume — the md5 vote scan is
         # the dominant cost, paid once here (the mm_phash rule).
-        ("simhash_features", lambda: pl_dedup.dedup_simhash(spark, sf_dir)),
+        ("simhash_features", pl_dedup.dedup_simhash, ["dedup_simhash"]),
         # The 8-round merge loop both BPE keys consume (train reads
         # the merge table, encode the final word dict) — paid once
         # here so neither key's timing depends on rotation order.
-        ("bpe_merge_loop", lambda: pl_text._bpe_loop(spark, sf_dir)),
+        ("bpe_merge_loop", pl_text._bpe_loop, ["text_bpe_train"]),
         # Per-doc quality flag frames corpus_dedup_report composes as
         # funnel stages 3/4 next to each flag's own declared key (r13,
         # the lpa_communities owner/composite rule).
-        ("text_repetition_flags", lambda: pl_text.text_repetition(spark, sf_dir)),
-        ("text_contamination_flags",
-         lambda: pl_text.text_contamination(spark, sf_dir)),
-        ("colloc_unigram_counts", lambda: _shared(
-            spark, sf_dir, "colloc_unigrams",
-            lambda: pl_text._colloc_unigrams(spark, sf_dir))),
+        ("text_repetition_flags", pl_text.text_repetition, []),
+        ("text_contamination_flags", pl_text.text_contamination, []),
+        (
+            "colloc_unigram_counts",
+            lambda spark, sf_dir: shared(
+                spark, sf_dir, "colloc_unigrams",
+                lambda: pl_text._colloc_unigrams(spark, sf_dir),
+            ),
+            [],
+        ),
         # The LPA partition graph_communities AND graph_modularity
         # consume (r11 sharing, the dedup_ngram owner/composite rule).
-        ("lpa_communities", lambda: g_an.graph_communities(spark, sf_dir)),
-        ("ml_confusion_matrix", lambda: pl_sim.ml_centroid_classify(spark, sf_dir)),
+        ("lpa_communities", g_an.graph_communities, ["graph_communities"]),
+        ("ml_confusion_matrix", pl_sim.ml_centroid_classify, ["ml_centroid_classify"]),
         # The per-score group contraction ml_auc AND ml_calibration
         # read (r13, the lpa_communities owner/composite rule): each
         # used to lazily re-run the ml_score corpus scan.
-        ("score_groups", lambda: pl_sim._score_groups(spark, sf_dir)),
+        ("score_groups", pl_sim._score_groups, []),
         # The ANALYZE-style exact profile both stats keys read (one
         # Expand scan per session — at 100 TB a catalog entry written
         # at ingest; VERDICT r8 item 2).
-        ("orders_exact_profile", lambda: fmt_mod._exact_profile_wide(spark, sf_dir)),
+        (
+            "orders_exact_profile",
+            fmt_mod._exact_profile_wide,
+            ["store_stats_collect", "store_stats_approx"],
+        ),
         # The derived-partsupp ingest artifact Q2/Q11 read (TPC-H
         # ships partsupp as a base table; this engine derives it once
         # per session — Q11 consumed it 3× per run before this,
         # VERDICT r9 item 1).
-        ("partsupp_agg", lambda: relational._partsupp_shared(spark, sf_dir)),
+        ("partsupp_agg", relational._partsupp_shared, ["ql_sql_q2", "ql_sql_q11"]),
         # The two-pool threaded serve behind ops_concurrent_replay —
         # requests execute once when they arrive; downstream scans
         # read the served results (see the key's docstring).
-        ("concurrent_replay_serve", lambda: ops_mod.ops_concurrent_replay(spark, sf_dir)),
+        (
+            "concurrent_replay_serve",
+            ops_mod.ops_concurrent_replay,
+            ["ops_concurrent_replay"],
+        ),
         # The full readers-writers serve (primary applying writes
         # while the secondaries read AS-OF states) — same serving-
         # layer rule: each arriving request executes once.
-        ("concurrent_full_serve", lambda: ops_mod.ops_concurrent_full(spark, sf_dir)),
+        ("concurrent_full_serve", ops_mod.ops_concurrent_full, ["ops_concurrent_full"]),
         # stream_late_data's three-file arrival timeline (per-session
-        # staging write, like stream_source_stage).
-        ("stream_late_src_stage", lambda: streaming._late_src_dir(spark, sf_dir)),
+        # staging write, like stream_source_stage). Serves nothing (r10
+        # review finding): it only stages the three SOURCE files —
+        # stream_late_data's per-key number still measures the real
+        # 3-batch drain, so listing it would cause exactly the discounting
+        # error `serves` exists to prevent.
+        ("stream_late_src_stage", streaming._late_src_dir, []),
         # stream_cdc_apply's four-microbatch foreachBatch materialize
-        # (per-session ingest; the declared key reads the final
-        # snapshot).
-        ("stream_cdc_drain", lambda: streaming._cdc_stream_snap_dir(spark, sf_dir)),
+        # (per-session ingest). The drained snapshot is memoized, so the
+        # declared key only reads the final snapshot.
+        ("stream_cdc_drain", streaming._cdc_stream_snap_dir, ["stream_cdc_apply"]),
     ]
-    # Validate a caller-supplied `only` against the actual line-item
-    # names (ADVICE r11 #1): a typo'd --setup-items value used to be
-    # silently skipped, so a targeted scale probe timed its key WITH
-    # the ingest build folded in — the exact steady-state distortion
-    # the flag exists to prevent. Raising keeps the probe honest.
+
+
+def _setup_serves() -> dict[str, list[str]]:
+    return {name: serves for name, _, serves in _setup_items() if serves}
+
+
+def run_setup(spark, sf_dir: str, only: set | None = None) -> dict[str, float]:
+    """Fill the setup items in order → {line-item name: seconds}.
+
+    `only`: optional set of line-item names to fill — the bench run
+    itself always fills everything (only=None); targeted harnesses
+    (tools/scale_probe.py probing a key subset at an expensive SF)
+    pass the items their keys consume so a 19-key probe doesn't pay
+    the other 200 keys' ingest builds. Unknown names raise (ADVICE r11
+    #1): a typo'd --setup-items value used to be silently skipped, so
+    a targeted scale probe timed its key WITH the ingest build folded
+    in — the exact steady-state distortion the flag exists to
+    prevent."""
+    items = _setup_items()
     if only is not None:
-        known = {"bucketed_table_write", "graph_derive_persist"}
-        known.update(name for name, _ in cache_fills)
+        known = {name for name, _, _ in items}
         unknown = set(only) - known
         if unknown:
             raise ValueError(
                 f"unknown setup line item(s) {sorted(unknown)}; "
                 f"known items: {sorted(known)}"
             )
-    for name, fill in cache_fills:
-        if not want(name):
-            continue
-        t0 = time.perf_counter()
-        fill()  # cache.shared materializes eagerly (localCheckpoint)
-        setup[name] = round(time.perf_counter() - t0, 4)
+    setup: dict[str, float] = {}
+    for name, fill, _ in items:
+        if only is None or name in only:
+            t0 = time.perf_counter()
+            fill(spark, sf_dir)  # cache.shared materializes eagerly
+            setup[name] = round(time.perf_counter() - t0, 4)
     return setup
-
-
-# Which declared keys each setup line item serves (ADVICE r9 #5: for
-# cached-serve keys the per-key bench number measures a
-# checkpoint/parquet read, with the real operator cost billed to the
-# named setup item — this map keeps that accounting auditable from
-# BENCH_DETAIL.json alone). Only items whose serve moves ESSENTIALLY
-# ALL of a key's work into setup are listed; items that are partial
-# inputs (e.g. graph_derive_persist feeds every graph key) are not
-# "cached serves" in that sense.
-SETUP_SERVES = {
-    "dedup_near_pairs": ["dedup_near"],
-    "dedup_near_truth": ["dedup_near"],
-    "dedup_ngram_pairs": ["dedup_ngram"],
-    "dedup_embed_pairs": ["dedup_embed", "dedup_embed_tree"],
-    "dedup_embed_tree_pairs": ["dedup_embed_tree"],
-    "sim_topk_result": ["sim_topk"],
-    "sim_topk_ivf_result": ["sim_topk_ivf"],
-    "sim_knn_graph_result": ["sim_knn_graph", "sim_knn_graph_tree"],
-    "sim_knn_tree_result": ["sim_knn_graph_tree"],
-    "pq_adc_topk": ["sim_pq_topk"],
-    "ivfpq_adc_topk": ["sim_ivfpq_topk"],
-    "mm_phash_features": ["mm_phash"],
-    "mm_audio_fp_features": ["mm_audio_fingerprint"],
-    "simhash_features": ["dedup_simhash"],
-    "bpe_merge_loop": ["text_bpe_train"],
-    "lpa_communities": ["graph_communities"],
-    "ml_confusion_matrix": ["ml_centroid_classify"],
-    "orders_exact_profile": ["store_stats_collect", "store_stats_approx"],
-    "partsupp_agg": ["ql_sql_q2", "ql_sql_q11"],
-    "concurrent_replay_serve": ["ops_concurrent_replay"],
-    "concurrent_full_serve": ["ops_concurrent_full"],
-    # stream_late_src_stage deliberately absent (r10 review finding):
-    # it only stages the three SOURCE files — stream_late_data's
-    # per-key number still measures the real 3-batch drain, so listing
-    # it here would cause exactly the discounting error this map
-    # exists to prevent. stream_cdc_drain, by contrast, genuinely
-    # memoizes the drained snapshot (_CDC_STREAM_STAGED).
-    "stream_cdc_drain": ["stream_cdc_apply"],
-}
 
 
 def time_keys(
@@ -402,7 +389,7 @@ def main() -> int:
     result = {
         "queries": timings,
         "setup_seconds": setup,
-        "setup_serves": SETUP_SERVES,
+        "setup_serves": _setup_serves(),
         "unit": "sec",
         "sf": _sf_from_dir(sf_dir),
         "n_queries": len(timings),

@@ -1,30 +1,80 @@
-"""Per-(session, sf_dir) materialized-result sharing.
+"""Per-session results and per-session storage: the one rule.
 
-Several declared keys are compositions over other declared keys'
-results (recall metrics over the pair/top-k sets, clustering over the
-pair graph). Recomputing the shared input per key is wasted work in
-any one session, so results opt in to a keyed localCheckpoint cache —
-the same pattern as registry's `_GRAPH_CACHE`/`_BFS_CACHE` (VERDICT
-r1/r2 blessed shape). At 100 TB this is a materialized intermediate
-table; here it's an executor-local checkpoint keyed by Spark
-application id, so a fresh driver session never sees a stale entry.
+Key. Every memoized result lives in one dict keyed by
+``(Spark applicationId, sf_dir, name)``. A fresh driver session has a
+new application id, so it never sees an entry an earlier session
+built. ``memo`` is the package's only per-session memo
+(tests/test_cache.py keeps it that way).
+
+Storage is the builder's choice. ``memo`` stores whatever ``build()``
+returns — a persisted or checkpointed DataFrame, a staged path, a
+count, a schema, a tuple — and never changes it. ``shared`` is
+``memo`` of ``build().localCheckpoint(eager=True)``, the common choice
+for intermediates several declared keys compose over.
+
+Naming. Everything staged for an sf_dir is named
+``<name>_<slug>_<md5(sf_dir)[:8]>`` (``stage_name``). The slug keeps the
+name readable; the digest keeps it injective, because the slug maps
+'/', '.' and '_' all to '_' (``/d/sf0.1`` and ``/d/sf0_1`` share one).
+``stage_dir`` places that name under one per-application root in the
+system temp dir, so concurrent sessions never race on a path.
+
+Cleanup. Each staging root is removed when the interpreter exits.
 """
 
 from __future__ import annotations
 
+import atexit
+import hashlib
+import os
+import shutil
+import tempfile
 from collections.abc import Callable
+from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 
-_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+T = TypeVar("T")
+
+_MEMO: dict[tuple[str, str, str], object] = {}
+
+# Staging roots this process created, removed at interpreter exit
+# (ADVICE r7: per-application staging dirs under gettempdir() used to
+# accumulate across runs). One rmtree per root; ignore_errors because
+# a concurrent reader losing the race at exit is harmless.
+_STAGING_ROOTS: set[str] = set()
+
+
+def memo(spark: SparkSession, sf_dir: str, name: str, build: Callable[[], T]) -> T:
+    """``build()`` once per (session, sf_dir, name); later calls return
+    the stored result as is."""
+    k = (spark.sparkContext.applicationId, sf_dir, name)
+    if k not in _MEMO:
+        _MEMO[k] = build()
+    return _MEMO[k]
 
 
 def shared(
     spark: SparkSession, sf_dir: str, key: str, build: Callable[[], DataFrame]
 ) -> DataFrame:
-    k = (spark.sparkContext.applicationId, sf_dir, key)
-    df = _CACHE.get(k)
-    if df is None:
-        df = build().localCheckpoint(eager=True)
-        _CACHE[k] = df
-    return df
+    return memo(spark, sf_dir, key, lambda: build().localCheckpoint(eager=True))
+
+
+def stage_name(sf_dir: str, name: str) -> str:
+    """The naming rule: ``<name>_<slug>_<md5(sf_dir)[:8]>``."""
+    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
+    return f"{name}_{slug}_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
+
+
+def stage_dir(spark: SparkSession, sf_dir: str, name: str) -> str:
+    """Path of the per-session staged store ``name`` for sf_dir. The
+    caller's writer creates it."""
+    root = os.path.join(
+        tempfile.gettempdir(),
+        f"dgdb_stage_{spark.sparkContext.applicationId}",
+    )
+    os.makedirs(root, exist_ok=True)
+    if root not in _STAGING_ROOTS:
+        _STAGING_ROOTS.add(root)
+        atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return os.path.join(root, stage_name(sf_dir, name))

@@ -22,13 +22,11 @@ logic is expressible verbatim in the DuckDB oracle.
 
 from __future__ import annotations
 
-import os
-from .session import staging_root
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import fixtures
+from .cache import memo, shared, stage_dir
 
 _REJECT_BAD_OP = "bad_op"
 _REJECT_EXISTS = "exists"
@@ -139,9 +137,6 @@ def ops_request_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SNAP_STAGED: dict[tuple[str, str], str] = {}
-
-
 def _snapshot_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Edge-level snapshot history of every graph the ops log writes:
     each VALID write (op 1 add / op 2 modify) carries a full
@@ -190,30 +185,17 @@ def _snapshot_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _snapshot_dir(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _SNAP_STAGED.get(key)
-    if hit is not None:
-        return hit
-    import hashlib
+    def build() -> str:
+        d = stage_dir(spark, sf_dir, "ops_graphsnap")
+        (
+            _snapshot_edges(spark, sf_dir)
+            .write.mode("overwrite")
+            .partitionBy("graph_id", "version")
+            .parquet(d)
+        )
+        return d
 
-    # md5 prefix keeps the mapping injective — the readable slug alone
-    # maps '/', '.', and '_' all to '_', so distinct sf_dirs could
-    # alias one staging directory and silently serve each other's data.
-    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    d = os.path.join(
-        staging_root(spark),
-        f"dgdb_ops_{spark.sparkContext.applicationId}_graphsnap_"
-        f"{slug}_{digest}",
-    )
-    (
-        _snapshot_edges(spark, sf_dir)
-        .write.mode("overwrite")
-        .partitionBy("graph_id", "version")
-        .parquet(d)
-    )
-    _SNAP_STAGED[key] = d
-    return d
+    return memo(spark, sf_dir, "ops_graphsnap", build)
 
 
 def graph_ops_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -463,9 +445,7 @@ def ops_concurrent_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan is not the deployment shape. The concurrency claim is tested
     on the UNCACHED serve (_concurrent_replay_serve) via
     _REPLAY_INTERVALS + statusTracker job groups."""
-    from .cache import shared as cache_shared
-
-    return cache_shared(
+    return shared(
         spark, sf_dir, "ops_concurrent_replay",
         lambda: _concurrent_replay_serve(spark, sf_dir),
     )
@@ -569,9 +549,7 @@ def ops_concurrent_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     setup item `concurrent_full_serve`); the concurrency claims are
     tested on the uncached serve via _FULL_INTERVALS/_FULL_APPLIED_AT
     + statusTracker job groups."""
-    from .cache import shared as cache_shared
-
-    return cache_shared(
+    return shared(
         spark, sf_dir, "ops_concurrent_full",
         lambda: _concurrent_full_serve(spark, sf_dir),
     )
@@ -580,7 +558,6 @@ def ops_concurrent_full(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _concurrent_full_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The threaded primary + two-secondary serve (see
     ops_concurrent_full)."""
-    import hashlib
     import threading
     import time
 
@@ -610,13 +587,7 @@ def _concurrent_full_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         for rs, _, g in reads
     }
 
-    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    store = os.path.join(
-        staging_root(spark),
-        f"dgdb_ops_{spark.sparkContext.applicationId}_concfull_"
-        f"{slug}_{digest}",
-    )
+    store = stage_dir(spark, sf_dir, "ops_concfull")
 
     def _edges_frame(gid: str, seq: int, edges) -> DataFrame:
         rows = [(gid, seq, s, d) for s, d in edges]

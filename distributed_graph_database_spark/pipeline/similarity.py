@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..cache import shared
+from ..cache import memo, shared
 from ..catalog import table
 
 N_QUERIES = 5       # pinned query set: lowest vec_ids
@@ -172,19 +172,13 @@ def _cells(spark: SparkSession, sf_dir: str, n_cells: int = IVF_CELLS) -> DataFr
     )
 
 
-# Per-(session, sf_dir) corpus-size cache backing the √N quantizer
+# Per-(session, sf_dir) corpus size backing the √N quantizer
 # scaling: one COUNT action per session/sf (the sanctioned 1-row-seed
 # class, like derive.default_start), reused by every scaled key.
-_CORPUS_N: dict[tuple[str, str], int] = {}
-
-
 def _corpus_n(spark: SparkSession, sf_dir: str) -> int:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _CORPUS_N.get(key)
-    if hit is None:
-        hit = table(spark, sf_dir, "embeddings").count()
-        _CORPUS_N[key] = hit
-    return hit
+    return memo(
+        spark, sf_dir, "corpus_n", lambda: table(spark, sf_dir, "embeddings").count()
+    )
 
 
 def scaled_cells(n: int, base: int) -> int:

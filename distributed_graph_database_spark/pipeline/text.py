@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..cache import shared
+from ..cache import memo, shared
 from ..catalog import table
 
 # BPE-ish pre-tokenizer: letter runs | digit runs | single punctuation.
@@ -859,13 +859,8 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # One loop, two consumers: text_bpe_train reads the merge table,
-# text_bpe_encode the final word-state dict. cache.shared hosts ONE
-# frame per key, so the pair memoizes here instead (same
-# application-id keying; both frames are checkpointed so neither key
-# re-runs the 8-round loop).
-_BPE_LOOP: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
+# text_bpe_encode the final word-state dict. Both frames are
+# checkpointed, so neither key re-runs the 8-round loop.
 def _bpe_loop(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -874,10 +869,10 @@ def _bpe_loop(
     (w, cnt, sym)). The state carries the word string through every
     round solely as text_bpe_encode's join key — the training algebra
     never reads it."""
-    k = (spark.sparkContext.applicationId, sf_dir)
-    hit = _BPE_LOOP.get(k)
-    if hit is not None:
-        return hit
+    return memo(spark, sf_dir, "bpe_loop", lambda: _bpe_run(spark, sf_dir))
+
+
+def _bpe_run(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     # Drop the empty token a whitespace-only document tokenizes to:
     # the engines genuinely disagree on ''-word symbol lists (Spark
     # split('', '') → [''], DuckDB's range-transform → []), and an
@@ -937,9 +932,7 @@ def _bpe_loop(
     out = rounds[0]
     for r in rounds[1:]:
         out = out.unionByName(r)
-    hit = (out.localCheckpoint(eager=True), state)
-    _BPE_LOOP[k] = hit
-    return hit
+    return out.localCheckpoint(eager=True), state
 
 
 def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:

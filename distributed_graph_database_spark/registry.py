@@ -17,6 +17,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from . import fixtures, ops, oracles, relational
+from .cache import memo, shared
 from .pipeline import clean as pl_clean
 from .pipeline import dedup as pl_dedup
 from .pipeline import events as pl_events
@@ -31,50 +32,40 @@ from .streaming import events_stream as streaming
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
-# Canonical derived-graph cache: the symmetrized edge table and start
+# Canonical derived-graph context: the symmetrized edge table and start
 # vertex are derived once per (session, sf_dir) and the edges persisted,
 # so consecutive graph queries (and the bench loop) don't re-scan and
 # re-distinct orders each call (VERDICT r1: registry.py re-derivation).
 # At 100 TB this is the materialized+bucketed canonical edge table;
-# here it's an in-memory persist keyed by Spark application id.
-_GRAPH_CACHE: dict[tuple[str, str], tuple[DataFrame, int]] = {}
-
-
-def _graph_ctx(spark: SparkSession, sf_dir: str):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _GRAPH_CACHE.get(key)
-    if hit is not None:
-        return hit
-    edges = derive.derived_edges_sym(spark, sf_dir).persist()
-    start = derive.default_start(spark, sf_dir)
-    _GRAPH_CACHE[key] = (edges, start)
-    return edges, start
+# here it's a lazy in-memory persist.
+def _graph_ctx(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
+    return memo(
+        spark,
+        sf_dir,
+        "graph_ctx",
+        lambda: (
+            derive.derived_edges_sym(spark, sf_dir).persist(),
+            derive.default_start(spark, sf_dir),
+        ),
+    )
 
 
 # BFS levels are a deterministic derived view of (edges, start); four
 # declared keys (levels/order/leaves/reachable) consume them, so the
 # iterative loop runs once per (session, sf_dir) and its checkpointed
-# result is shared — the materialized-traversal analogue of the edge
-# cache above.
-_BFS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# result is shared.
 def _bfs_levels_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _BFS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    edges, start = _graph_ctx(spark, sf_dir)
-    # validate=True: the reference's R10 bounds check runs at every
-    # query entry (client.c:36-49 semantics) — an absent start vertex
-    # raises the reference's error instead of silently returning
-    # {(start, 0)}.
-    lv = traversal.bfs_levels(
-        spark, edges, start, cache_edges=False, validate=True
-    )
-    lv = lv.localCheckpoint(eager=True)
-    _BFS_CACHE[key] = lv
-    return lv
+    def build() -> DataFrame:
+        edges, start = _graph_ctx(spark, sf_dir)
+        # validate=True: the reference's R10 bounds check runs at every
+        # query entry (client.c:36-49 semantics) — an absent start vertex
+        # raises the reference's error instead of silently returning
+        # {(start, 0)}.
+        return traversal.bfs_levels(
+            spark, edges, start, cache_edges=False, validate=True
+        )
+
+    return shared(spark, sf_dir, "bfs_levels", build)
 
 
 def q_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -137,13 +128,11 @@ def q_graph_diameter(spark: SparkSession, sf_dir: str) -> DataFrame:
     derive.default_start."""
     from pyspark.sql import functions as F
 
-    from distributed_graph_database_spark.cache import shared as _shared
-
     edges, _ = _graph_ctx(spark, sf_dir)
     lv = _bfs_levels_cached(spark, sf_dir)
     far = lv.orderBy(F.col("level").desc(), F.col("vid").desc()).limit(1).collect()
     far_vid = int(far[0].vid)
-    lv2 = _shared(
+    lv2 = shared(
         spark,
         sf_dir,
         f"diameter_sweep2_{far_vid}",

@@ -16,33 +16,6 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = "32"
 
-# Staging roots this process created, removed at interpreter exit
-# (ADVICE r7: per-application staging dirs under gettempdir() used to
-# accumulate across runs). One rmtree per root; ignore_errors because
-# a concurrent reader losing the race at exit is harmless.
-_STAGING_ROOTS: set[str] = set()
-
-
-def staging_root(spark: SparkSession) -> str:
-    """Per-application scratch root for every staged store the engine
-    writes (format roundtrips, snapshot/vacuum/z-order copies,
-    streaming sources/checkpoints). Keyed by applicationId so
-    concurrent sessions never race on a path, and registered for
-    removal at exit so runs don't leak directories."""
-    import atexit
-    import shutil
-    import tempfile
-
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"dgdb_stage_{spark.sparkContext.applicationId}",
-    )
-    os.makedirs(root, exist_ok=True)
-    if root not in _STAGING_ROOTS:
-        _STAGING_ROOTS.add(root)
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-    return root
-
 
 def get_spark(app_name: str = "distributed-graph-database-spark") -> SparkSession:
     """Build (or reuse) the engine's SparkSession.

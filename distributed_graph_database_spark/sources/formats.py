@@ -21,11 +21,11 @@ maxRecordsPerFile / target-size math instead of fixed counts.
 from __future__ import annotations
 
 import os
-from ..session import staging_root
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import memo, stage_dir
 from ..cache import shared as cache_shared
 from ..catalog import table
 
@@ -34,40 +34,29 @@ DOC_SCHEMA = "doc_id bigint, text string, lang string, source string, n_chars bi
 COMPACT_FILES_BEFORE = 16
 COMPACT_FILES_AFTER = 2
 
-_STAGED: dict[tuple[str, str, str], str] = {}
-
 
 def _staging_dir(spark: SparkSession, sf_dir: str, fmt: str) -> str:
     """Write documents once per (session, sf, format); return the dir."""
-    key = (spark.sparkContext.applicationId, sf_dir, fmt)
-    hit = _STAGED.get(key)
-    if hit is not None:
-        return hit
-    # Path carries the application id: staging dirs are per-session,
-    # so a concurrent test/bench/driver pair can never race on one
-    # directory (overwrite-in-place of a shared path is not atomic).
-    d = os.path.join(
-        staging_root(spark),
-        f"dgdb_fmt_{spark.sparkContext.applicationId}_{fmt}_"
-        + "".join(c if c.isalnum() else "_" for c in sf_dir),
-    )
-    docs = table(spark, sf_dir, "documents")
-    if fmt == "jsonl":
-        docs.write.mode("overwrite").json(d)
-    elif fmt == "csv":
-        # quote-all so embedded commas/quotes in text survive; header
-        # carries column names for schema-on-read engines.
-        docs.write.mode("overwrite").option("header", True).option(
-            "quoteAll", True
-        ).csv(d)
-    elif fmt == "orc":
-        docs.write.mode("overwrite").orc(d)
-    elif fmt == "compact":
-        docs.repartition(COMPACT_FILES_BEFORE).write.mode("overwrite").parquet(d)
-    else:
-        raise ValueError(fmt)
-    _STAGED[key] = d
-    return d
+    def build() -> str:
+        d = stage_dir(spark, sf_dir, f"fmt_{fmt}")
+        docs = table(spark, sf_dir, "documents")
+        if fmt == "jsonl":
+            docs.write.mode("overwrite").json(d)
+        elif fmt == "csv":
+            # quote-all so embedded commas/quotes in text survive; header
+            # carries column names for schema-on-read engines.
+            docs.write.mode("overwrite").option("header", True).option(
+                "quoteAll", True
+            ).csv(d)
+        elif fmt == "orc":
+            docs.write.mode("overwrite").orc(d)
+        elif fmt == "compact":
+            docs.repartition(COMPACT_FILES_BEFORE).write.mode("overwrite").parquet(d)
+        else:
+            raise ValueError(fmt)
+        return d
+
+    return memo(spark, sf_dir, f"fmt_{fmt}", build)
 
 
 def _roundtrip_agg(df: DataFrame) -> DataFrame:
@@ -162,20 +151,14 @@ PRUNE_LANG = "en"
 
 
 def _partitioned_dir(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir, "bylang")
-    hit = _STAGED.get(key)
-    if hit is not None:
-        return hit
-    d = os.path.join(
-        staging_root(spark),
-        f"dgdb_fmt_{spark.sparkContext.applicationId}_bylang_"
-        + "".join(c if c.isalnum() else "_" for c in sf_dir),
-    )
-    table(spark, sf_dir, "documents").write.mode("overwrite").partitionBy(
-        "lang"
-    ).parquet(d)
-    _STAGED[key] = d
-    return d
+    def build() -> str:
+        d = stage_dir(spark, sf_dir, "fmt_bylang")
+        table(spark, sf_dir, "documents").write.mode("overwrite").partitionBy(
+            "lang"
+        ).parquet(d)
+        return d
+
+    return memo(spark, sf_dir, "fmt_bylang", build)
 
 
 def store_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -214,29 +197,23 @@ CORRUPT_REM = 3
 
 
 def _corrupt_jsonl_dir(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir, "jsonl_corrupt")
-    hit = _STAGED.get(key)
-    if hit is not None:
-        return hit
-    d = os.path.join(
-        staging_root(spark),
-        f"dgdb_fmt_{spark.sparkContext.applicationId}_jsonlcorrupt_"
-        + "".join(c if c.isalnum() else "_" for c in sf_dir),
-    )
-    docs = table(spark, sf_dir, "documents")
-    line = F.to_json(F.struct("doc_id", "text", "lang", "source", "n_chars"))
-    is_bad = F.col("doc_id") % CORRUPT_MOD == CORRUPT_REM
-    (
-        docs.select(
-            F.when(is_bad, F.concat(F.lit("CORRUPT"), line))
-            .otherwise(line)
-            .alias("value")
+    def build() -> str:
+        d = stage_dir(spark, sf_dir, "fmt_jsonl_corrupt")
+        docs = table(spark, sf_dir, "documents")
+        line = F.to_json(F.struct("doc_id", "text", "lang", "source", "n_chars"))
+        is_bad = F.col("doc_id") % CORRUPT_MOD == CORRUPT_REM
+        (
+            docs.select(
+                F.when(is_bad, F.concat(F.lit("CORRUPT"), line))
+                .otherwise(line)
+                .alias("value")
+            )
+            .write.mode("overwrite")
+            .text(d)
         )
-        .write.mode("overwrite")
-        .text(d)
-    )
-    _STAGED[key] = d
-    return d
+        return d
+
+    return memo(spark, sf_dir, "fmt_jsonl_corrupt", build)
 
 
 def source_jsonl_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -384,27 +361,21 @@ def _versioned_dir(spark: SparkSession, sf_dir: str) -> str:
     """Version-partitioned snapshot store: v=1 is the base documents
     table, v=2 the CDC-merged state — two immutable snapshots in one
     parquet dir, partitioned by version."""
-    key = (spark.sparkContext.applicationId, sf_dir, "versions")
-    hit = _STAGED.get(key)
-    if hit is not None:
-        return hit
-    d = os.path.join(
-        staging_root(spark),
-        f"dgdb_fmt_{spark.sparkContext.applicationId}_versions_"
-        + "".join(c if c.isalnum() else "_" for c in sf_dir),
-    )
-    base = table(spark, sf_dir, "documents").select(
-        "doc_id", "text", "lang", "source", "n_chars"
-    )
-    (
-        base.withColumn("v", F.lit(1))
-        .unionByName(_merged_docs(spark, sf_dir).withColumn("v", F.lit(2)))
-        .write.mode("overwrite")
-        .partitionBy("v")
-        .parquet(d)
-    )
-    _STAGED[key] = d
-    return d
+    def build() -> str:
+        d = stage_dir(spark, sf_dir, "fmt_versions")
+        base = table(spark, sf_dir, "documents").select(
+            "doc_id", "text", "lang", "source", "n_chars"
+        )
+        (
+            base.withColumn("v", F.lit(1))
+            .unionByName(_merged_docs(spark, sf_dir).withColumn("v", F.lit(2)))
+            .write.mode("overwrite")
+            .partitionBy("v")
+            .parquet(d)
+        )
+        return d
+
+    return memo(spark, sf_dir, "fmt_versions", build)
 
 
 def store_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -475,24 +446,18 @@ def _evolve_dirs(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     (session, sf): batch 1 = even doc_ids at the original 5-column
     schema; batch 2 = odd doc_ids with an added n_tokens column (the
     additive evolution every long-lived ingest accumulates)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "evolve")
-    hit = _STAGED.get(key)
-    if hit is not None:
-        return hit, hit + "_v2"
-    d = os.path.join(
-        staging_root(spark),
-        f"dgdb_fmt_{spark.sparkContext.applicationId}_evolve_"
-        + "".join(c if c.isalnum() else "_" for c in sf_dir),
-    )
-    docs = table(spark, sf_dir, "documents").select(
-        "doc_id", "text", "lang", "source", "n_chars"
-    )
-    docs.filter(F.col("doc_id") % 2 == 0).write.mode("overwrite").parquet(d)
-    docs.filter(F.col("doc_id") % 2 == 1).withColumn(
-        "n_tokens", F.size(F.split(F.trim(F.col("text")), r"\s+"))
-    ).write.mode("overwrite").parquet(d + "_v2")
-    _STAGED[key] = d
-    return d, d + "_v2"
+    def build() -> tuple[str, str]:
+        d = stage_dir(spark, sf_dir, "fmt_evolve")
+        docs = table(spark, sf_dir, "documents").select(
+            "doc_id", "text", "lang", "source", "n_chars"
+        )
+        docs.filter(F.col("doc_id") % 2 == 0).write.mode("overwrite").parquet(d)
+        docs.filter(F.col("doc_id") % 2 == 1).withColumn(
+            "n_tokens", F.size(F.split(F.trim(F.col("text")), r"\s+"))
+        ).write.mode("overwrite").parquet(d + "_v2")
+        return d, d + "_v2"
+
+    return memo(spark, sf_dir, "fmt_evolve", build)
 
 
 def store_schema_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -540,24 +505,18 @@ SORTED_TO = "1996-04-01"
 
 
 def _sorted_dir(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir, "bydate")
-    hit = _STAGED.get(key)
-    if hit is not None:
-        return hit
-    d = os.path.join(
-        staging_root(spark),
-        f"dgdb_fmt_{spark.sparkContext.applicationId}_bydate_"
-        + "".join(c if c.isalnum() else "_" for c in sf_dir),
-    )
-    (
-        table(spark, sf_dir, "orders")
-        .repartitionByRange(SORTED_RANGES, "o_orderdate")
-        .sortWithinPartitions("o_orderdate")
-        .write.mode("overwrite")
-        .parquet(d)
-    )
-    _STAGED[key] = d
-    return d
+    def build() -> str:
+        d = stage_dir(spark, sf_dir, "fmt_bydate")
+        (
+            table(spark, sf_dir, "orders")
+            .repartitionByRange(SORTED_RANGES, "o_orderdate")
+            .sortWithinPartitions("o_orderdate")
+            .write.mode("overwrite")
+            .parquet(d)
+        )
+        return d
+
+    return memo(spark, sf_dir, "fmt_bydate", build)
 
 
 def store_sorted_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -620,31 +579,25 @@ def _zvalue(x, y):
 
 
 def _zorder_dir(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir, "zorder")
-    hit = _STAGED.get(key)
-    if hit is not None:
-        return hit
-    d = os.path.join(
-        staging_root(spark),
-        f"dgdb_fmt_{spark.sparkContext.applicationId}_zorder_"
-        + "".join(c if c.isalnum() else "_" for c in sf_dir),
-    )
-    o = table(spark, sf_dir, "orders").withColumn(
-        "_z",
-        _zvalue(
-            F.col("o_custkey"),
-            F.datediff(F.col("o_orderdate"), F.lit(ZORDER_EPOCH)).cast("bigint"),
-        ),
-    )
-    (
-        o.repartitionByRange(ZORDER_FILES, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode("overwrite")
-        .parquet(d)
-    )
-    _STAGED[key] = d
-    return d
+    def build() -> str:
+        d = stage_dir(spark, sf_dir, "fmt_zorder")
+        o = table(spark, sf_dir, "orders").withColumn(
+            "_z",
+            _zvalue(
+                F.col("o_custkey"),
+                F.datediff(F.col("o_orderdate"), F.lit(ZORDER_EPOCH)).cast("bigint"),
+            ),
+        )
+        (
+            o.repartitionByRange(ZORDER_FILES, "_z")
+            .sortWithinPartitions("_z")
+            .drop("_z")
+            .write.mode("overwrite")
+            .parquet(d)
+        )
+        return d
+
+    return memo(spark, sf_dir, "fmt_zorder", build)
 
 
 def store_zorder_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -701,29 +654,23 @@ BLOOM_KEYS = (7, 121, 733, 1450)
 
 
 def _bloom_dir(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir, "bloom")
-    hit = _STAGED.get(key)
-    if hit is not None:
-        return hit
-    d = os.path.join(
-        staging_root(spark),
-        f"dgdb_fmt_{spark.sparkContext.applicationId}_bloom_"
-        + "".join(c if c.isalnum() else "_" for c in sf_dir),
-    )
-    (
-        table(spark, sf_dir, "orders")
-        .coalesce(BLOOM_FILES)
-        .write.mode("overwrite")
-        .option("parquet.enable.dictionary#o_custkey", "false")
-        .option("parquet.bloom.filter.enabled#o_custkey", "true")
-        .option(
-            "parquet.bloom.filter.expected.ndv#o_custkey",
-            str(BLOOM_NDV_HINT),
+    def build() -> str:
+        d = stage_dir(spark, sf_dir, "fmt_bloom")
+        (
+            table(spark, sf_dir, "orders")
+            .coalesce(BLOOM_FILES)
+            .write.mode("overwrite")
+            .option("parquet.enable.dictionary#o_custkey", "false")
+            .option("parquet.bloom.filter.enabled#o_custkey", "true")
+            .option(
+                "parquet.bloom.filter.expected.ndv#o_custkey",
+                str(BLOOM_NDV_HINT),
+            )
+            .parquet(d)
         )
-        .parquet(d)
-    )
-    _STAGED[key] = d
-    return d
+        return d
+
+    return memo(spark, sf_dir, "fmt_bloom", build)
 
 
 def store_bloom_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1193,9 +1140,7 @@ def store_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     and a vacuum on the shared store would silently break it."""
     import shutil as _sh
 
-    key = (spark.sparkContext.applicationId, sf_dir, "vacuum")
-    d = _STAGED.get(key)
-    if d is None:
+    def build() -> str:
         src = _versioned_dir(spark, sf_dir)
         d = src + "_vacuum"
         if os.path.exists(d):
@@ -1208,7 +1153,9 @@ def store_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for v in versions[:-VACUUM_KEEP]:
             _sh.rmtree(os.path.join(d, f"v={v}"))
-        _STAGED[key] = d
+        return d
+
+    d = memo(spark, sf_dir, "fmt_vacuum", build)
     return (
         spark.read.parquet(d)
         .groupBy("v", "source")

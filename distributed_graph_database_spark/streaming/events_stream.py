@@ -20,13 +20,13 @@ import itertools
 import os
 import shutil
 from collections import Counter
-from ..session import staging_root
 from contextlib import contextmanager
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import memo, stage_dir
 from ..pipeline.events import (
     DEDUP_UNIT,
     ORACLE_EVENTS_TOPK_WINDOW,
@@ -34,8 +34,6 @@ from ..pipeline.events import (
 )
 
 WATERMARK = "2 hours"
-
-_SCHEMA_CACHE: dict[tuple[str, str], object] = {}
 
 
 def _events_stream(
@@ -62,11 +60,9 @@ def _events_stream(
     # pure first-use metadata, cached per (session, dir) like the
     # staging itself. (The staged dir is written once per session and
     # never mutated, so the cached schema cannot go stale.)
-    skey = (spark.sparkContext.applicationId, src_dir)
-    schema = _SCHEMA_CACHE.get(skey)
-    if schema is None:
-        schema = spark.read.parquet(src_dir).schema
-        _SCHEMA_CACHE[skey] = schema
+    schema = memo(
+        spark, src_dir, "stream_schema", lambda: spark.read.parquet(src_dir).schema
+    )
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -256,7 +252,6 @@ def burst_dedup_stream(spark: SparkSession, src_dir: str) -> DataFrame:
 
 
 _STREAM_SEQ = itertools.count()
-_SRC_STAGED: dict[tuple[str, str], str] = {}
 
 
 ATTRIB_WINDOW = "30 minutes"  # view→click attribution bound (batch twin)
@@ -320,26 +315,20 @@ def _events_src_dir(spark: SparkSession, sf_dir: str) -> str:
     late rows across batches (the semantics test_watermark_drops_
     late_rows pins) and diverge from the full-table batch oracle;
     the assert below makes that assumption fail loudly."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _SRC_STAGED.get(key)
-    if hit is not None:
-        return hit
-    d = os.path.join(
-        staging_root(spark),
-        f"dgdb_stream_src_{spark.sparkContext.applicationId}_"
-        + "".join(c if c.isalnum() else "_" for c in sf_dir),
-    )
-    os.makedirs(d, exist_ok=True)
-    dst = os.path.join(d, "events.parquet")
-    if not os.path.exists(dst):
-        shutil.copy(os.path.join(sf_dir, "events.parquet"), dst)
-    staged = [f for f in os.listdir(d) if not f.startswith((".", "_"))]
-    assert staged == ["events.parquet"], (
-        f"stream staging dir {d} must hold exactly one file for the "
-        f"one-batch exact-oracle contract; found {staged}"
-    )
-    _SRC_STAGED[key] = d
-    return d
+    def build() -> str:
+        d = stage_dir(spark, sf_dir, "stream_src")
+        os.makedirs(d, exist_ok=True)
+        dst = os.path.join(d, "events.parquet")
+        if not os.path.exists(dst):
+            shutil.copy(os.path.join(sf_dir, "events.parquet"), dst)
+        staged = [f for f in os.listdir(d) if not f.startswith((".", "_"))]
+        assert staged == ["events.parquet"], (
+            f"stream staging dir {d} must hold exactly one file for the "
+            f"one-batch exact-oracle contract; found {staged}"
+        )
+        return d
+
+    return memo(spark, sf_dir, "stream_src", build)
 
 
 def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -624,11 +613,7 @@ def stream_sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     demonstrates that overwrite mode); the checkpoint carries the
     source offsets so a new run resumes, not replays."""
     src = _events_src_dir(spark, sf_dir)
-    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    base = os.path.join(
-        staging_root(spark),
-        f"dgdb_stream_sink_{spark.sparkContext.applicationId}_{slug}",
-    )
+    base = stage_dir(spark, sf_dir, "stream_sink")
     out_dir, ckpt = base + "_data", base + "_ckpt"
 
     def commit_batch(bdf: DataFrame, batch_id: int) -> None:
@@ -705,8 +690,6 @@ LATE_LO = "2024-01-02 00:00:00"
 LATE_HI = "2024-01-02 06:00:00"
 LATE_SPLIT = "2024-01-15 00:00:00"
 
-_LATE_STAGED: dict[tuple[str, str], str] = {}
-
 
 def _late_src_dir(spark: SparkSession, sf_dir: str) -> str:
     """Stage events as a THREE-file arrival timeline (file order =
@@ -716,40 +699,34 @@ def _late_src_dir(spark: SparkSession, sf_dir: str) -> str:
     event time is now far behind the watermark. This is the on-disk
     replay of an out-of-order transport; at scale the 'files' are
     kafka offsets and the lateness is delivery lag."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _LATE_STAGED.get(key)
-    if hit is not None:
-        return hit
     import glob
 
     from ..catalog import table
 
-    d = os.path.join(
-        staging_root(spark),
-        f"dgdb_stream_late_{spark.sparkContext.applicationId}_"
-        + "".join(c if c.isalnum() else "_" for c in sf_dir),
-    )
-    os.makedirs(d, exist_ok=True)
-    ev = table(spark, sf_dir, "events")
-    is_late = (F.col("ts") >= F.lit(LATE_LO).cast("timestamp")) & (
-        F.col("ts") < F.lit(LATE_HI).cast("timestamp")
-    )
-    parts = [
-        ("0_early", ev.filter((F.col("ts") < F.lit(LATE_SPLIT).cast("timestamp")) & ~is_late)),
-        ("1_drivers", ev.filter(F.col("ts") >= F.lit(LATE_SPLIT).cast("timestamp"))),
-        ("2_late", ev.filter(is_late)),
-    ]
-    for i, (name, df) in enumerate(parts):
-        tmp = os.path.join(d, f"_tmp_{name}")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        dst = os.path.join(d, f"{name}.parquet")
-        os.replace(part, dst)
-        shutil.rmtree(tmp)
-        mtime = 1_000_000_000 + 100 * i
-        os.utime(dst, (mtime, mtime))
-    _LATE_STAGED[key] = d
-    return d
+    def build() -> str:
+        d = stage_dir(spark, sf_dir, "stream_late")
+        os.makedirs(d, exist_ok=True)
+        ev = table(spark, sf_dir, "events")
+        is_late = (F.col("ts") >= F.lit(LATE_LO).cast("timestamp")) & (
+            F.col("ts") < F.lit(LATE_HI).cast("timestamp")
+        )
+        parts = [
+            ("0_early", ev.filter((F.col("ts") < F.lit(LATE_SPLIT).cast("timestamp")) & ~is_late)),
+            ("1_drivers", ev.filter(F.col("ts") >= F.lit(LATE_SPLIT).cast("timestamp"))),
+            ("2_late", ev.filter(is_late)),
+        ]
+        for i, (name, df) in enumerate(parts):
+            tmp = os.path.join(d, f"_tmp_{name}")
+            df.coalesce(1).write.mode("overwrite").parquet(tmp)
+            part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
+            dst = os.path.join(d, f"{name}.parquet")
+            os.replace(part, dst)
+            shutil.rmtree(tmp)
+            mtime = 1_000_000_000 + 100 * i
+            os.utime(dst, (mtime, mtime))
+        return d
+
+    return memo(spark, sf_dir, "stream_late", build)
 
 
 def stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -834,8 +811,6 @@ GROUP BY 1
 
 # --- streaming CDC materializer ----------------------------------------------
 
-_CDC_STREAM_STAGED: dict[tuple[str, str], str] = {}
-
 
 def _cdc_version_frames(spark: SparkSession, sf_dir: str):
     """The shared CDC log derivation (sources/formats.py
@@ -860,19 +835,15 @@ def _cdc_stream_snap_dir(spark: SparkSession, sf_dir: str) -> str:
     deterministic pure function of (v(i−1), batch i) — re-running a
     crashed batch rewrites identical bytes; max(struct) is idempotent
     on replayed rows because seqs are unique per key."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _CDC_STREAM_STAGED.get(key)
-    if hit is not None:
-        return hit
+    return memo(spark, sf_dir, "stream_cdc", lambda: _cdc_stream_drain(spark, sf_dir))
+
+
+def _cdc_stream_drain(spark: SparkSession, sf_dir: str) -> str:
     import glob
 
     from ..sources.formats import cdc_compact_frame
 
-    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    base = os.path.join(
-        staging_root(spark),
-        f"dgdb_stream_cdc_{spark.sparkContext.applicationId}_{slug}",
-    )
+    base = stage_dir(spark, sf_dir, "stream_cdc")
     src = os.path.join(base, "log")
     os.makedirs(src, exist_ok=True)
     for i, vf in enumerate(_cdc_version_frames(spark, sf_dir)):
@@ -936,7 +907,6 @@ def _cdc_stream_snap_dir(spark: SparkSession, sf_dir: str) -> str:
         q.awaitTermination()
     if state["prev"] is None:
         raise RuntimeError("CDC stream drained zero batches")
-    _CDC_STREAM_STAGED[key] = state["prev"]
     return state["prev"]
 
 

@@ -323,6 +323,7 @@ def test_stream_cdc_resume_merges_against_last_committed_snapshot(
     drop the session memo, delete snapshots and checkpoint progress
     beyond batch 1 — and re-enter. The resumed drain must reproduce
     the exact final snapshot of the uninterrupted run."""
+    from distributed_graph_database_spark import cache
     from distributed_graph_database_spark.streaming import events_stream as es
 
     last = es._cdc_stream_snap_dir(spark, sf_oracle)
@@ -333,7 +334,7 @@ def test_stream_cdc_resume_merges_against_last_committed_snapshot(
     }
 
     keep_upto = 1  # crash point: batches 0..1 committed, 2..3 pending
-    es._CDC_STREAM_STAGED.pop((spark.sparkContext.applicationId, sf_oracle))
+    cache._MEMO.pop((spark.sparkContext.applicationId, sf_oracle, "stream_cdc"))
     for d in os.listdir(base):
         if d.startswith("snap_") and int(d.split("_")[1]) > keep_upto:
             shutil.rmtree(os.path.join(base, d))
