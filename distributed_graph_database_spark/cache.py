@@ -12,6 +12,14 @@ count, a schema, a tuple — and never changes it. ``shared`` is
 ``memo`` of ``build().localCheckpoint(eager=True)``, the common choice
 for intermediates several declared keys compose over.
 
+Live view. Inside ``with live_plans():`` ``shared`` returns ``build()``
+itself — neither checkpointed nor memoized — so a declared key's
+DataFrame carries its full plan instead of a checkpoint scan; the plan
+audit (tests/test_plan_hygiene.py) and the explain tools read keys this
+way. The flag is a ContextVar, so it holds only in the calling thread.
+A ``memo`` miss runs its builder with the view off, so what ``_MEMO``
+stores never depends on which view first asked for it.
+
 Naming. Everything staged for an sf_dir is named
 ``<name>_<slug>_<md5(sf_dir)[:8]>`` (``stage_name``). The slug keeps the
 name readable; the digest keeps it injective, because the slug maps
@@ -25,11 +33,13 @@ Cleanup. Each staging root is removed when the interpreter exits.
 from __future__ import annotations
 
 import atexit
+import contextvars
 import hashlib
 import os
 import shutil
 import tempfile
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
@@ -37,6 +47,10 @@ from pyspark.sql import DataFrame, SparkSession
 T = TypeVar("T")
 
 _MEMO: dict[tuple[str, str, str], object] = {}
+
+_LIVE: contextvars.ContextVar[bool] = contextvars.ContextVar(
+    "live_plans", default=False
+)
 
 # Staging roots this process created, removed at interpreter exit
 # (ADVICE r7: per-application staging dirs under gettempdir() used to
@@ -50,14 +64,31 @@ def memo(spark: SparkSession, sf_dir: str, name: str, build: Callable[[], T]) ->
     the stored result as is."""
     k = (spark.sparkContext.applicationId, sf_dir, name)
     if k not in _MEMO:
-        _MEMO[k] = build()
+        token = _LIVE.set(False)
+        try:
+            _MEMO[k] = build()
+        finally:
+            _LIVE.reset(token)
     return _MEMO[k]
 
 
 def shared(
     spark: SparkSession, sf_dir: str, key: str, build: Callable[[], DataFrame]
 ) -> DataFrame:
+    if _LIVE.get():
+        return build()
     return memo(spark, sf_dir, key, lambda: build().localCheckpoint(eager=True))
+
+
+@contextmanager
+def live_plans() -> Iterator[None]:
+    """Within the block, this thread's ``shared`` calls return their
+    live builds (see the module docstring)."""
+    token = _LIVE.set(True)
+    try:
+        yield
+    finally:
+        _LIVE.reset(token)
 
 
 def stage_name(sf_dir: str, name: str) -> str:

@@ -181,15 +181,23 @@ def _tri_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     declared keys are views over it (triangles = count, jaccard =
     per-edge membership, clustering_coef = per-vertex membership), so
     the O(m^1.5) enumeration runs once per (session, sf) — at 100 TB
-    this is the materialized triangle table every motif query reads."""
+    this is the materialized triangle table every motif query reads.
+    The oriented edge table it enumerates over is shared too, so under
+    cache.live_plans the whole copurchase → orientation → enumeration
+    chain stays in the plan."""
     return shared(
         spark,
         sf_dir,
         "graph_tri",
         lambda: _closed_triangles(
-            _oriented_edges(
-                _copurchase_edges(spark, sf_dir).select("p1", "p2")
-            ).localCheckpoint(eager=True)
+            shared(
+                spark,
+                sf_dir,
+                "graph_oriented",
+                lambda: _oriented_edges(
+                    _copurchase_edges(spark, sf_dir).select("p1", "p2")
+                ),
+            )
         ),
     )
 
@@ -198,15 +206,6 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact triangle count of the co-purchase graph → one row
     (n_triangles), counted off the shared closed-triangle table."""
     return _tri_cached(spark, sf_dir).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_triangles")
-    )
-
-
-def _triangles_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Uncached plan view (registry.PLAN_QUERIES): the full
-    enumeration shape the cached entry hides behind a checkpoint."""
-    o = _oriented_edges(_copurchase_impl(spark, sf_dir).select("p1", "p2"))
-    return _closed_triangles(o).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_triangles")
     )
 
@@ -1385,15 +1384,8 @@ def graph_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     Never the naive adjacency-list self-join, whose Σ deg(mid)² term
     dies on hub vertices. |N(a)∪N(b)| = d(a)+d(b)−common (a and b are
     each in the union via the edge itself)."""
-    return _jaccard_from(
-        _tri_cached(spark, sf_dir),
-        _copurchase_edges(spark, sf_dir).select("p1", "p2"),
-    )
-
-
-def _jaccard_from(tri: DataFrame, e: DataFrame) -> DataFrame:
-    """graph_jaccard's tail over any (tri, e) pair — split out so the
-    uncached plan view can feed the full enumeration chain."""
+    tri = _tri_cached(spark, sf_dir)
+    e = _copurchase_edges(spark, sf_dir).select("p1", "p2")
     deg = _degrees(e)
     da = deg.select(F.col("v").alias("p1"), F.col("d").alias("d1"))
     db = deg.select(F.col("v").alias("p2"), F.col("d").alias("d2"))
@@ -1582,15 +1574,8 @@ def graph_clustering_coef(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts — never a per-vertex neighborhood self-join. Exact across
     engines: t and d are integers, and 2t/(d(d−1)) is one identical
     double op on identical integers before the 6dp round."""
-    return _clustering_from(
-        _tri_cached(spark, sf_dir),
-        _copurchase_edges(spark, sf_dir).select("p1", "p2"),
-    )
-
-
-def _clustering_from(tri: DataFrame, e: DataFrame) -> DataFrame:
-    """graph_clustering_coef's tail over any (tri, e) pair."""
-    deg = _degrees(e)
+    tri = _tri_cached(spark, sf_dir)
+    deg = _degrees(_copurchase_edges(spark, sf_dir).select("p1", "p2"))
     tri_verts = (
         tri.select(F.col("a").alias("v"))
         .unionAll(tri.select(F.col("b").alias("v")))
@@ -2629,15 +2614,3 @@ ORACLE_SQL = {
     "graph_ktruss": _oracle_ktruss(),
     "graph_scc": _ORACLE_GRAPH_SCC,
 }
-
-
-def _jaccard_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Uncached plan view (registry.PLAN_QUERIES)."""
-    e = _copurchase_impl(spark, sf_dir).select("p1", "p2")
-    return _jaccard_from(_closed_triangles(_oriented_edges(e)), e)
-
-
-def _clustering_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Uncached plan view (registry.PLAN_QUERIES)."""
-    e = _copurchase_impl(spark, sf_dir).select("p1", "p2")
-    return _clustering_from(_closed_triangles(_oriented_edges(e)), e)

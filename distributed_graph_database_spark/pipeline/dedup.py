@@ -399,21 +399,10 @@ def dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch-quality regression), NOT a cross-engine divergence (the
     ql_approx_quantiles triage note). The raw pair list stays available
     as `dedup_near_pairs` (rows-only by nature: seeded xxhash64)."""
-    return _near_audit(
-        dedup_near_pairs(spark, sf_dir), _near_truth_cached(spark, sf_dir)
+    f = dedup_near_pairs(spark, sf_dir).select(
+        "doc_a", "doc_b", F.lit(1).alias("hit")
     )
-
-
-def _dedup_near_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Uncached plan twin of `dedup_near` for machine plan assertions
-    (registry.PLAN_QUERIES): both legs built from the live plans."""
-    found = _dedup_near(spark, sf_dir)
-    return _near_audit(found, _near_truth(spark, sf_dir, extra_cand=found))
-
-
-def _near_audit(found: DataFrame, truth: DataFrame) -> DataFrame:
-    f = found.select("doc_a", "doc_b", F.lit(1).alias("hit"))
-    t = truth.select("doc_a", "doc_b")
+    t = _near_truth_cached(spark, sf_dir).select("doc_a", "doc_b")
     stats = t.join(f, ["doc_a", "doc_b"], "left").agg(
         F.count(F.lit(1)).alias("n_true"),
         # SUM over zero rows is NULL → coalesce so an empty truth set
@@ -768,8 +757,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta shingles vs the stored df-capped index, |base|²-free, the
     shape a production ingest runs when no corpus-wide audit table
     exists — is kept verbatim as `_dedup_incremental_delta`
-    (registry.PLAN_QUERIES twin, equality-law-tested in
-    tests/test_r13_ops.py)."""
+    (equality-law-tested in tests/test_r13_ops.py)."""
     t = _near_truth_cached(spark, sf_dir).select("doc_a", "doc_b")
     sym = t.unionByName(
         t.select(
@@ -824,7 +812,7 @@ def _incr_rel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _incr_report(rel: DataFrame, st: DataFrame) -> DataFrame:
     """Per-source (n_delta, n_dup_base, n_dup_delta, n_kept) tail
-    shared by the declared key and the delta-sized plan twin."""
+    shared by the declared key and the delta-sized generator."""
     delta = rel.filter(~F.col("is_base")).select(
         F.col("doc_id").alias("doc_b"), "source"
     )
@@ -850,7 +838,7 @@ def _incr_report(rel: DataFrame, st: DataFrame) -> DataFrame:
 
 def _dedup_incremental_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The delta-sized candidate generator (the original declared
-    shape, kept as the production-ingest plan twin): candidates join
+    shape, kept as the production-ingest form): candidates join
     the DELTA's shingles against the stored df-capped index
     (delta-sized × cap work, never |base|²), then the same uncapped
     exact verify. Base is scanned once; no base×base pairs ever

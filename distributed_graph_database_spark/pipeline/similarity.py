@@ -496,21 +496,10 @@ def corpus_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny label domain. Keeping survivors per SOURCE group is the
     report a curation pipeline acts on (how much of each slice
     semantic dedup removes)."""
-    return _semdedup_from_pairs(spark, sf_dir, dedup_embed(spark, sf_dir))
-
-
-def _corpus_semdedup_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Uncached plan twin (registry.PLAN_QUERIES): the pair leg built
-    from the live dedup_embed plan."""
-    return _semdedup_from_pairs(spark, sf_dir, _dedup_embed(spark, sf_dir))
-
-
-def _semdedup_from_pairs(
-    spark: SparkSession, sf_dir: str, pairs: DataFrame
-) -> DataFrame:
     from ..graph import traversal
     from ..graph.derive import symmetrize
 
+    pairs = dedup_embed(spark, sf_dir)
     sym = symmetrize(
         pairs.select(F.col("vec_a").alias("src"), F.col("vec_b").alias("dst"))
     )
@@ -615,11 +604,6 @@ def dedup_embed_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint."""
     return dedup_embed(spark, sf_dir)
 
-
-# Uncached plan twin (registry.PLAN_QUERIES) — same plan as the
-# primary's by construction.
-_dedup_embed_tree = _dedup_embed
-
 ORACLE_DEDUP_EMBED_TREE = ORACLE_DEDUP_EMBED
 
 
@@ -675,16 +659,7 @@ def sim_dedup_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     6-row × ≤6-row (the literal domain LEFT-joins the aggregate so
     thresholds with no surviving pairs still report (0, 0) — the
     curve's domain is fixed by SWEEP_THRESHOLDS, not by the data)."""
-    return _sweep_from_pairs(spark, dedup_embed(spark, sf_dir))
-
-
-def _sim_dedup_sweep_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Uncached plan twin (registry.PLAN_QUERIES): the sweep over the
-    live pair plan instead of the session-shared checkpoint."""
-    return _sweep_from_pairs(spark, _dedup_embed(spark, sf_dir))
-
-
-def _sweep_from_pairs(spark: SparkSession, pairs: DataFrame) -> DataFrame:
+    pairs = dedup_embed(spark, sf_dir)
     th_arr = F.array(*[F.lit(float(t)) for t in SWEEP_THRESHOLDS])
     agg = (
         pairs.select(
@@ -1421,11 +1396,6 @@ def sim_knn_graph_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
     `sim_knn_graph` checkpoint, so this key costs one cache read."""
     return sim_knn_graph(spark, sf_dir)
 
-
-# Uncached plan twin (registry.PLAN_QUERIES) — same plan as the
-# primary's by construction.
-_sim_knn_graph_tree = _sim_knn_graph
-
 ORACLE_SIM_KNN_GRAPH_TREE = ORACLE_SIM_KNN_GRAPH
 
 
@@ -1444,37 +1414,15 @@ def sim_knn_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same budget trade a production recall monitor makes
     (VERDICT r6 item 4: the old `% 10` sample was 1e8 exact queries
     at 1e9 vectors)."""
-    return _knn_recall_from(
-        spark,
-        sf_dir,
-        _knn_exact_topk(spark, sf_dir),
-        sim_knn_graph(spark, sf_dir),
-    )
-
-
-def _sim_knn_recall_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Uncached plan twin (registry.PLAN_QUERIES): the recall audit
-    over the LIVE exact-topk and kNN-graph plans instead of the two
-    session-shared checkpoints."""
-    return _knn_recall_from(
-        spark,
-        sf_dir,
-        _knn_exact_build(spark, sf_dir),
-        _sim_knn_graph(spark, sf_dir),
-    )
-
-
-def _knn_recall_from(
-    spark: SparkSession, sf_dir: str, exact: DataFrame, knn_graph: DataFrame
-) -> DataFrame:
     sample = _knn_sample(spark, sf_dir)
-    knn = knn_graph.join(
+    knn = sim_knn_graph(spark, sf_dir).join(
         F.broadcast(sample.select(F.col("vec_id").alias("src_id"))),
         "src_id",
         "left_semi",
     ).select("src_id", "neighbor_id", F.lit(1).alias("hit"))
     return (
-        exact.join(knn, ["src_id", "neighbor_id"], "left")
+        _knn_exact_topk(spark, sf_dir)
+        .join(knn, ["src_id", "neighbor_id"], "left")
         .groupBy("src_id")
         .agg(
             F.sum(F.coalesce("hit", F.lit(0))).cast("bigint").alias("n_hits"),
@@ -3146,18 +3094,7 @@ def ml_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups. No global sort or window ever touches corpus rows; the
     only corpus-sized ops are the score scan and one map-side-combined
     groupBy (both inside the shared _score_groups substrate)."""
-    return _ml_auc_from(_score_groups(spark, sf_dir))
-
-
-def _ml_auc_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Uncached plan twin (registry.PLAN_QUERIES): the rank statistic
-    over the LIVE score-groups plan instead of the session-shared
-    checkpoint."""
-    return _ml_auc_from(_score_groups_build(spark, sf_dir))
-
-
-def _ml_auc_from(groups: DataFrame) -> DataFrame:
-    agg = groups.agg(
+    agg = _score_groups(spark, sf_dir).agg(
         F.sum("pos_s").alias("n_pos"),
         F.sum(F.col("n_s") - F.col("pos_s")).alias("n_neg"),
         F.sum(
@@ -3251,18 +3188,7 @@ def ml_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     work is the score scan + one map-side-combined groupBy(score);
     the ordering window and the bin rollup run over the ≤10⁶-row
     score DOMAIN, never corpus rows; the 1-row total broadcasts."""
-    return _ml_calibration_from(_score_groups(spark, sf_dir))
-
-
-def _ml_calibration_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Uncached plan twin (registry.PLAN_QUERIES): the bin rollup over
-    the LIVE score-groups plan instead of the session-shared
-    checkpoint."""
-    return _ml_calibration_from(_score_groups_build(spark, sf_dir))
-
-
-def _ml_calibration_from(groups: DataFrame) -> DataFrame:
-    cum = groups.withColumn(
+    cum = _score_groups(spark, sf_dir).withColumn(
         "s6", F.round(F.col("score") * 1_000_000).cast("bigint")
     )
     # n_total as a global window over the CONTRACTED frame (bounded by
@@ -3652,22 +3578,10 @@ def ml_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     contracted table. Cross-engine ranking uses the sim_topk
     discipline (raw cosine desc, vec_id tiebreak) proven hash-exact
     across ten rounds of parity sweeps."""
-    return _knn_classify_from(spark, sf_dir, _knn_exact_topk(spark, sf_dir))
-
-
-def _ml_knn_classify_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Uncached plan twin (registry.PLAN_QUERIES): the vote over the
-    LIVE exact-topk plan instead of the session-shared checkpoint."""
-    return _knn_classify_from(spark, sf_dir, _knn_exact_build(spark, sf_dir))
-
-
-def _knn_classify_from(
-    spark: SparkSession, sf_dir: str, exact: DataFrame
-) -> DataFrame:
     labels = table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("label").cast("int").alias("lbl")
     )
-    nbrs = exact.select(
+    nbrs = _knn_exact_topk(spark, sf_dir).select(
         "src_id", F.col("neighbor_id").alias("vec_id")
     ).join(labels, "vec_id")
     vw = Window.partitionBy("src_id").orderBy(
@@ -3919,18 +3833,7 @@ def ml_dbscan_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≪ corpus. Composes the shared pair artifact exactly like
     corpus_semdedup/sim_dedup_sweep — one pair build serves four
     declared keys per session."""
-    return _dbscan_from_pairs(spark, sf_dir, dedup_embed(spark, sf_dir))
-
-
-def _ml_dbscan_core_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Uncached plan twin (registry.PLAN_QUERIES): classification over
-    the live pair plan."""
-    return _dbscan_from_pairs(spark, sf_dir, _dedup_embed(spark, sf_dir))
-
-
-def _dbscan_from_pairs(
-    spark: SparkSession, sf_dir: str, pairs: DataFrame
-) -> DataFrame:
+    pairs = dedup_embed(spark, sf_dir)
     sym = pairs.select(
         F.col("vec_a").alias("vid"), F.col("vec_b").alias("nbr")
     ).unionAll(

@@ -677,6 +677,23 @@ COLLOC_MIN_PAIR = 5
 COLLOC_TOP_K = 20
 
 
+def _colloc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return (
+        table(spark, sf_dir, "documents")
+        .select(_tokens().alias("t"))
+        .filter(F.size("t") >= 2)
+    )
+
+
+def _colloc_unigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return (
+        _colloc_tokens(spark, sf_dir)
+        .select(F.explode("t").alias("w"))
+        .groupBy("w")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+
+
 def text_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PMI-ranked collocations: the COLLOC_TOP_K adjacent token pairs
     whose pointwise mutual information ln(c_xy·N / (c_x·c_y)) is
@@ -704,34 +721,7 @@ def text_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "colloc_unigrams",
         lambda: _colloc_unigrams(spark, sf_dir),
     )
-    return _text_collocations(spark, sf_dir, uni)
-
-
-def _colloc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        table(spark, sf_dir, "documents")
-        .select(_tokens().alias("t"))
-        .filter(F.size("t") >= 2)
-    )
-
-
-def _colloc_unigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        _colloc_tokens(spark, sf_dir)
-        .select(F.explode("t").alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-
-
-def _text_collocations(
-    spark: SparkSession, sf_dir: str, uni: DataFrame | None = None
-) -> DataFrame:
-    """Uncached core (PLAN_QUERIES exposes this so the plan audit sees
-    the real lineage, not a checkpoint scan)."""
     toks = _colloc_tokens(spark, sf_dir)
-    if uni is None:
-        uni = _colloc_unigrams(spark, sf_dir)
     # Adjacent pairs via an index transform — t[] subscripts are
     # 0-based in Spark SQL; sequence stays ascending because size>=2.
     pairs = toks.select(

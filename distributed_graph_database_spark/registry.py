@@ -296,39 +296,3 @@ def _global_lru(queries: dict[str, QueryFn]) -> dict[str, QueryFn]:
 QUERIES: dict[str, QueryFn] = _global_lru(
     _interleave([_rotate_for_driver(f) for f in _FAMILIES])
 )
-
-# Uncached plan views for machine plan assertions: keys served through
-# cache.shared return a checkpoint scan, which would make plan-hygiene
-# checks vacuous — these builders expose the underlying query plan.
-PLAN_QUERIES: dict[str, QueryFn] = {
-    **QUERIES,
-    "dedup_near": pl_dedup._dedup_near_audit,
-    "dedup_ngram": pl_dedup._dedup_ngram,
-    "dedup_incremental": pl_dedup._dedup_incremental_delta,
-    "dedup_embed": pl_sim._dedup_embed,
-    "dedup_embed_tree": pl_sim._dedup_embed_tree,
-    "corpus_semdedup": pl_sim._corpus_semdedup_plan,
-    "sim_dedup_sweep": pl_sim._sim_dedup_sweep_plan,
-    "ml_dbscan_core": pl_sim._ml_dbscan_core_plan,
-    "sim_topk": pl_sim._sim_topk,
-    "sim_topk_ivf": pl_sim._sim_topk_ivf,
-    "sim_pq_topk": pl_sim._sim_pq_topk,
-    "sim_pq_code": lambda spark, sf: pl_sim._pq_codes_impl(spark, sf),
-    "sim_knn_graph": pl_sim._sim_knn_graph,
-    "sim_knn_graph_tree": pl_sim._sim_knn_graph_tree,
-    "sim_knn_recall": pl_sim._sim_knn_recall_plan,
-    "sim_knn_tree_recall": pl_sim._sim_knn_recall_plan,
-    "ml_knn_classify": pl_sim._ml_knn_classify_plan,
-    "text_collocations": pl_text._text_collocations,
-    "text_repetition": pl_text._text_repetition,
-    "text_contamination": pl_text._text_contamination,
-    "ml_centroid_classify": pl_sim._ml_centroid_classify,
-    "ml_auc": pl_sim._ml_auc_plan,
-    "ml_calibration": pl_sim._ml_calibration_plan,
-    "graph_copurchase": g_analytics._copurchase_impl,
-    "graph_triangles": g_analytics._triangles_plan,
-    "graph_jaccard": g_analytics._jaccard_plan,
-    "graph_clustering_coef": g_analytics._clustering_plan,
-    "store_stats_collect": formats._store_stats_collect_plan,
-    "store_stats_approx": formats._store_stats_approx_plan,
-}

@@ -786,11 +786,6 @@ def _stack_profile(one: DataFrame, audit: bool = False) -> DataFrame:
     ).select(*out)
 
 
-def _store_stats_collect_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Uncached store_stats_collect plan (plan-audit view)."""
-    return _stack_profile(_exact_profile_plan(spark, sf_dir))
-
-
 def store_stats_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Table-statistics collection (the ANALYZE TABLE op a warehouse
     runs after ingest — the numbers that feed broadcast decisions,
@@ -853,8 +848,8 @@ def store_stats_approx(
     exact leg is the SHARED `orders_exact_profile` materialization
     (one Expand scan per session, billed to setup — VERDICT r8 item
     2), so the per-run cost of the declared key is the sketch leg
-    alone; the uncached audit plan stays machine-checked via
-    registry.PLAN_QUERIES."""
+    alone; the uncached audit plan stays machine-checked under
+    cache.live_plans."""
     if audit:
         one = _exact_profile_wide(spark, sf_dir).crossJoin(
             F.broadcast(_sketch_profile_plan(spark, sf_dir))  # 1×1
@@ -889,14 +884,6 @@ def _sketch_profile_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
             for c in PROFILE_COLS
         ]
     )
-
-
-def _store_stats_approx_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Uncached audit-form plan (plan-audit view): both legs live."""
-    one = _exact_profile_plan(spark, sf_dir).crossJoin(
-        F.broadcast(_sketch_profile_plan(spark, sf_dir))
-    )
-    return _stack_profile(one, audit=True)
 
 
 def _oracle_store_stats(audit: bool = False) -> str:

@@ -9,10 +9,11 @@ from __future__ import annotations
 
 import os
 import pathlib
+import threading
 
 import pyarrow.parquet as pq
 
-from distributed_graph_database_spark import relational
+from distributed_graph_database_spark import cache, relational
 from distributed_graph_database_spark.streaming import events_stream as es
 
 PACKAGE = pathlib.Path(__file__).resolve().parent.parent / (
@@ -59,3 +60,43 @@ def test_only_cache_keys_by_application_id():
         if "applicationId" in p.read_text()
     )
     assert set(users) <= {"cache.py", "catalog.py"}, users
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_live_plans_is_per_thread(spark):
+    """The ops_concurrent_* keys serve from worker threads: a live
+    view opened in one thread must leave another thread's shared
+    calls checkpointing."""
+    sf = "live-plans-thread"
+    other = {}
+
+    def serve():
+        other["df"] = cache.shared(spark, sf, "k", lambda: spark.range(5))
+
+    with cache.live_plans():
+        live = cache.shared(spark, sf, "k", lambda: spark.range(5))
+        worker = threading.Thread(target=serve)
+        worker.start()
+        worker.join(timeout=60)
+    assert not worker.is_alive()
+    assert "ExistingRDD" not in _plan(live)
+    assert "ExistingRDD" in _plan(other["df"])
+    assert cache.shared(spark, sf, "k", lambda: spark.range(5)) is other["df"]
+
+
+def test_memo_miss_under_live_plans_stores_checkpointed_value(spark):
+    """What _MEMO stores never depends on the view that first asked:
+    a memo builder calling shared checkpoints even inside the block."""
+    sf = "live-plans-memo"
+    with cache.live_plans():
+        got = cache.memo(
+            spark,
+            sf,
+            "outer",
+            lambda: cache.shared(spark, sf, "inner", lambda: spark.range(5)),
+        )
+    assert "ExistingRDD" in _plan(got)
+    assert cache.memo(spark, sf, "outer", lambda: None) is got

@@ -8,20 +8,24 @@ Two anti-patterns are banned engine-wide (the 100 TB contract):
 - `BatchEvalPython` / `ArrowEvalPython` — row-at-a-time or scalar
   Python UDFs in a query plan. The only sanctioned Python is the
   Arrow-batched mapInPandas kernels (`MapInPandas` nodes).
+
+Every key is built under `cache.live_plans()`, so keys served through
+`cache.shared` show their full plan, not a checkpoint scan.
 """
 
 from __future__ import annotations
 
 import pytest
 
-from distributed_graph_database_spark import registry
+from distributed_graph_database_spark import cache, registry
 
-KEYS = sorted(registry.PLAN_QUERIES)
+KEYS = sorted(registry.QUERIES)
 
 
 @pytest.mark.parametrize("key", KEYS)
 def test_no_cartesian_no_python_udf(spark, sf_oracle, key):
-    df = registry.PLAN_QUERIES[key](spark, sf_oracle)
+    with cache.live_plans():
+        df = registry.QUERIES[key](spark, sf_oracle)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan, f"{key}: shuffle cartesian\n{plan}"
     assert "BatchEvalPython" not in plan, f"{key}: row Python UDF\n{plan}"

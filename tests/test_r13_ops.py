@@ -125,11 +125,17 @@ def test_dedup_incremental_truth_derivation_equals_delta_generator(
         r.source: (r.n_delta, r.n_dup_base, r.n_dup_delta, r.n_kept)
         for r in dedup.dedup_incremental(spark, sf_oracle).collect()
     }
+    delta = dedup._dedup_incremental_delta(spark, sf_oracle)
     want = {
         r.source: (r.n_delta, r.n_dup_base, r.n_dup_delta, r.n_kept)
-        for r in dedup._dedup_incremental_delta(spark, sf_oracle).collect()
+        for r in delta.collect()
     }
     assert got == want
+    # The delta-sized generator is not a declared key, so the global
+    # plan audit (test_plan_hygiene) does not reach it: same bans here.
+    plan = delta._jdf.queryExecution().executedPlan().toString()
+    for banned in ("CartesianProduct", "BatchEvalPython", "ArrowEvalPython"):
+        assert banned not in plan, f"{banned}\n{plan}"
 
 
 def test_corpus_mix_temperature_monotone_and_exact(spark, sf_oracle):

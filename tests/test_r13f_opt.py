@@ -6,6 +6,7 @@ with a named reason, not as an opaque hash mismatch)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -111,19 +112,30 @@ def test_gmm_neff_per_dim_derivation_matches_direct_sum(spark, sf_smoke):
         assert abs(row.ne_d - direct[row.component]) < 1e-9
 
 
-def test_shared_flag_frames_equal_their_uncached_builders(spark, sf_smoke):
-    """The r13 cache.shared graduations (text_repetition,
-    text_contamination, _score_groups) must serve EXACTLY the rows of
-    their uncached builders — the plan twins registered in
-    PLAN_QUERIES are only honest if this holds."""
-    from distributed_graph_database_spark.pipeline import similarity as sim
-    from distributed_graph_database_spark.pipeline import text as t
+# The keys whose full plan the audit used to reach through a hand-kept
+# uncached twin; cache.live_plans now derives every one of them.
+FORMER_TWIN_KEYS = (
+    "corpus_semdedup", "dedup_embed", "dedup_embed_tree",
+    "dedup_incremental", "dedup_near", "dedup_ngram", "graph_clustering_coef",
+    "graph_copurchase", "graph_jaccard", "graph_triangles", "ml_auc",
+    "ml_calibration", "ml_centroid_classify", "ml_dbscan_core",
+    "ml_knn_classify", "sim_dedup_sweep", "sim_knn_graph",
+    "sim_knn_graph_tree", "sim_knn_recall", "sim_knn_tree_recall",
+    "sim_pq_code", "sim_pq_topk", "sim_topk", "sim_topk_ivf",
+    "store_stats_approx", "store_stats_collect", "text_collocations",
+    "text_contamination", "text_repetition",
+)
 
-    for served, builder in [
-        (t.text_repetition, t._text_repetition),
-        (t.text_contamination, t._text_contamination),
-        (sim._score_groups, sim._score_groups_build),
-    ]:
-        a = sorted(map(tuple, served(spark, sf_smoke).collect()))
-        b = sorted(map(tuple, builder(spark, sf_smoke).collect()))
-        assert a == b, served.__name__
+
+@pytest.mark.parametrize("key", FORMER_TWIN_KEYS)
+def test_served_rows_equal_live_rows(spark, sf_smoke, key):
+    """A key served through cache.shared must return EXACTLY the rows
+    of its live build — the plan audit reads the live view, so it is
+    only honest if this holds."""
+    from distributed_graph_database_spark import cache, registry
+
+    fn = registry.QUERIES[key]
+    a = sorted(map(tuple, fn(spark, sf_smoke).collect()))
+    with cache.live_plans():
+        b = sorted(map(tuple, fn(spark, sf_smoke).collect()))
+    assert a == b, key

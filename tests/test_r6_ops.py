@@ -73,6 +73,7 @@ def test_store_stats_approx_within_5pct_and_no_expand(spark, sf_oracle):
     exact twin, identical non-NDV columns — and structurally cheaper:
     the exact plan carries Catalyst's Expand (input fan-out per
     profiled column), the sketch plan must not."""
+    from distributed_graph_database_spark import cache
     from distributed_graph_database_spark.sources import formats
 
     exact = {
@@ -91,13 +92,12 @@ def test_store_stats_approx_within_5pct_and_no_expand(spark, sf_oracle):
         assert (a.min_s, a.max_s) == (e.min_s, e.max_s)
         assert abs(a.n_distinct - e.n_distinct) <= max(1, 0.05 * e.n_distinct)
 
-    # Plan assertions run on the UNCACHED builders: the declared keys
-    # serve the shared orders_exact_profile checkpoint (r9), whose
-    # plan is a scan, so asserting on them would be vacuous.
-    exact_plan = (
-        formats._store_stats_collect_plan(spark, sf_oracle)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    # The exact plan is read under the live view: the declared key
+    # serves the shared orders_exact_profile checkpoint (r9), whose
+    # plan is a scan, so asserting on it would be vacuous.
+    with cache.live_plans():
+        exact_df = formats.store_stats_collect(spark, sf_oracle)
+    exact_plan = exact_df._jdf.queryExecution().executedPlan().toString()
     approx_plan = (
         formats.store_stats_approx(spark, sf_oracle, audit=False)
         ._jdf.queryExecution().executedPlan().toString()
