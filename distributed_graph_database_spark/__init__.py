@@ -13,6 +13,9 @@ Design rules (SURVEY.md §7):
   only where built-ins can't express the semantics (multimodal decode).
 - Iterative graph traversal = driver-side loop of DataFrame joins with
   localCheckpoint lineage truncation (the GraphX pattern, OSDI'14).
+  The convergence loops run on one kernel, `graph.iterate.fixpoint`: a
+  lazy checkpoint per round, materialized by the round's convergence
+  probe (one action per round), a round bound and a named error.
 """
 
 __version__ = "0.1.0"

@@ -23,6 +23,8 @@ Scale notes (the point of each shape):
 from __future__ import annotations
 
 import math
+import operator
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -30,6 +32,7 @@ from pyspark.sql import functions as F
 from ..cache import shared
 from ..catalog import table
 from . import traversal
+from .iterate import fixpoint
 
 # Support threshold: a pair must co-occur in at least this many orders
 # to become an edge. Co-occurrence of 1 is sampling noise in a basket
@@ -1264,25 +1267,12 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     the CURRENT survivor set — every round removes ALL sub-k vertices
     at once, so the round count is the peel DEPTH of the graph (small
     in practice; bounded by degeneracy ordering length), not the
-    vertex count. Rounds are checkpointed like the other iterative
-    loops (bfs/components/pagerank) to keep lineage flat. Raises if
+    vertex count. Rounds run on `iterate.fixpoint`, which raises if
     KCORE_MAX_ROUNDS is hit without convergence rather than silently
     returning an unpeeled set (the components lesson, ADVICE r2)."""
     e = _copurchase_edges(spark, sf_dir).select("p1", "p2")
-    # The loop state is the SURVIVING SUBGRAPH itself, physically
-    # re-materialized each round — peeling removes edges, so every
-    # later round scans only what survived (monotonically shrinking
-    # I/O), instead of re-filtering the full edge set against a
-    # survivor list every round. Edge-count fixpoint ⟺ vertex
-    # fixpoint: if no edge was removed, degrees are unchanged, so the
-    # next survivor set is identical.
-    sub = (
-        e.select(F.col("p1").alias("src"), F.col("p2").alias("dst"))
-        .unionAll(e.select(F.col("p2").alias("src"), F.col("p1").alias("dst")))
-        .localCheckpoint(eager=True)
-    )
-    n_prev = sub.count()
-    for _ in range(KCORE_MAX_ROUNDS):
+
+    def peel(sub: DataFrame, _) -> DataFrame:
         survivors = (
             sub.groupBy("src")
             .agg(F.count(F.lit(1)).alias("d"))
@@ -1297,29 +1287,36 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         # sf0.01 on 8 threads). At 100 TB the survivor list of a dense
         # core is still ≪ the edge set; if it ever outgrew broadcast,
         # the fallback is exactly the shuffled semi-join this replaces.
-        sub = (
-            sub.join(
-                F.broadcast(survivors.withColumnRenamed("v", "src")),
-                "src",
-                "left_semi",
-            )
-            .join(
-                F.broadcast(survivors.withColumnRenamed("v", "dst")),
-                "dst",
-                "left_semi",
-            )
-            .localCheckpoint(eager=True)
+        return sub.join(
+            F.broadcast(survivors.withColumnRenamed("v", "src")),
+            "src",
+            "left_semi",
+        ).join(
+            F.broadcast(survivors.withColumnRenamed("v", "dst")),
+            "dst",
+            "left_semi",
         )
-        n = sub.count()
-        if n == n_prev:
-            break
-        n_prev = n
-    else:
-        raise RuntimeError(
-            f"k-core did not converge within {KCORE_MAX_ROUNDS} rounds"
-        )
+
+    # The loop state is the SURVIVING SUBGRAPH itself, physically
+    # re-materialized each round — peeling removes edges, so every
+    # later round scans only what survived (monotonically shrinking
+    # I/O), instead of re-filtering the full edge set against a
+    # survivor list every round. Edge-count fixpoint ⟺ vertex
+    # fixpoint: if no edge was removed, degrees are unchanged, so the
+    # next survivor set is identical.
+    states, _ = fixpoint(
+        e.select(F.col("p1").alias("src"), F.col("p2").alias("dst")).unionAll(
+            e.select(F.col("p2").alias("src"), F.col("p1").alias("dst"))
+        ),
+        peel,
+        DataFrame.count,
+        operator.eq,
+        max_rounds=KCORE_MAX_ROUNDS,
+        name="k-core",
+    )
     return (
-        sub.groupBy("src")
+        states[-1]
+        .groupBy("src")
         .agg(F.count(F.lit(1)).alias("core_degree"))
         .select(F.col("src").alias("vid"), "core_degree")
     )
@@ -2006,50 +2003,29 @@ def graph_ktruss(
     round cost shrinks monotonically, and the round count is the
     truss peel depth, not the edge count. Raises rather than
     returning an unconverged set."""
-    e = (
-        _copurchase_edges(spark, sf_dir)
-        .select("p1", "p2")
-        .localCheckpoint(eager=True)
-    )
-    n_prev = e.count()
-    supp = None
-    for _ in range(max_rounds):
+
+    def peel(e: DataFrame, _) -> DataFrame:
         tri = _closed_triangles(_oriented_edges(e))
-        pairs = (
-            tri.select(
-                F.least("a", "b").alias("p1"), F.greatest("a", "b").alias("p2")
-            )
-            .unionAll(
-                tri.select(
-                    F.least("b", "c").alias("p1"), F.greatest("b", "c").alias("p2")
-                )
-            )
-            .unionAll(
-                tri.select(
-                    F.least("a", "c").alias("p1"), F.greatest("a", "c").alias("p2")
-                )
-            )
-        )
+        pairs = reduce(DataFrame.unionAll, [
+            tri.select(F.least(x, y).alias("p1"), F.greatest(x, y).alias("p2"))
+            for x, y in (("a", "b"), ("b", "c"), ("a", "c"))
+        ])
         supp = pairs.groupBy("p1", "p2").agg(F.count(F.lit(1)).alias("support"))
-        # The survivor checkpoint KEEPS the support column (r13):
-        # returning the lazy `supp.filter(...)` re-ran the final
-        # round's whole triangle enumeration + groupBy a second time
-        # at materialization; the checkpoint already holds exactly
-        # those rows. The extra column rides the next round's
-        # orientation joins untouched.
-        e = (
-            supp.filter(F.col("support") >= TRUSS_K - 2)
-            .localCheckpoint(eager=True)
-        )
-        n = e.count()
-        if n == n_prev:
-            break
-        n_prev = n
-    else:
-        raise RuntimeError(
-            f"k-truss did not converge within {max_rounds} rounds"
-        )
-    return e.select("p1", "p2", "support")
+        # The survivor state KEEPS the support column (r13): the last
+        # round's checkpoint already holds exactly the rows to return,
+        # so the final triangle enumeration never runs twice. The extra
+        # column rides the next round's orientation joins untouched.
+        return supp.filter(F.col("support") >= TRUSS_K - 2)
+
+    states, _ = fixpoint(
+        _copurchase_edges(spark, sf_dir).select("p1", "p2"),
+        peel,
+        DataFrame.count,
+        operator.eq,
+        max_rounds=max_rounds,
+        name="k-truss",
+    )
+    return states[-1].select("p1", "p2", "support")
 
 
 def _oracle_ktruss() -> str:
@@ -2498,47 +2474,44 @@ def graph_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
     closure uses SCC_CLOSURE_DOUBLINGS path-doubling rounds (reach ←
     reach ∪ reach∘reach, identity seeded) — data-INDEPENDENT depth
     covering any path on ≤ 2^rounds vertices, each round a self-join
-    + distinct on a ≤ n²-row table with per-round localCheckpoint
-    (the graph-loop lineage discipline). Mutual reachability is one
-    self-join; everything is integer ⇒ exact oracle (recursive-CTE
-    closure — a different algorithm, so parity checks SCC semantics,
-    the _ORACLE_GRAPH_MST pattern). A billion-vertex SCC run swaps
-    the contracted substrate for the edge table itself and bounds
-    doubling rounds at log₂(diameter) — same loop, same per-round
-    shape."""
+    + distinct on a ≤ n²-row table (one `iterate.fixpoint` round).
+    Mutual reachability is one self-join; everything is integer ⇒
+    exact oracle (recursive-CTE closure — a different algorithm, so
+    parity checks SCC semantics, the _ORACLE_GRAPH_MST pattern). A
+    billion-vertex SCC run swaps the contracted substrate for the edge
+    table itself and bounds doubling rounds at log₂(diameter) — same
+    loop, same per-round shape."""
     edges = _scc_directed_edges(spark, sf_dir).localCheckpoint(eager=True)
     nodes = (
         edges.select(F.col("src").alias("v"))
         .unionByName(edges.select(F.col("dst").alias("v")))
         .distinct()
     )
-    reach = (
-        nodes.select(F.col("v").alias("a"), F.col("v").alias("b"))
-        .unionByName(edges.select(F.col("src").alias("a"), F.col("dst").alias("b")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n_reach = reach.count()
-    for _ in range(SCC_CLOSURE_DOUBLINGS):
+
+    def double(reach: DataFrame, _) -> DataFrame:
         hop = (
             reach.alias("l")
             .join(reach.alias("r"), F.col("l.b") == F.col("r.a"))
             .select(F.col("l.a").alias("a"), F.col("r.b").alias("b"))
         )
-        reach = reach.unionByName(hop).distinct().localCheckpoint(eager=True)
-        # Early exit on convergence (r13): reach is monotone non-
-        # shrinking under doubling, so an unchanged row count means
-        # the closure is already transitive and the remaining rounds
-        # are identity maps — skipping them cannot change the result,
-        # it only skips no-op join jobs (the count reads the
-        # checkpoint just written, ~no cost; the contracted closure
-        # typically converges in 2-3 of the 5 worst-case rounds).
-        n_new = reach.count()
-        if n_new == n_reach:
-            break
-        n_reach = n_new
-    fwd = reach
-    bwd = reach.select(F.col("b").alias("a"), F.col("a").alias("b"))
+        return reach.unionByName(hop).distinct()
+
+    # Early exit on convergence (r13): reach is monotone non-shrinking
+    # under doubling, so an unchanged row count means the closure is
+    # already transitive and the remaining rounds are identity maps —
+    # skipping them cannot change the result (the contracted closure
+    # typically converges in 2-3 of the 5 worst-case rounds).
+    states, _ = fixpoint(
+        nodes.select(F.col("v").alias("a"), F.col("v").alias("b"))
+        .unionByName(edges.select(F.col("src").alias("a"), F.col("dst").alias("b")))
+        .distinct(),
+        double,
+        DataFrame.count,
+        operator.eq,
+        max_rounds=SCC_CLOSURE_DOUBLINGS,
+    )
+    fwd = states[-1]
+    bwd = fwd.select(F.col("b").alias("a"), F.col("a").alias("b"))
     mutual = fwd.intersect(bwd)
     comp = mutual.groupBy("a").agg(F.min("b").alias("scc_id"))
     sizes = comp.groupBy("scc_id").agg(F.count(F.lit(1)).alias("scc_size"))

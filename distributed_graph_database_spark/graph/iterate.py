@@ -1,0 +1,68 @@
+"""One fixpoint kernel for the engine's convergence loops.
+
+A round of an iterative graph algorithm is one Spark round: the
+reference's per-level thread barrier (dfs_bfs.h:143-160) becomes the
+boundary between two materialized states. `fixpoint` makes the four
+decisions every such loop needs, once:
+
+- lineage: each round's state gets a lazy `localCheckpoint`, so round
+  k+1 plans from round k's blocks, never from round 0 (the GraphX
+  pattern, OSDI'14);
+- the probe: the caller's convergence probe (a count, a fingerprint)
+  is the action that materializes that checkpoint, so a round runs one
+  action, not a checkpoint job plus a probe job;
+- the bound: at most `max_rounds` rounds;
+- non-convergence: a named loop raises at the bound, because its oracle
+  computes the full fixpoint and an unconverged state would be a silent
+  wrong answer. An unnamed loop is bounded by definition (BFS's
+  `max_levels`, the SCC closure's doublings): its oracle stops at the
+  same bound, so it returns there.
+
+It sets no job group or job description: its jobs belong to the
+caller's span.
+
+Users: `bfs_levels`, `connected_components_with_rounds`, `graph_kcore`,
+`graph_ktruss` and `graph_scc`'s closure. Loops left outside on purpose:
+the fixed-round lazy loops (PageRank, PPR, SSSP, label propagation)
+have nothing to checkpoint or probe; HITS, the Brandes passes and the
+closeness frontier are fixed-level eager loops with no probe; Borůvka
+(`minimum_spanning_forest`) carries three states and two exits.
+"""
+
+from __future__ import annotations
+
+from typing import Any, Callable
+
+from pyspark.sql import DataFrame
+
+
+def fixpoint(
+    state0: DataFrame,
+    step: Callable[[DataFrame, Any], DataFrame],
+    probe: Callable[[DataFrame], Any],
+    done: Callable[[Any, Any], bool],
+    *, max_rounds: int, name: str | None = None, probe0: Any = None,
+) -> tuple[list[DataFrame], Any]:
+    """Iterate `state ← step(state, p)` until `done(p, p_prev)`.
+
+    `probe(state)` is the one action on a round's lazily checkpointed
+    state; its small driver-side value `p` goes to the next `step` and,
+    with the value before it (None for `state0`), to `done`. Pass
+    `probe0` when `state0` is already materialized and its probe known:
+    the kernel then neither checkpoints nor probes it.
+
+    Returns every round's state (`state0` first) and the last probe.
+    Raises RuntimeError if a named loop is not done in `max_rounds`.
+    """
+    if probe0 is None:
+        state0 = state0.localCheckpoint(eager=False)
+        probe0 = probe(state0)
+    states, p, prev = [state0], probe0, None
+    while not done(p, prev):
+        if len(states) > max_rounds:
+            if name is None:
+                break
+            raise RuntimeError(f"{name} did not converge in {max_rounds} rounds")
+        states.append(step(states[-1], p).localCheckpoint(eager=False))
+        prev, p = p, probe(states[-1])
+    return states, p

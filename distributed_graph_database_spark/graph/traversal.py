@@ -20,15 +20,24 @@ Physical shape at scale (SURVEY.md §4.4): each BFS round is one
 `frontier ⋈ edges` stage — the reference's per-level thread barrier
 (dfs_bfs.h:143-160) maps to Spark's per-round shuffle/stage boundary.
 The frontier is broadcast while small (no shuffle of the big edge
-side at all); `visited` accumulates and is localCheckpoint-ed every
-round to truncate lineage (the GraphX iterative pattern, OSDI'14).
-Edges are cached once so 100 TB of parquet isn't re-scanned per round.
+side at all). Edges are cached once so 100 TB of parquet isn't
+re-scanned per round.
+
+Both loops here (BFS levels, connected components) run on
+`iterate.fixpoint`, which owns the checkpoint/probe discipline of
+every convergence loop: a lazy `localCheckpoint` per round, the
+convergence probe as the one action that materializes it, the round
+bound and the non-convergence error.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .iterate import fixpoint
 
 # Broadcast the frontier while its estimated serialized size is below
 # this many bytes; beyond it, fall back to a shuffle join (AQE may
@@ -79,9 +88,9 @@ def bfs_levels(
 ) -> DataFrame:
     """Minimum-hop level per reachable vertex → (vid bigint, level int).
 
-    Driver-side loop of DataFrame ops. Each round's (small) frontier is
-    localCheckpoint-ed once; the cumulative visited set is kept as the
-    *union of per-round checkpointed frames* rather than re-
+    One `fixpoint` round per level; the state is the level's new
+    frontier and the probe its row count. The cumulative visited set
+    is the *union of per-round checkpointed frames* rather than re-
     materialized every round — re-checkpointing the cumulative set is
     O(V·D) copy work at scale (the round-1 shape), whereas the frame
     union only ever checkpoints each vertex once. The anti-join probe
@@ -101,41 +110,32 @@ def bfs_levels(
         # One slice at creation: the default 32-slice parallelize makes
         # every action on the root (and anything unioned with it) carry
         # 32 near-empty Python-pickled partitions (ops.py _read_result
-        # documents the measured cost).
+        # documents the measured cost). Eager, with its known one-row
+        # probe: a lazy checkpoint plus a count costs two jobs here.
         root = spark.createDataFrame(
             spark.sparkContext.parallelize([(start, 0)], 1),
             "vid bigint, level int",
-        )
-        frames = [root.localCheckpoint(eager=True)]
-        visited = frames[0]
-        frontier = visited.select("vid")
-        frontier_rows = 1
+        ).localCheckpoint(eager=True)
+        seen: list[DataFrame] = []  # the frames expanded so far
 
-        level = 0
-        while level < max_levels:
-            level += 1
-            probe = _frontier_probe(frontier, frontier_rows)
-            nxt = (
+        def expand(frontier: DataFrame, frontier_rows: int) -> DataFrame:
+            seen.append(frontier)
+            probe = _frontier_probe(frontier.select("vid"), frontier_rows)
+            return (
                 probe.join(edges_sym, probe.vid == edges_sym.src)
                 .select(F.col("dst").alias("vid"))
                 .distinct()
-                .join(visited, "vid", "left_anti")
-                .withColumn("level", F.lit(level).cast("int"))
+                .join(reduce(DataFrame.unionByName, seen), "vid", "left_anti")
+                .withColumn("level", F.lit(len(seen)).cast("int"))
             )
-            # Lazy checkpoint: the emptiness-probe count right below is
-            # the materializing action, so each BFS round runs one job
-            # (checkpoint write + count) instead of two (r14, the CC
-            # fingerprint fold).
-            nxt = nxt.localCheckpoint(eager=False)
-            frontier_rows = nxt.count()
-            if frontier_rows == 0:
-                break
-            frames.append(nxt)
-            visited = frames[0]
-            for f in frames[1:]:
-                visited = visited.unionByName(f)
-            frontier = nxt.select("vid")
-        return visited
+
+        frames, frontier_rows = fixpoint(
+            root, expand, DataFrame.count, lambda rows, _: rows == 0,
+            max_rounds=max_levels, probe0=1,
+        )
+        if frontier_rows == 0:
+            frames.pop()
+        return reduce(DataFrame.unionByName, frames)
     finally:
         if cache_edges:
             edges_sym.unpersist()
@@ -300,11 +300,11 @@ def connected_components_with_rounds(
     are their own component.
 
     Convergence = the canonical edge state reproducing itself, checked
-    by (count, BIT_XOR xxhash64(u,v)) fingerprint — one tiny aggregate
-    action per round on the already-checkpointed state. Exhausting
-    max_rounds without a fixed point raises (the recursive-CTE oracle
-    always computes the full closure, so returning unconverged labels
-    would be a silent parity divergence — ADVICE r2).
+    by its (count, BIT_XOR xxhash64(u,v)) fingerprint, the round's
+    `fixpoint` probe. Exhausting max_rounds without a fixed point
+    raises (the recursive-CTE oracle always computes the full closure,
+    so returning unconverged labels would be a silent parity
+    divergence — ADVICE r2).
 
     `stars_per_check` (r11, the checkpoint-granularity discipline):
     how many large+small star pairs run between checkpoint+fingerprint
@@ -324,45 +324,26 @@ def connected_components_with_rounds(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    # Lazy checkpoint + fingerprint fold (r14, VERDICT r13 next #5):
-    # localCheckpoint(eager=False) plans/truncates lineage immediately
-    # but materializes on the FIRST action — which is the convergence
-    # fingerprint aggregate right below it. One job per round now
-    # both writes the round's state blocks and reads the fingerprint,
-    # where the eager form paid a separate checkpoint action per round
-    # (2 actions/round → 1; rows, rounds and labels are bit-identical
-    # — the plan is unchanged, only when it runs).
-    state = (
+
+    def stars(state: DataFrame, _) -> DataFrame:
+        for _ in range(stars_per_check):
+            state = _small_star(_large_star(state))
+        return state
+
+    states, _ = fixpoint(
         edges_sym.filter(F.col("src") != F.col("dst"))
         .select(
             F.greatest("src", "dst").alias("u"),
             F.least("src", "dst").alias("v"),
         )
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        stars,
+        lambda s: s.agg(F.count(F.lit(1)), F.bit_xor(F.xxhash64("u", "v"))).first(),
+        lambda fp, prev: fp[0] == 0 or fp == prev,
+        max_rounds=max_rounds,
+        name="connected_components",
     )
-    fp = state.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.bit_xor(F.xxhash64("u", "v")).alias("s"),
-    ).first()
-    rounds = 0
-    converged = fp["n"] == 0
-    while not converged and rounds < max_rounds:
-        rounds += 1
-        s = state
-        for _ in range(stars_per_check):
-            s = _small_star(_large_star(s))
-        state = s.localCheckpoint(eager=False)
-        new_fp = state.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.bit_xor(F.xxhash64("u", "v")).alias("s"),
-        ).first()
-        converged = (new_fp["n"], new_fp["s"]) == (fp["n"], fp["s"])
-        fp = new_fp
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_rounds} rounds"
-        )
+    state = states[-1]
     labels = (
         verts.join(
             state.select(F.col("u").alias("vid"), F.col("v").alias("comp")),
@@ -371,7 +352,7 @@ def connected_components_with_rounds(
         )
         .select("vid", F.coalesce("comp", "vid").alias("comp"))
     )
-    return labels, rounds
+    return labels, len(states) - 1
 
 
 def neighbors_1hop(edges_sym: DataFrame, start: int) -> DataFrame:

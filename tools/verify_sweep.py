@@ -6,10 +6,15 @@ Writes the per-key result to VERIFY_SWEEP.json at the repo root — the
 committed full-surface artifact that complements the driver's
 CORRECTNESS_r{N}.json, which records only a 50-key prefix (VERDICT r4
 item 4)."""
-import importlib, json, sys, time, traceback
+import importlib, json, os, sys, time, traceback
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
+# The checkout this file lives in, not whatever copy is on sys.path.
+# Spark's Python workers (the pandas-UDF keys) import the engine from
+# the working directory, so the sweep runs from the checkout as well.
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+os.chdir(REPO)
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "tests"))
 
 from pyspark.sql import SparkSession
 
@@ -60,7 +65,7 @@ for key, fn in Q.items():
     results[key] = {"status": status, "seconds": round(time.time() - t0, 2)}
     print(f"  {key}: {status} [{results[key]['seconds']}s]", flush=True)
 
-with open("/root/repo/VERIFY_SWEEP.json", "w") as f:
+with open(os.path.join(REPO, "VERIFY_SWEEP.json"), "w") as f:
     json.dump(
         {
             "sf_dir": SF_ORACLE,
