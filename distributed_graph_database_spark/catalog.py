@@ -26,8 +26,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = "/root/testdata/sf0.001"
-
 # Sessions whose TZ this module has already had to override (warn once
 # per session, keyed by application id).
 _TZ_WARNED: set[str] = set()
@@ -92,7 +90,3 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         elif ts_type == "bigint":
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: table(spark, sf_dir, name) for name in TABLES}

@@ -122,18 +122,29 @@ def graph_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _copurchase_edges(spark, sf_dir)
 
 
-ORACLE_GRAPH_COPURCHASE = f"""
-WITH li0 AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-li AS (
+# The co-purchase graph as DuckDB CTEs — li0 → li (basket cap) → e
+# (p1 < p2 with n_orders ≥ COPURCHASE_MIN_ORDERS) — the one oracle
+# definition every co-purchase oracle below starts from. MATERIALIZED
+# because DuckDB may otherwise inline a CTE per reference and re-run
+# the lineitem self-join per use: the 21 graph oracles at sf0.1 took
+# 109 s with inlined copies and take 12 s materialized (4-core host).
+_COPURCHASE_CTE = f"""
+WITH li0 AS MATERIALIZED (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+li AS MATERIALIZED (
   SELECT l_orderkey, l_partkey FROM (
     SELECT *, COUNT(*) OVER (PARTITION BY l_orderkey) AS basket_n FROM li0
   ) WHERE basket_n <= {COPURCHASE_MAX_BASKET}
-)
-SELECT a.l_partkey AS p1, b.l_partkey AS p2, COUNT(*) AS n_orders
-FROM li a JOIN li b
-  ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-GROUP BY 1, 2
-HAVING COUNT(*) >= {COPURCHASE_MIN_ORDERS}
+),
+e AS MATERIALIZED (
+  SELECT a.l_partkey AS p1, b.l_partkey AS p2, COUNT(*) AS n_orders
+  FROM li a JOIN li b
+    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+  GROUP BY 1, 2
+  HAVING COUNT(*) >= {COPURCHASE_MIN_ORDERS}
+)"""
+
+ORACLE_GRAPH_COPURCHASE = f"""{_COPURCHASE_CTE}
+SELECT p1, p2, n_orders FROM e
 """
 
 
@@ -214,19 +225,7 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_GRAPH_TRIANGLES = f"""
-WITH li0 AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-li AS (
-  SELECT l_orderkey, l_partkey FROM (
-    SELECT *, COUNT(*) OVER (PARTITION BY l_orderkey) AS basket_n FROM li0
-  ) WHERE basket_n <= {COPURCHASE_MAX_BASKET}
-),
-e AS (
-  SELECT a.l_partkey AS p1, b.l_partkey AS p2
-  FROM li a JOIN li b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  GROUP BY 1, 2
-  HAVING COUNT(*) >= {COPURCHASE_MIN_ORDERS}
-),
+{_COPURCHASE_CTE},
 deg AS (
   SELECT v, COUNT(*) AS d
   FROM (SELECT p1 AS v FROM e UNION ALL SELECT p2 AS v FROM e)
@@ -306,19 +305,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _oracle_pagerank() -> str:
     base = f"""
-WITH li0 AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-li AS (
-  SELECT l_orderkey, l_partkey FROM (
-    SELECT *, COUNT(*) OVER (PARTITION BY l_orderkey) AS basket_n FROM li0
-  ) WHERE basket_n <= {COPURCHASE_MAX_BASKET}
-),
-e AS (
-  SELECT a.l_partkey AS p1, b.l_partkey AS p2
-  FROM li a JOIN li b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  GROUP BY 1, 2
-  HAVING COUNT(*) >= {COPURCHASE_MIN_ORDERS}
-),
+{_COPURCHASE_CTE},
 sym AS (SELECT p1 AS src, p2 AS dst FROM e
         UNION ALL SELECT p2 AS src, p1 AS dst FROM e),
 deg AS (SELECT src, COUNT(*) AS outdeg FROM sym GROUP BY src),
@@ -460,19 +447,7 @@ def _ppr_sparse(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
 
 def _oracle_ppr_multi() -> str:
     base = f"""
-WITH li0 AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-li AS (
-  SELECT l_orderkey, l_partkey FROM (
-    SELECT *, COUNT(*) OVER (PARTITION BY l_orderkey) AS basket_n FROM li0
-  ) WHERE basket_n <= {COPURCHASE_MAX_BASKET}
-),
-e AS (
-  SELECT a.l_partkey AS p1, b.l_partkey AS p2
-  FROM li a JOIN li b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  GROUP BY 1, 2
-  HAVING COUNT(*) >= {COPURCHASE_MIN_ORDERS}
-),
+{_COPURCHASE_CTE},
 sym AS (SELECT p1 AS src, p2 AS dst FROM e
         UNION ALL SELECT p2 AS src, p1 AS dst FROM e),
 deg AS (SELECT src, COUNT(*) AS outdeg FROM sym GROUP BY src),
@@ -597,19 +572,7 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _oracle_hits() -> str:
     base = f"""
-WITH li0 AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-li AS (
-  SELECT l_orderkey, l_partkey FROM (
-    SELECT *, COUNT(*) OVER (PARTITION BY l_orderkey) AS basket_n FROM li0
-  ) WHERE basket_n <= {COPURCHASE_MAX_BASKET}
-),
-e AS (
-  SELECT a.l_partkey AS p1, b.l_partkey AS p2
-  FROM li a JOIN li b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  GROUP BY 1, 2
-  HAVING COUNT(*) >= {COPURCHASE_MIN_ORDERS}
-),
+{_COPURCHASE_CTE},
 sym AS MATERIALIZED (SELECT p1 AS src, p2 AS dst FROM e
         UNION ALL SELECT p2 AS src, p1 AS dst FROM e),
 verts AS MATERIALIZED (SELECT DISTINCT src AS v FROM sym),
@@ -841,19 +804,7 @@ def _oracle_betweenness_multi() -> str:
     """Seed-batched unroll: the single-source oracle's CTE chain with
     a seed column threaded through every frontier/visited/σ/δ stage."""
     base = f"""
-WITH li0 AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-li AS (
-  SELECT l_orderkey, l_partkey FROM (
-    SELECT *, COUNT(*) OVER (PARTITION BY l_orderkey) AS basket_n FROM li0
-  ) WHERE basket_n <= {COPURCHASE_MAX_BASKET}
-),
-e AS (
-  SELECT a.l_partkey AS p1, b.l_partkey AS p2
-  FROM li a JOIN li b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  GROUP BY 1, 2
-  HAVING COUNT(*) >= {COPURCHASE_MIN_ORDERS}
-),
+{_COPURCHASE_CTE},
 sym AS MATERIALIZED (SELECT p1 AS src, p2 AS dst FROM e
         UNION ALL SELECT p2 AS src, p1 AS dst FROM e),
 sv AS (SELECT src AS s FROM (
@@ -998,19 +949,7 @@ def _oracle_closeness() -> str:
     without σ/δ), folded to per-level counts then the exact-integer
     closeness algebra."""
     base = f"""
-WITH li0 AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-li AS (
-  SELECT l_orderkey, l_partkey FROM (
-    SELECT *, COUNT(*) OVER (PARTITION BY l_orderkey) AS basket_n FROM li0
-  ) WHERE basket_n <= {COPURCHASE_MAX_BASKET}
-),
-e AS (
-  SELECT a.l_partkey AS p1, b.l_partkey AS p2
-  FROM li a JOIN li b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  GROUP BY 1, 2
-  HAVING COUNT(*) >= {COPURCHASE_MIN_ORDERS}
-),
+{_COPURCHASE_CTE},
 sym AS MATERIALIZED (SELECT p1 AS src, p2 AS dst FROM e
         UNION ALL SELECT p2 AS src, p1 AS dst FROM e),
 sv AS (SELECT src AS s FROM (
@@ -1054,19 +993,7 @@ FROM counts GROUP BY s"""
 
 def _oracle_betweenness() -> str:
     base = f"""
-WITH li0 AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-li AS (
-  SELECT l_orderkey, l_partkey FROM (
-    SELECT *, COUNT(*) OVER (PARTITION BY l_orderkey) AS basket_n FROM li0
-  ) WHERE basket_n <= {COPURCHASE_MAX_BASKET}
-),
-e AS (
-  SELECT a.l_partkey AS p1, b.l_partkey AS p2
-  FROM li a JOIN li b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  GROUP BY 1, 2
-  HAVING COUNT(*) >= {COPURCHASE_MIN_ORDERS}
-),
+{_COPURCHASE_CTE},
 sym AS MATERIALIZED (SELECT p1 AS src, p2 AS dst FROM e
         UNION ALL SELECT p2 AS src, p1 AS dst FROM e),
 sv AS (SELECT MIN(src) AS s FROM sym),
@@ -1114,19 +1041,7 @@ d{level} AS MATERIALIZED (
 
 def _oracle_ppr() -> str:
     base = f"""
-WITH li0 AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-li AS (
-  SELECT l_orderkey, l_partkey FROM (
-    SELECT *, COUNT(*) OVER (PARTITION BY l_orderkey) AS basket_n FROM li0
-  ) WHERE basket_n <= {COPURCHASE_MAX_BASKET}
-),
-e AS (
-  SELECT a.l_partkey AS p1, b.l_partkey AS p2
-  FROM li a JOIN li b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  GROUP BY 1, 2
-  HAVING COUNT(*) >= {COPURCHASE_MIN_ORDERS}
-),
+{_COPURCHASE_CTE},
 sym AS (SELECT p1 AS src, p2 AS dst FROM e
         UNION ALL SELECT p2 AS src, p1 AS dst FROM e),
 deg AS (SELECT src, COUNT(*) AS outdeg FROM sym GROUP BY src),
@@ -1214,19 +1129,7 @@ def _oracle_sssp() -> str:
     # co-purchase derivation at every unrolled round (measured 3.6s vs
     # 0.1s at sf0.01 — and exponential risk as rounds grow).
     base = f"""
-WITH li0 AS MATERIALIZED (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-li AS MATERIALIZED (
-  SELECT l_orderkey, l_partkey FROM (
-    SELECT *, COUNT(*) OVER (PARTITION BY l_orderkey) AS basket_n FROM li0
-  ) WHERE basket_n <= {COPURCHASE_MAX_BASKET}
-),
-e AS MATERIALIZED (
-  SELECT a.l_partkey AS p1, b.l_partkey AS p2, COUNT(*) AS n_orders
-  FROM li a JOIN li b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  GROUP BY 1, 2
-  HAVING COUNT(*) >= {COPURCHASE_MIN_ORDERS}
-),
+{_COPURCHASE_CTE},
 sym AS MATERIALIZED (SELECT p1 AS src, p2 AS dst, 1.0 / n_orders AS w FROM e
         UNION ALL SELECT p2, p1, 1.0 / n_orders FROM e),
 d0 AS MATERIALIZED (SELECT MIN(src) AS v, 0.0 AS dist FROM sym)"""
@@ -1328,19 +1231,7 @@ def _oracle_kcore() -> str:
     # co-purchase self-join) into BOTH join legs of every unrolled
     # round — measured 32s vs 0.1s at sf0.01, growing with round count.
     base = f"""
-WITH li0 AS MATERIALIZED (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-li AS MATERIALIZED (
-  SELECT l_orderkey, l_partkey FROM (
-    SELECT *, COUNT(*) OVER (PARTITION BY l_orderkey) AS basket_n FROM li0
-  ) WHERE basket_n <= {COPURCHASE_MAX_BASKET}
-),
-e AS MATERIALIZED (
-  SELECT a.l_partkey AS p1, b.l_partkey AS p2
-  FROM li a JOIN li b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  GROUP BY 1, 2
-  HAVING COUNT(*) >= {COPURCHASE_MIN_ORDERS}
-),
+{_COPURCHASE_CTE},
 sym AS MATERIALIZED (SELECT p1 AS src, p2 AS dst FROM e UNION ALL SELECT p2, p1 FROM e),
 alive0 AS MATERIALIZED (SELECT DISTINCT src AS v FROM sym)"""
     rounds = []
@@ -1419,19 +1310,7 @@ def graph_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_GRAPH_JACCARD = f"""
-WITH li0 AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-li AS (
-  SELECT l_orderkey, l_partkey FROM (
-    SELECT *, COUNT(*) OVER (PARTITION BY l_orderkey) AS basket_n FROM li0
-  ) WHERE basket_n <= {COPURCHASE_MAX_BASKET}
-),
-e AS (
-  SELECT a.l_partkey AS p1, b.l_partkey AS p2
-  FROM li a JOIN li b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  GROUP BY 1, 2
-  HAVING COUNT(*) >= {COPURCHASE_MIN_ORDERS}
-),
+{_COPURCHASE_CTE},
 deg AS (
   SELECT v, COUNT(*) AS d
   FROM (SELECT p1 AS v FROM e UNION ALL SELECT p2 AS v FROM e)
@@ -1521,19 +1400,7 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_GRAPH_ASSORTATIVITY = f"""
-WITH li0 AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-li AS (
-  SELECT l_orderkey, l_partkey FROM (
-    SELECT *, COUNT(*) OVER (PARTITION BY l_orderkey) AS basket_n FROM li0
-  ) WHERE basket_n <= {COPURCHASE_MAX_BASKET}
-),
-e AS (
-  SELECT a.l_partkey AS p1, b.l_partkey AS p2
-  FROM li a JOIN li b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  GROUP BY 1, 2
-  HAVING COUNT(*) >= {COPURCHASE_MIN_ORDERS}
-),
+{_COPURCHASE_CTE},
 sym AS (SELECT p1 AS src, p2 AS dst FROM e UNION ALL SELECT p2, p1 FROM e),
 deg AS (SELECT src AS v, CAST(COUNT(*) AS HUGEINT) AS d FROM sym GROUP BY src),
 xy AS (
@@ -1599,19 +1466,7 @@ def graph_clustering_coef(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_GRAPH_CLUSTERING_COEF = f"""
-WITH li0 AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-li AS (
-  SELECT l_orderkey, l_partkey FROM (
-    SELECT *, COUNT(*) OVER (PARTITION BY l_orderkey) AS basket_n FROM li0
-  ) WHERE basket_n <= {COPURCHASE_MAX_BASKET}
-),
-e AS (
-  SELECT a.l_partkey AS p1, b.l_partkey AS p2
-  FROM li a JOIN li b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  GROUP BY 1, 2
-  HAVING COUNT(*) >= {COPURCHASE_MIN_ORDERS}
-),
+{_COPURCHASE_CTE},
 deg AS (
   SELECT v, COUNT(*) AS d
   FROM (SELECT p1 AS v FROM e UNION ALL SELECT p2 AS v FROM e)
@@ -1703,19 +1558,7 @@ def graph_link_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_GRAPH_LINK_PREDICT = f"""
-WITH li0 AS MATERIALIZED (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-li AS MATERIALIZED (
-  SELECT l_orderkey, l_partkey FROM (
-    SELECT *, COUNT(*) OVER (PARTITION BY l_orderkey) AS basket_n FROM li0
-  ) WHERE basket_n <= {COPURCHASE_MAX_BASKET}
-),
-e AS MATERIALIZED (
-  SELECT a.l_partkey AS p1, b.l_partkey AS p2
-  FROM li a JOIN li b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  GROUP BY 1, 2
-  HAVING COUNT(*) >= {COPURCHASE_MIN_ORDERS}
-),
+{_COPURCHASE_CTE},
 sym AS MATERIALIZED (SELECT p1 AS src, p2 AS dst FROM e
                      UNION ALL SELECT p2, p1 FROM e),
 deg AS (SELECT src AS v, COUNT(*) AS d FROM sym GROUP BY src),
@@ -1812,19 +1655,7 @@ def label_propagation(sym: DataFrame, rounds: int = LPA_ROUNDS) -> DataFrame:
 
 def _build_oracle_lpa_base() -> str:
     base = f"""
-WITH li0 AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-li AS (
-  SELECT l_orderkey, l_partkey FROM (
-    SELECT *, COUNT(*) OVER (PARTITION BY l_orderkey) AS basket_n FROM li0
-  ) WHERE basket_n <= {COPURCHASE_MAX_BASKET}
-),
-e AS (
-  SELECT a.l_partkey AS p1, b.l_partkey AS p2
-  FROM li a JOIN li b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  GROUP BY 1, 2
-  HAVING COUNT(*) >= {COPURCHASE_MIN_ORDERS}
-),
+{_COPURCHASE_CTE},
 sym AS MATERIALIZED (SELECT p1 AS src, p2 AS dst FROM e
         UNION ALL SELECT p2 AS src, p1 AS dst FROM e),
 l0 AS MATERIALIZED (SELECT DISTINCT src AS v, src AS lbl FROM sym)"""
@@ -2035,19 +1866,8 @@ def _oracle_ktruss() -> str:
     # last round's support is computed over the (by then fixed) final
     # edge set, which is exactly what the Spark loop emits.
     base = f"""
-WITH li0 AS MATERIALIZED (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-li AS MATERIALIZED (
-  SELECT l_orderkey, l_partkey FROM (
-    SELECT *, COUNT(*) OVER (PARTITION BY l_orderkey) AS basket_n FROM li0
-  ) WHERE basket_n <= {COPURCHASE_MAX_BASKET}
-),
-e0 AS MATERIALIZED (
-  SELECT a.l_partkey AS p1, b.l_partkey AS p2
-  FROM li a JOIN li b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  GROUP BY 1, 2
-  HAVING COUNT(*) >= {COPURCHASE_MIN_ORDERS}
-),
+{_COPURCHASE_CTE},
+e0 AS MATERIALIZED (SELECT p1, p2 FROM e),
 sym0 AS MATERIALIZED (SELECT p1 AS src, p2 AS dst FROM e0
                       UNION ALL SELECT p2, p1 FROM e0)"""
     rounds = []
@@ -2143,19 +1963,7 @@ def graph_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _oracle_walks() -> str:
     base = f"""
-WITH li0 AS MATERIALIZED (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-li AS MATERIALIZED (
-  SELECT l_orderkey, l_partkey FROM (
-    SELECT *, COUNT(*) OVER (PARTITION BY l_orderkey) AS basket_n FROM li0
-  ) WHERE basket_n <= {COPURCHASE_MAX_BASKET}
-),
-e AS MATERIALIZED (
-  SELECT a.l_partkey AS p1, b.l_partkey AS p2
-  FROM li a JOIN li b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  GROUP BY 1, 2
-  HAVING COUNT(*) >= {COPURCHASE_MIN_ORDERS}
-),
+{_COPURCHASE_CTE},
 sym AS MATERIALIZED (SELECT p1, p2 FROM e
         UNION ALL SELECT p2 AS p1, p1 AS p2 FROM e),
 s0 AS (SELECT DISTINCT p1 AS start, p1 AS cur, CAST(p1 AS VARCHAR) AS walk

@@ -78,15 +78,6 @@ def derived_edges_sym(spark: SparkSession, sf_dir: str) -> DataFrame:
     return symmetrize(derived_edges(spark, sf_dir))
 
 
-def derived_vertices(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = derived_edges(spark, sf_dir)
-    return (
-        e.select(F.col("src").alias("vid"))
-        .unionByName(e.select(F.col("dst").alias("vid")))
-        .distinct()
-    )
-
-
 def default_start(spark: SparkSession, sf_dir: str) -> int:
     """Scalar action — one aggregate, not a driver-side loop."""
     row = table(spark, sf_dir, "orders").agg(F.min("o_orderkey")).first()

@@ -183,20 +183,23 @@ def bfs_order_from_levels(levels: DataFrame) -> DataFrame:
     )
 
 
-def bfs_tree(
-    spark: SparkSession, edges_sym: DataFrame, start: int, **kw
-) -> DataFrame:
-    """Deterministic traversal tree: (vid, level, parent) with
-    parent(v) = min-vid neighbor of v at level(v)-1 (start has none).
+def dfs_leaves(spark: SparkSession, edges_sym: DataFrame, start: int, **kw) -> DataFrame:
+    """R4 terminal-vertex set (dfs_bfs.h:71-77 `!tidx` test): reachable
+    vertices that parent no one in the deterministic traversal tree.
+    A start with no neighbors is its own terminal (FIXTURES.md G6).
     """
-    return bfs_tree_from_levels(bfs_levels(spark, edges_sym, start, **kw), edges_sym)
+    return dfs_leaves_from_levels(
+        bfs_levels(spark, edges_sym, start, **kw), edges_sym
+    )
 
 
-def bfs_tree_from_levels(lv: DataFrame, edges_sym: DataFrame) -> DataFrame:
+def dfs_leaves_from_levels(lv: DataFrame, edges_sym: DataFrame) -> DataFrame:
+    # Deterministic traversal tree (vid, level, parent): parent(v) is
+    # the min-vid neighbor of v at level(v)-1; the start has none.
     child = lv.alias("c")
     parent = lv.alias("p")
     e = edges_sym.alias("e")
-    tree = (
+    children = (
         child.join(e, F.col("c.vid") == F.col("e.dst"))
         .join(
             parent,
@@ -209,21 +212,7 @@ def bfs_tree_from_levels(lv: DataFrame, edges_sym: DataFrame) -> DataFrame:
     root = lv.filter(F.col("level") == 0).select(
         "vid", "level", F.lit(None).cast("bigint").alias("parent")
     )
-    return root.unionByName(tree)
-
-
-def dfs_leaves(spark: SparkSession, edges_sym: DataFrame, start: int, **kw) -> DataFrame:
-    """R4 terminal-vertex set (dfs_bfs.h:71-77 `!tidx` test): reachable
-    vertices that parent no one in the deterministic traversal tree.
-    A start with no neighbors is its own terminal (FIXTURES.md G6).
-    """
-    return dfs_leaves_from_levels(
-        bfs_levels(spark, edges_sym, start, **kw), edges_sym
-    )
-
-
-def dfs_leaves_from_levels(lv: DataFrame, edges_sym: DataFrame) -> DataFrame:
-    tree = bfs_tree_from_levels(lv, edges_sym)
+    tree = root.unionByName(children)
     parents = tree.filter(F.col("parent").isNotNull()).select(
         F.col("parent").alias("vid")
     )

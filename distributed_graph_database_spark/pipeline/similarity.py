@@ -172,31 +172,13 @@ def _cells(spark: SparkSession, sf_dir: str, n_cells: int = IVF_CELLS) -> DataFr
     )
 
 
-# Per-(session, sf_dir) corpus size backing the √N quantizer
+# Per-(session, sf_dir) corpus size backing the cells ∝ N quantizer
 # scaling: one COUNT action per session/sf (the sanctioned 1-row-seed
 # class, like derive.default_start), reused by every scaled key.
 def _corpus_n(spark: SparkSession, sf_dir: str) -> int:
     return memo(
         spark, sf_dir, "corpus_n", lambda: table(spark, sf_dir, "embeddings").count()
     )
-
-
-def scaled_cells(n: int, base: int) -> int:
-    """⌈√n⌉ floored at `base` — the √N coarse-quantizer cell count the
-    flat-assign builds used while declared (r8–r12; candidate work ≈
-    N²·probes/cells, so fixed cells measured exp 1.51 at the
-    sf0.1→sf1 10× step and √N restored ~linear candidate cost —
-    SCALE_PROBE.json, VERDICT r7 next #3). PROBE-ONLY since r13: the
-    declared ANN/dedup keys pin cells ∝ N behind _assign_2level
-    (VERDICT r12 next #1); this constant remains the flat probe
-    variants' knob. Integer isqrt so the value is exact; the double
-    GREATEST(base, CEIL(SQRT(n))) form the r8–r12 oracles used agrees
-    with integer isqrt for every n below 2^52 (cross-engine-swept to
-    2·10^5 plus perfect-square edges to 10^10 in
-    tests/test_r8_ops.py)."""
-    import math
-
-    return max(base, math.isqrt(max(n - 1, 0)) + 1 if n > 0 else 1)
 
 
 def _unit(df: DataFrame, col: str) -> DataFrame:
@@ -215,12 +197,9 @@ def _assign(
     vec_col: str,
     out: str,
     n: int,
-    unit: bool = False,
 ) -> DataFrame:
     """Nearest-n-centroid assignment by cosine; emits `out` = array of
-    cell ids (n=1 → corpus partitioning, n=NPROBE → query probes).
-    With `unit=True` both sides are already L2-normalized and the
-    score is a plain dot (one HOF eval per pair instead of three)."""
+    cell ids (n=1 → corpus partitioning, n=NPROBE → query probes)."""
     key = df.columns[0]
     if n == 1:
         # Argmax fast path (r14, guide §2.4 remove shuffles outright):
@@ -241,23 +220,14 @@ def _assign(
         carr = cells.agg(
             F.array_sort(
                 F.collect_list(
-                    F.struct(
-                        "cell_id",
-                        "cv",
-                        (
-                            F.lit(1.0) if unit else _norm("cv")
-                        ).alias("cvn"),
-                    )
+                    F.struct("cell_id", "cv", _norm("cv").alias("cvn"))
                 )
             ).alias("_ca")
         )
-        vn = F.lit(1.0) if unit else _norm(vec_col)
-        withv = df.crossJoin(F.broadcast(carr)).withColumn("_vn", vn)
+        withv = df.crossJoin(F.broadcast(carr)).withColumn("_vn", _norm(vec_col))
 
         def _step(acc, c):
-            s = _dot(F.col(vec_col), c["cv"])
-            if not unit:
-                s = s / (F.col("_vn") * c["cvn"])
+            s = _dot(F.col(vec_col), c["cv"]) / (F.col("_vn") * c["cvn"])
             return F.when(
                 s > acc["s"], F.struct(s.alias("s"), c["cell_id"].alias("c"))
             ).otherwise(acc)
@@ -271,9 +241,7 @@ def _assign(
             _step,
         )
         return withv.withColumn(out, F.array(best["c"])).drop("_ca", "_vn")
-    sim = _dot(F.col(vec_col), F.col("cv"))
-    if not unit:
-        sim = sim / (_norm(vec_col) * _norm("cv"))
+    sim = _dot(F.col(vec_col), F.col("cv")) / (_norm(vec_col) * _norm("cv"))
     # NARROW the rank window (r12, the sf10 ingest-probe fix): the
     # crossJoin must see the vector to score it, but only
     # (key, cell_id, sim) enters the exchange + sort feeding
@@ -369,17 +337,23 @@ def _dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     so unlike hash-LSH this blocked dedup has an EXACT DuckDB oracle
     replaying the routing tree.
 
-    r13 (VERDICT r12 next #1): the DECLARED build is re-pinned to the
+    r13 (VERDICT r12 next #1): the build is pinned to the
     deployment-scale quantizer — cells ∝ N (max(DEDUP_CELLS,
     N // TREE_OCC), per-cell occupancy ≈ TREE_OCC) routed by the
-    two-level tree (_assign_2level). The r8 √N flat assign, whose
-    pair build measured exp 1.40 sf1→sf10 (240 s at sf10 — the
-    N·cells assign dots ARE the superlinear term), is retained
-    probe-only as _dedup_embed_flat; the tree build measured exp
+    two-level tree (_assign_2level). The r8–r12 build assigned every
+    vector flat against √N cells: N·cells assign dots, N^1.5, measured
+    exp 1.40 sf1→sf10 (240 s at sf10). The tree build measured exp
     0.70 at 59.3 s sf10 with the blocking-recall trade quantified in
     SCALE_PROBE_SF10_INGEST.json `dedup_pair_quality` (tree pairs
     99.8% a subset of flat's at sf10; precision stays exact — every
     emitted pair is cosine-verified inside the join).
+
+    Vectors and cells are normalized once up front, so routing and
+    every pairwise cosine are single dots (the HOF aggregate, ~10µs
+    per eval, is the unit of cost). Verifying INSIDE the join
+    projection filters candidates to survivors before any further
+    shuffle — dedupe-then-verify shuffles |candidates| × 2d doubles
+    and measured 10x slower at sf0.1.
 
     100 TB notes: per-cell occupancy is CONSTANT (≈TREE_OCC), so the
     per-cell verify join is linear in N; the corpus is
@@ -387,74 +361,13 @@ def _dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition's work; nothing corpus-proportional is broadcast (the
     only broadcast inside _assign_2level is the √cells coarse table).
     """
-    n = _corpus_n(spark, sf_dir)
-    return _dedup_embed_2level(
-        spark, sf_dir, n_cells=max(DEDUP_CELLS, n // TREE_OCC)
-    )
-
-
-def _dedup_embed_flat(
-    spark: SparkSession, sf_dir: str, n_cells: int | None = None
-) -> DataFrame:
-    """PROBE-ONLY since r13: the r8 √N flat-assign pair build the
-    declared key used through r12 (kept so the ingest probes can keep
-    A/B-ing regimes — tools/ingest_probe_r12.py). Superlinear at scale:
-    the flat assign is N·cells dot products, N^1.5 at cells = √N
-    (measured exp 1.40 sf1→sf10, SCALE_PROBE_SF10_INGEST.json), which
-    is why it was demoted from the declared key (VERDICT r12 #1).
-    """
-    # Normalize once per vector up front: the cell assignment and every
-    # pairwise cosine become single dots (the HOF aggregate is the unit
-    # of cost here — ~10µs/eval — so evaluating it once per pair
-    # instead of three times is a 3x on the quadratic term). Verify
-    # INSIDE the join projection so candidates are filtered to
-    # survivors before any further shuffle — the naive shape (dedupe
-    # candidates carrying both vectors, then verify) shuffles
-    # |candidates| × 2d doubles and was measured 10x slower at sf0.1.
-    if n_cells is None:
-        n_cells = scaled_cells(_corpus_n(spark, sf_dir), DEDUP_CELLS)
-    emb = _spread_scan(spark, _unit(_embeddings(spark, sf_dir), "v"))
-    cells = _unit(_cells(spark, sf_dir, n_cells), "cv")
-    blocked = (
-        _assign(emb, cells, "v", "cells", DEDUP_PROBES, unit=True)
-        .select("vec_id", F.col("v").alias("nv"), F.explode("cells").alias("cell_id"))
-        .localCheckpoint(eager=True)  # tiny (2N rows); eager so the
-        # self-join's two branches both read the materialized copy (a
-        # lazy checkpoint is computed per-branch within the first job)
-    )
-    a, b = blocked.alias("a"), blocked.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.cell_id") == F.col("b.cell_id"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-            _dot(F.col("a.nv"), F.col("b.nv")).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= EMBED_COSINE_T)
-        .dropDuplicates(["vec_a", "vec_b"])
-        .select("vec_a", "vec_b", F.round("cosine", 6).alias("cosine"))
-    )
-
-
-def _dedup_embed_2level(
-    spark: SparkSession, sf_dir: str, n_cells: int
-) -> DataFrame:
-    """dedup_embed's pair build on the two-level quantizer
-    (_assign_2level), parameterized by cell count (the declared key
-    pins cells ∝ N; probes override): blocking via DEDUP_PROBES fine
-    cells reached through COARSE_PROBES coarse groups, then the same
-    per-cell verify join as the flat build. See
-    SCALE_PROBE_SF10_INGEST.json."""
+    n_cells = max(DEDUP_CELLS, _corpus_n(spark, sf_dir) // TREE_OCC)
     emb = _spread_scan(spark, _unit(_embeddings(spark, sf_dir), "v"))
     cells = _unit(_cells(spark, sf_dir, n_cells), "cv")
     blocked = (
         _assign_2level(spark, emb, cells, DEDUP_PROBES, n_cells)
         .select("vec_id", F.col("v").alias("nv"), "cell_id")
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=True)  # both self-join branches read it
     )
     a, b = blocked.alias("a"), blocked.alias("b")
     return (
@@ -1040,10 +953,9 @@ def _sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     N // TREE_OCC), per-cell occupancy ≈ TREE_OCC) routed by the
     two-level tree (_assign_2level), the shape measured at sf10 as
     56.8 s / exponent 0.20 with recall@5 = 1.0 on both probe decks
-    (SCALE_PROBE_SF10_INGEST.json). The r8 √N flat assign the key
-    used through r12 measured exp 1.53 sf1→sf10 (462 s at sf10 — the
-    N·cells assign dots are N^1.5 at cells = √N) and is retained
-    probe-only as _sim_knn_graph_flat.
+    (SCALE_PROBE_SF10_INGEST.json). The r8–r12 build assigned every
+    vector flat against √N cells and measured exp 1.53 sf1→sf10
+    (462 s at sf10 — the N·cells assign dots are N^1.5 at cells = √N).
 
     Shape: each vector routes into its KNN_PROBES nearest fine cells
     through COARSE_PROBES coarse anchors (the rn=1 cell doubles as
@@ -1064,68 +976,6 @@ def _sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = _corpus_n(spark, sf_dir)
     return _sim_knn_graph_2level(
         spark, sf_dir, max(IVF_CELLS, n // TREE_OCC)
-    )
-
-
-def _sim_knn_graph_flat(
-    spark: SparkSession, sf_dir: str, n_cells: int | None = None
-) -> DataFrame:
-    """PROBE-ONLY since r13: the r8–r12 √N flat-assign kNN build
-    (kept so tools/ingest_probe_r12.py keeps A/B-ing regimes).
-    Superlinear at scale — the flat assign is N·cells dot products,
-    N^1.5 at cells = √N: measured sf1→sf10 exponent 1.53 / 462 s at
-    sf10 (SCALE_PROBE_SF10_INGEST.json), which is why it was demoted
-    from the declared key (VERDICT r12 #1). The narrow rank window
-    (only (vec_id, cell_id, sim) rides the exchange + sort; v rejoins
-    by vec_id after the top-P filter) is the r12 fix that removed the
-    49 GB sort-payload spill the wide form hit at sf10."""
-    if n_cells is None:
-        n_cells = scaled_cells(_corpus_n(spark, sf_dir), IVF_CELLS)
-    emb = _spread_scan(spark, _unit(_embeddings(spark, sf_dir), "v"))
-    cells = _unit(_cells(spark, sf_dir, n_cells), "cv")
-    w_cell = Window.partitionBy("vec_id").orderBy(
-        F.col("sim").desc(), F.col("cell_id")
-    )
-    # Narrow rank window (r12): only (vec_id, cell_id, sim) rides the
-    # exchange + sort; v rejoins by vec_id after the top-P filter.
-    # The wide form carried the 64-dim array through N·cells sorted
-    # rows — at sf10 ≈ 49 GB of sort payload (spills), the measured
-    # residual that pushed the sf1→sf10 build exponent to 1.68 over
-    # the N^1.5 candidate model (SCALE_PROBE_SF10_INGEST.json A/B).
-    assigned = (
-        emb.crossJoin(F.broadcast(cells))
-        .select("vec_id", "cell_id", _dot(F.col("v"), F.col("cv")).alias("sim"))
-        .withColumn("rn", F.row_number().over(w_cell))
-        .filter(F.col("rn") <= KNN_PROBES)
-        .select("vec_id", "cell_id", "rn")
-        .join(emb, "vec_id")
-        .select("vec_id", "v", "cell_id", "rn")
-        .localCheckpoint(eager=True)  # KNN_PROBES·N tiny rows; both
-        # branches of the self-join below read the materialized copy
-    )
-    home = assigned.filter(F.col("rn") == 1).select("vec_id", "v", "cell_id")
-    probes = assigned.select(
-        F.col("vec_id").alias("src_id"),
-        F.col("v").alias("sv"),
-        "cell_id",
-    )
-    scored = (
-        probes.join(home, "cell_id")
-        .filter(F.col("vec_id") != F.col("src_id"))
-        .withColumn("cosine", _dot(F.col("sv"), F.col("v")))
-    )
-    w = Window.partitionBy("src_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= KNN_K)
-        .select(
-            "src_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "rank",
-            F.round("cosine", 6).alias("cosine"),
-        )
     )
 
 
@@ -1151,8 +1001,8 @@ cells AS (
 ),
 ng AS (
   -- n_coarse from the ACTUAL cell count (matches the Spark side's
-  -- n_cells); FLOOR(SQRT(double)) agrees with integer isqrt
-  -- for every count below 2^26 (see scaled_cells)
+  -- n_cells); FLOOR(SQRT(double)) agrees with _n_coarse's integer
+  -- isqrt for every count below 2^52
   SELECT GREATEST(4, CAST(FLOOR(SQRT(CAST(COUNT(*) AS DOUBLE)))
                           AS BIGINT)) AS g
   FROM cells
@@ -1206,7 +1056,7 @@ FROM ranked WHERE rank <= {KNN_K}
 def _knn_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The KNN_SAMPLE_CAP vec_ids with the smallest md5 (the
     corpus_sample idiom) — the deterministic absolute-size recall
-    sample shared by sim_knn_recall and the ingest probe."""
+    sample of the kNN recall audits."""
     return (
         _embeddings(spark, sf_dir)
         .select("vec_id", F.md5(F.col("vec_id").cast("string")).alias("h"))
@@ -1219,9 +1069,7 @@ def _knn_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _knn_exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact per-sample top-KNN_K → (src_id, neighbor_id): the CAP ×
     corpus exact side of the recall audit (broadcast sample, one
-    linear corpus scan). Extracted so the ingest probe can build it
-    ONCE per sf and score several index variants against it
-    (tools/ingest_probe_r12.py).
+    linear corpus scan).
 
     Session-shared since r13 (the dedup pair-table rule): THREE
     declared keys consume this exact CAP×corpus pass — sim_knn_recall,
@@ -1256,6 +1104,15 @@ def _knn_exact_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _n_coarse(n_cells: int) -> int:
+    """Coarse anchor count of the two-level quantizer: max(4, ⌊√cells⌋).
+    The oracles' GREATEST(4, FLOOR(SQRT(CAST(n AS DOUBLE)))) agrees
+    with this integer isqrt for every n below 2^52."""
+    import math
+
+    return max(4, math.isqrt(n_cells))
+
+
 def _assign_2level(
     spark: SparkSession,
     emb: DataFrame,
@@ -1273,10 +1130,11 @@ def _assign_2level(
     the production escalation past that regime is a deeper tree,
     same recurrence.)
 
-    Level 1: the first ⌈√cells⌉ fine cells double as coarse anchors;
-    every fine cell routes to its nearest anchor (cells × √cells
-    dots). Level 2: each vector routes into its COARSE_PROBES nearest
-    anchors, then ranks only the fine cells living in those groups.
+    Level 1: the first _n_coarse(cells) fine cells double as coarse
+    anchors; every fine cell routes to its nearest anchor (cells ×
+    √cells dots). Level 2: each vector routes into its COARSE_PROBES
+    nearest anchors, then ranks only the fine cells living in those
+    groups.
     Since r13 this IS the declared keys' quantizer (VERDICT r12 next
     #1); everything — pinned centroids, sim-desc/grp/cell_id
     tie-breaks — is deterministic, so the DuckDB oracles replay it
@@ -1291,12 +1149,9 @@ def _assign_2level(
     nothing corpus-proportional is ever pinned driver-side. n_cells
     is passed by the caller (all callers already know it), not
     re-counted."""
-    import math as _math
-
-    n_coarse = max(4, _math.isqrt(n_cells))
     coarse = (
         cells.orderBy("cell_id")
-        .limit(n_coarse)
+        .limit(_n_coarse(n_cells))
         .select(F.col("cell_id").alias("grp"), F.col("cv").alias("gv"))
         .localCheckpoint(eager=True)
     )
@@ -1350,10 +1205,10 @@ def _sim_knn_graph_2level(
     spark: SparkSession, sf_dir: str, n_cells: int
 ) -> DataFrame:
     """kNN graph built on the two-level quantizer (_assign_2level),
-    parameterized by cell count (the declared key pins cells ∝ N;
-    probes override); everything downstream of assignment (home/probe
-    split, per-cell candidate join, top-K rank) is the same candidate
-    topology the flat build used. Measured in
+    parameterized by cell count (the declared key pins cells ∝ N);
+    everything downstream of assignment (home/probe split, per-cell
+    candidate join, top-K rank) is the candidate topology the r8–r12
+    flat √N build used. Measured in
     SCALE_PROBE_SF10_INGEST.json: with cells = N/50 this build is
     56.8 s at sf10 vs 462 s for the √N flat build — 8× cheaper
     ABSOLUTE — at recall@5 = 1.0 on both probe decks."""

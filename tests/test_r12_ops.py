@@ -227,14 +227,10 @@ def test_sim_knn_graph_tree_declared_key_laws(spark, sf_oracle):
 def test_dedup_embed_tree_laws(spark, sf_oracle):
     """The declared dedup pair build (tree quantizer — the PRIMARY
     since r13): every emitted pair is a genuine near-dup (cosine >=
-    threshold), ordered vec_a < vec_b, no duplicates; the
-    dedup_embed_tree alias returns the identical artifact; and the
-    pair set largely overlaps the flat probe variant's (different
-    routing can only co-block fewer or different candidates — every
-    COMMON pair must carry the identical cosine)."""
+    threshold), ordered vec_a < vec_b, no duplicates; and the
+    dedup_embed_tree alias returns the identical artifact."""
     from distributed_graph_database_spark.pipeline.similarity import (
         EMBED_COSINE_T,
-        _dedup_embed_flat,
         dedup_embed,
         dedup_embed_tree,
     )
@@ -252,14 +248,6 @@ def test_dedup_embed_tree_laws(spark, sf_oracle):
         (r.vec_a, r.vec_b) for r in dedup_embed_tree(spark, sf_oracle).collect()
     }
     assert alias == seen, "dedup_embed_tree must alias the primary artifact"
-    flat = {
-        (r.vec_a, r.vec_b): r.cosine
-        for r in _dedup_embed_flat(spark, sf_oracle).collect()
-    }
-    common = [r for r in rows if (r.vec_a, r.vec_b) in flat]
-    assert common, "tree and flat blockings share no pairs?"
-    for r in common:
-        assert abs(flat[(r.vec_a, r.vec_b)] - r.cosine) < 1e-9
 
 
 def test_bench_setup_rejects_unknown_line_items(spark, sf_oracle):

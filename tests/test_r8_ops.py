@@ -41,37 +41,26 @@ def test_betweenness_multi_seed_count_and_positivity(spark, sf_smoke):
         assert r.betweenness >= 0.0
 
 
-def test_scaled_cells_matches_duckdb_ceil_sqrt_everywhere():
-    """The Spark side computes the per-corpus cell count with integer
-    isqrt; the oracles compute GREATEST(base, CEIL(SQRT(n))) in double.
-    The two must agree for every corpus size (the docstring's claim
-    that double sqrt can't misround near integers at these
-    magnitudes) — sweep all n ≤ 200k plus perfect squares and their
-    neighbors up to 10^10."""
+def test_coarse_anchor_count_matches_duckdb_floor_sqrt_everywhere():
+    """_assign_2level takes max(4, isqrt(n_cells)) coarse anchors; the
+    oracles replay it as GREATEST(4, FLOOR(SQRT(n))) in double. The two
+    must agree for every cell count (double sqrt must not misround next
+    to a perfect square at these magnitudes) — sweep all n ≤ 200k plus
+    perfect squares and their neighbors up to 10^10."""
     import duckdb
 
-    from distributed_graph_database_spark.pipeline.similarity import (
-        scaled_cells,
-    )
+    from distributed_graph_database_spark.pipeline.similarity import _n_coarse
 
-    con = duckdb.connect()
-    rows = con.execute(
-        "SELECT n, GREATEST(1, CAST(CEIL(SQRT(n)) AS BIGINT)) "
-        "FROM range(1, 200001) t(n)"
+    rule = "GREATEST(4, CAST(FLOOR(SQRT(CAST(n AS DOUBLE))) AS BIGINT))"
+    edge = [k * k + d for k in (10**3, 10**4, 10**5, 99991) for d in (-1, 0, 1)]
+    rows = duckdb.connect().execute(
+        f"SELECT n, {rule} FROM range(0, 200001) t(n) "
+        f"UNION ALL SELECT n, {rule} FROM (SELECT UNNEST(?) AS n)",
+        [edge],
     ).fetchall()
+    assert len(rows) == 200001 + len(edge)
     for n, want in rows:
-        assert scaled_cells(n, 1) == want, n
-    edge = []
-    for k in (10**3, 10**4, 10**5, 99991):
-        for d in (-1, 0, 1):
-            edge.append(k * k + d)
-    got = con.execute(
-        "SELECT n, GREATEST(1, CAST(CEIL(SQRT(n)) AS BIGINT)) FROM "
-        "(SELECT UNNEST(?) AS n)", [edge]
-    ).fetchall()
-    for n, want in got:
-        assert scaled_cells(n, 1) == want, n
-    assert scaled_cells(500, 16) == 23 and scaled_cells(500, 64) == 64
+        assert _n_coarse(n) == want, n
 
 
 def test_ivfpq_dominated_by_ivf_recall(spark, sf_smoke):

@@ -1,14 +1,20 @@
-"""Regenerate PLANS.md: formatted physical plans of the headline
-queries with scale commentary. Run from the repo root:
+"""Regenerate the checkout's PLANS.md: formatted physical plans of the
+headline queries with scale commentary.
 
     python tools/dump_plans.py [sf_dir]
 """
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, ".")
+# The checkout this file lives in, not whatever copy is on sys.path.
+# Spark's Python workers (the pandas-UDF keys) import the engine from
+# the working directory, so the tool runs from the checkout as well.
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+os.chdir(REPO)
+sys.path.insert(0, REPO)
 
 from distributed_graph_database_spark import cache, registry  # noqa: E402
 from distributed_graph_database_spark.session import get_spark  # noqa: E402

@@ -22,8 +22,12 @@ import os
 import sys
 from contextlib import redirect_stdout
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
+# The checkout this file lives in, not whatever copy is on sys.path.
+# Spark's Python workers (the pandas-UDF keys) import the engine from
+# the working directory, so the tool runs from the checkout as well.
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+os.chdir(REPO)
+sys.path.insert(0, REPO)
 
 from distributed_graph_database_spark import cache, registry  # noqa: E402
 from distributed_graph_database_spark.session import get_spark  # noqa: E402
@@ -33,7 +37,7 @@ def main() -> int:
     rnd, stage, keys = sys.argv[1], sys.argv[2], sys.argv[3:]
     assert stage in ("before", "after"), "stage must be before|after"
     sf_dir = os.environ["SPARK_GRAFT_SF_DIR"]
-    out_dir = os.path.join(ROOT, "plans", rnd)
+    out_dir = os.path.join(REPO, "plans", rnd)
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(f"dgdb-explain-{rnd}")
     spark.sparkContext.setLogLevel("ERROR")

@@ -23,7 +23,8 @@ Shape preservation notes:
 
 Usage: python tools/gen_sf.py [--mult 10] [--src /root/testdata/sf0.1]
                               [--out /tmp/dgdb_sf1]
-Deterministic (no RNG anywhere); safe to re-run (overwrites).
+Relative paths resolve against the checkout. Deterministic (no RNG
+anywhere); safe to re-run (overwrites).
 """
 
 from __future__ import annotations
@@ -34,7 +35,12 @@ import os
 import shutil
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+# The checkout this file lives in, not whatever copy is on sys.path.
+# Spark's Python workers import the engine from the working
+# directory, so the tool runs from the checkout as well.
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+os.chdir(REPO)
+sys.path.insert(0, REPO)
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F

@@ -10,6 +10,7 @@ separately per SF, mirroring bench.py's steady-state methodology.
 
 Usage: python tools/scale_probe.py [--small /root/testdata/sf0.1]
          [--big /tmp/dgdb_sf1] [--ratio 10] [--out SCALE_PROBE.json]
+Relative paths resolve against the checkout.
 """
 
 from __future__ import annotations
@@ -20,7 +21,12 @@ import math
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+# The checkout this file lives in, not whatever copy is on sys.path.
+# Spark's Python workers (the pandas-UDF keys) import the engine from
+# the working directory, so the tool runs from the checkout as well.
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+os.chdir(REPO)
+sys.path.insert(0, REPO)
 
 
 def main() -> int:

@@ -18,7 +18,12 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+# The checkout this file lives in, not whatever copy is on sys.path.
+# Spark's Python workers (the pandas-UDF keys) import the engine from
+# the working directory, so the tool runs from the checkout as well.
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+os.chdir(REPO)
+sys.path.insert(0, REPO)
 
 
 def main() -> int:
