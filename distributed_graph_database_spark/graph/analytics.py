@@ -1681,24 +1681,16 @@ l{k} AS MATERIALIZED (
     return base + "".join(rounds)
 
 
-_ORACLE_LPA_BASE = None  # filled lazily below
+# The WITH chain shared by the communities and modularity oracles
+# (ends after l{LPA_ROUNDS}; callers append their own CTEs/SELECT).
+_ORACLE_LPA_CTE = _build_oracle_lpa_base()
 
 
 def _oracle_communities() -> str:
     return (
-        _oracle_communities_cte()
+        _ORACLE_LPA_CTE
         + f"\nSELECT v AS vid, lbl AS community FROM l{LPA_ROUNDS}"
     )
-
-
-def _oracle_communities_cte() -> str:
-    """The WITH chain shared by the communities and modularity oracles
-    (ends after l{LPA_ROUNDS}; callers append their own CTEs/SELECT)."""
-    global _ORACLE_LPA_BASE
-    if _ORACLE_LPA_BASE is None:
-        _ORACLE_LPA_BASE = _build_oracle_lpa_base()
-    return _ORACLE_LPA_BASE
-
 
 
 def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1776,7 +1768,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _oracle_modularity() -> str:
     return (
-        _oracle_communities_cte()
+        _ORACLE_LPA_CTE
         + f""",
 comm AS MATERIALIZED (SELECT v AS vid, lbl AS community FROM l{LPA_ROUNDS}),
 deg AS (SELECT src, COUNT(*) AS d FROM sym GROUP BY src),

@@ -367,18 +367,10 @@ def _read_result(spark: SparkSession, op: int, gid: str, rseq: int) -> DataFrame
     from .graph import traversal
 
     edges = fixtures.edges_as_of(gid, rseq)
-    # The edge set is a fixture constant, so symmetrize in Python and
-    # ship it as ONE slice AT CREATION — a default createDataFrame
-    # parallelizes into defaultParallelism (32) pickled slices, and a
-    # later coalesce(1) is the WORST repair: its single task walks all
-    # 32 parent partitions through sequential Python-worker reads
-    # (measured ~4 s per action vs 0.2 s for a 1-slice frame). Real
-    # stores hand the traversal an already-partitioned edge frame;
-    # this path is the fixture-constant analogue.
+    # The edge set is a fixture constant: symmetrize it in Python and
+    # hand the traversal a driver-held frame.
     sym_rows = sorted({(s, d) for s, d in edges} | {(d, s) for s, d in edges})
-    sym = spark.createDataFrame(
-        spark.sparkContext.parallelize(sym_rows, 1), "src bigint, dst bigint"
-    )
+    sym = traversal.local_frame(spark, sym_rows, "src bigint, dst bigint")
     lv = traversal.bfs_levels(
         spark, sym, READ_START_VERTEX, cache_edges=False
     )

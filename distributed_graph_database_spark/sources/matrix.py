@@ -13,10 +13,12 @@ Reference lineage (SURVEY.md §2.1 R1-R3):
 Spark-first shape: matrix files are ingested with `wholetext` (one row
 per file — a graph's matrix is one record by construction), then two
 `posexplode` steps unpack row lines and row cells entirely JVM-side.
-Per-file parallelism scales to millions of graph files; no driver-side
-parsing of matrix contents ever happens. The canonical store is
-parquet partitioned by graph_id, so "modify graph G" rewrites exactly
-one partition while readers elsewhere see an atomic swap.
+Per-file parallelism scales to millions of graph files. The parsed edge
+rows reach the driver only when a traversal of a reference-sized graph
+collects them (`graph.traversal.LOCAL_READ_MAX_EDGES`): that read scans
+the directory in one task. The canonical store is parquet partitioned
+by graph_id, so "modify graph G" rewrites exactly one partition while
+readers elsewhere see an atomic swap.
 """
 
 from __future__ import annotations

@@ -1,0 +1,214 @@
+"""The driver-side read path of graph/traversal.py.
+
+A graph whose edge frame fits LOCAL_READ_MAX_EDGES rows is traversed in
+Python after one bounded read. Two things are pinned here:
+
+- the law: on every input the local path returns what the distributed
+  kernel returns — levels rows, `bfs_order` strings, DFS leaves and the
+  refusal message. The kernel is forced by setting the gate to 0, which
+  sends every non-empty edge frame down the distributed path;
+- the cost: a read shaped like the benchmark's serve read (matrix dir →
+  `symmetrize` → `bfs_levels(validate=True)` → formatter) runs at most
+  1 Spark job for BFS, 2 for DFS and 1 for a refused start.
+"""
+
+from __future__ import annotations
+
+import itertools
+import random
+from concurrent.futures import ThreadPoolExecutor
+
+import pytest
+from pyspark.sql import functions as F
+
+from distributed_graph_database_spark import fixtures
+from distributed_graph_database_spark.graph import derive, traversal
+from distributed_graph_database_spark.sources import matrix
+
+_tags = itertools.count()
+
+
+def _edge_frame(spark, rows):
+    return traversal.local_frame(spark, rows, "src bigint, dst bigint")
+
+
+def _sym_rows(edges):
+    """symmetrize() in Python: both directions, a self-loop once."""
+    return [(s, d) for s, d in edges] + [(d, s) for s, d in edges if s != d]
+
+
+def _read(spark, rows, start, **kw):
+    """(levels rows, bfs_order, DFS leaves) — or the refusal message."""
+    edges = _edge_frame(spark, rows)
+    try:
+        lv = traversal.bfs_levels(spark, edges, start, cache_edges=False, **kw)
+    except ValueError as e:
+        return str(e)
+    return (
+        sorted((r.vid, r.level) for r in lv.collect()),
+        traversal.bfs_order_from_levels(lv).collect()[0][0],
+        sorted(r.vid for r in traversal.dfs_leaves_from_levels(lv, edges).collect()),
+    )
+
+
+def _both(spark, monkeypatch, cases):
+    """Each case (edge rows, start, bfs_levels kwargs) read on both paths
+    → (local answers, distributed answers). The distributed reads, each
+    dozens of tiny jobs, run four at a time to share the driver's cores."""
+    local = [_read(spark, rows, start, **kw) for rows, start, kw in cases]
+    with monkeypatch.context() as m, ThreadPoolExecutor(4) as pool:
+        m.setattr(traversal, "LOCAL_READ_MAX_EDGES", 0)
+        distributed = list(
+            pool.map(lambda case: _read(spark, case[0], case[1], **case[2]), cases)
+        )
+    return local, distributed
+
+
+def _tree(rng, vids):
+    """A random recursive tree over vids (each vertex hangs off an
+    earlier one)."""
+    return [(vids[i], rng.choice(vids[:i])) for i in range(1, len(vids))]
+
+
+def _case(seed):
+    """One seeded graph → (symmetric rows, start, bfs_levels kwargs).
+    Kinds rotate: tree, forest, tree plus cycles, self-loops, duplicate
+    rows, isolated vertices (half of those validate the start); a
+    third of the cases cut max_levels."""
+    rng = random.Random(seed)
+    n = rng.randint(1, 14)
+    vids = rng.sample(range(1, 40), n)
+    kind = seed % 6
+    if kind == 1 and n > 2:  # forest: two trees
+        cut = rng.randint(1, n - 1)
+        edges = _tree(rng, vids[:cut]) + _tree(rng, vids[cut:])
+    else:
+        edges = _tree(rng, vids)
+    if kind == 2:  # cycles: several min-vid parent candidates
+        edges += [tuple(rng.sample(vids, 2)) for _ in range(n // 2) if n > 1]
+    if kind == 3:  # self-loops
+        edges += [(v, v) for v in rng.sample(vids, rng.randint(1, n))]
+    rows = _sym_rows(edges)
+    if kind == 4:  # duplicate rows
+        rows += rng.choices(rows, k=len(rows) // 2 + 1) if rows else []
+    start = rng.choice(vids)
+    if kind == 5:  # isolated vertices: the start may be one of them
+        start = rng.choice(vids + [40 + i for i in range(3)])
+    rng.shuffle(rows)
+    kw = {"max_levels": rng.randint(0, 3)} if seed % 3 == 0 else {}
+    if kind == 5:
+        kw["validate"] = rng.random() < 0.5
+    return rows, start, kw
+
+
+def test_local_read_equals_kernel_on_fixture_graphs(spark, monkeypatch):
+    cases = [
+        (_sym_rows(edges), start, {})
+        for n, edges in fixtures.FIXTURE_GRAPHS.values()
+        for start in range(1, n + 1)
+    ]
+    local, distributed = _both(spark, monkeypatch, cases)
+    assert local == distributed
+
+
+def test_local_read_equals_kernel_on_seeded_graphs(spark, monkeypatch):
+    cases = [_case(seed) for seed in range(200)]
+    local, distributed = _both(spark, monkeypatch, cases)
+    for case, got, want in zip(cases, local, distributed):
+        assert got == want, case
+
+
+@pytest.mark.parametrize("validate", [True, False])
+def test_absent_start_is_refused_or_alone_on_both_paths(spark, monkeypatch, validate):
+    rows = _sym_rows(fixtures.FIXTURE_GRAPHS["G5"][1])
+    (local,), (distributed,) = _both(
+        spark, monkeypatch, [(rows, 99, {"validate": validate})]
+    )
+    assert local == distributed
+    if validate:
+        assert local == traversal.START_NOT_PRESENT_MSG
+    else:
+        assert local == ([(99, 0)], "99", [99])
+
+
+def test_max_levels_below_depth_cuts_both_paths(spark, monkeypatch):
+    path = [(v, v + 1) for v in range(1, 9)]  # depth 8 from vertex 1
+    (local,), (distributed,) = _both(
+        spark, monkeypatch, [(_sym_rows(path), 1, {"max_levels": 3})]
+    )
+    assert local == distributed
+    assert local[0] == [(1, 0), (2, 1), (3, 2), (4, 3)]
+    assert local[2] == [4]
+
+
+def test_gate_sends_larger_frames_to_the_kernel(spark, monkeypatch):
+    """One row over the gate: the levels are a distributed frame, and
+    they still equal the local answer."""
+    path = _sym_rows([(v, v + 1) for v in range(1, 6)])
+    small = traversal.bfs_levels(spark, _edge_frame(spark, path), 1)
+    monkeypatch.setattr(traversal, "LOCAL_READ_MAX_EDGES", len(path) - 1)
+    large = traversal.bfs_levels(spark, _edge_frame(spark, path), 1)
+    assert small.isLocal() and not large.isLocal()
+    assert sorted(small.collect()) == sorted(large.collect())
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs run by fn under a fresh job group (a ValueError is a
+    refused read, not a failure)."""
+    sc = spark.sparkContext
+    tag = f"test-local-read-{next(_tags)}"
+    sc.setJobGroup(tag, tag)
+    try:
+        fn()
+    except ValueError as e:
+        assert str(e) == traversal.START_NOT_PRESENT_MSG
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(tag))
+
+
+# Jobs per serve-shaped read: the bounded read, plus one more bounded
+# read for the DFS formatter's edges. AQE can move a count by one, so
+# the test takes the lower of two calls.
+READ_JOB_CEILINGS = {"bfs": 1, "dfs": 2, "refused": 1}
+
+
+@pytest.mark.parametrize("kind", sorted(READ_JOB_CEILINGS))
+def test_serve_read_job_ceiling(spark, tmp_path, kind):
+    catalog = matrix.write_fixture_matrix_files(str(tmp_path))
+
+    def read():
+        edges = (
+            matrix.parse_matrix_dir(spark, catalog)
+            .filter(F.col("graph_id") == "G5")
+            .select("src", "dst")
+        )
+        sym = derive.symmetrize(edges)
+        start = 99 if kind == "refused" else 1
+        lv = traversal.bfs_levels(spark, sym, start, cache_edges=False, validate=True)
+        if kind == "dfs":
+            return traversal.dfs_leaves_from_levels(lv, sym).collect()
+        return traversal.bfs_order_from_levels(lv).collect()
+
+    counts = [_jobs(spark, read) for _ in range(2)]
+    assert min(counts) <= READ_JOB_CEILINGS[kind], (kind, counts)
+
+
+def test_read_without_arrow_keeps_one_slice_and_answers(spark):
+    """Spark's default session has Arrow off: the rows then ship as one
+    slice (not defaultParallelism pickled ones) and the formatters take
+    their Spark plans, with the same answers."""
+    rows = _sym_rows(fixtures.FIXTURE_GRAPHS["G5"][1])
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        edges = _edge_frame(spark, rows)
+        assert edges.rdd.getNumPartitions() == 1 and not edges.isLocal()
+        assert _read(spark, rows, 1) == (
+            [(1, 0), (2, 1), (3, 1), (4, 1), (5, 2)], "1 2 3 4 5", [2, 4, 5]
+        )
+    finally:
+        spark.conf.set(key, before)

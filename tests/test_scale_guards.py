@@ -116,7 +116,9 @@ def test_frontier_broadcast_gate_is_bytes_based(spark, monkeypatch):
     monkeypatch.setattr(traversal, "BROADCAST_FRONTIER_MAX_BYTES", 0)
     assert traversal._frontier_probe(fr, frontier_rows=10) is fr
 
-    # Functional: shuffle-join fallback produces identical levels.
+    # Functional: shuffle-join fallback produces identical levels (the
+    # graph is small enough for the driver-side read, so close that gate).
+    monkeypatch.setattr(traversal, "LOCAL_READ_MAX_EDGES", 0)
     edges = spark.createDataFrame(
         [(a, b) for a, b in [(0, 1), (1, 2), (2, 3), (1, 4)]],
         "src bigint, dst bigint",

@@ -131,9 +131,12 @@ def test_bfs_validate_rejects_unknown_start(spark):
     assert got == BFS_GOLDEN[("G1", 1)]
 
 
-def test_bfs_order_plan_is_bounded(spark):
+def test_bfs_order_plan_is_bounded(spark, monkeypatch):
     """The formatter aggregates over orderBy+limit (per-partition
-    heaps), not an unbounded single-task collect (VERDICT r1 #2)."""
+    heaps), not an unbounded single-task collect (VERDICT r1 #2).
+    G1 fits the driver-side read, so the gate is closed to reach the
+    distributed formatter this pins."""
+    monkeypatch.setattr(traversal, "LOCAL_READ_MAX_EDGES", 0)
     plan = (
         traversal.bfs_order(spark, graph_edges_sym(spark, "G1"), 1)
         ._jdf.queryExecution().executedPlan().toString()

@@ -1,11 +1,12 @@
 """Per-change oracle-parity check for the r13 optimization loop.
 
 Runs the named keys against their DuckDB oracles with the SAME
-canonical compare the round driver uses (tests/oracle_harness), at one
-or more SF dirs. Exits non-zero on any mismatch.
+canonical compare the round driver uses (tests/oracle_harness), at the
+parquet dir SPARK_GRAFT_SF_DIR (required) names. Exits non-zero on any
+mismatch.
 
 Usage:
-    python tools/check_keys_r13.py --keys k1 k2 ... [--sf sf0.01 sf0.1]
+    SPARK_GRAFT_SF_DIR=<sf dir> python tools/check_keys_r13.py --keys k1 k2 ...
 """
 
 from __future__ import annotations
@@ -27,8 +28,8 @@ sys.path.insert(0, os.path.join(REPO, "tests"))
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--keys", nargs="+", required=True)
-    ap.add_argument("--sf", nargs="+", default=["sf0.01", "sf0.1"])
     args = ap.parse_args()
+    sf_dir = os.environ["SPARK_GRAFT_SF_DIR"]
 
     import __spark_entry__ as entry_mod
     from oracle_harness import assert_parity
@@ -38,16 +39,14 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     Q, O = entry_mod.queries(), entry_mod.oracle_sql()
     n_fail = 0
-    for sf in args.sf:
-        sf_dir = f"/root/testdata/{sf}"
-        for key in args.keys:
-            t0 = time.time()
-            try:
-                assert_parity(Q[key](spark, sf_dir), O[key], sf_dir, key)
-                print(f"OK   {sf} {key} ({time.time() - t0:.1f}s)", flush=True)
-            except Exception as exc:
-                n_fail += 1
-                print(f"FAIL {sf} {key}: {exc}", flush=True)
+    for key in args.keys:
+        t0 = time.time()
+        try:
+            assert_parity(Q[key](spark, sf_dir), O[key], sf_dir, key)
+            print(f"OK   {key} ({time.time() - t0:.1f}s)", flush=True)
+        except Exception as exc:
+            n_fail += 1
+            print(f"FAIL {key}: {exc}", flush=True)
     print(f"done: {n_fail} failures")
     return 1 if n_fail else 0
 

@@ -1,7 +1,7 @@
 """Regenerate the checkout's PLANS.md: formatted physical plans of the
 headline queries with scale commentary.
 
-    python tools/dump_plans.py [sf_dir]
+    SPARK_GRAFT_SF_DIR=<sf dir> python tools/dump_plans.py
 """
 
 from __future__ import annotations
@@ -391,7 +391,7 @@ HEADLINERS: dict[str, str] = {
 
 
 def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    sf_dir = os.environ["SPARK_GRAFT_SF_DIR"]
     spark = get_spark("dump-plans")
     out = [
         "# PLANS — physical-plan audit of the headline queries",

@@ -21,8 +21,8 @@ Shape preservation notes:
   exact driver testdata layout (parquet row groups keep scan
   parallelism; the streaming staging shim copies the file by path).
 
-Usage: python tools/gen_sf.py [--mult 10] [--src /root/testdata/sf0.1]
-                              [--out /tmp/dgdb_sf1]
+Usage: SPARK_GRAFT_SF_DIR=<source sf dir> python tools/gen_sf.py
+                              [--mult 10] [--out /tmp/dgdb_sf1]
 Relative paths resolve against the checkout. Deterministic (no RNG
 anywhere); safe to re-run (overwrites).
 """
@@ -161,27 +161,27 @@ def _write_single_file(df: DataFrame, out_dir: str, tbl: str) -> None:
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--mult", type=int, default=10)
-    ap.add_argument("--src", default="/root/testdata/sf0.1")
     ap.add_argument("--out", default="/tmp/dgdb_sf1")
     args = ap.parse_args()
+    src = os.environ["SPARK_GRAFT_SF_DIR"]
 
     from distributed_graph_database_spark.session import get_spark
 
     spark = get_spark("dgdb-gen-sf")
     spark.sparkContext.setLogLevel("ERROR")
     os.makedirs(args.out, exist_ok=True)
-    strides = _strides(spark, args.src)
+    strides = _strides(spark, src)
     print(f"strides: {strides}")
 
     for tbl in FIXED:
         shutil.copy(
-            os.path.join(args.src, f"{tbl}.parquet"),
+            os.path.join(src, f"{tbl}.parquet"),
             os.path.join(args.out, f"{tbl}.parquet"),
         )
         print(f"{tbl}: copied (fixed dimension)")
 
     for tbl in OFFSETS:
-        src_df = spark.read.parquet(os.path.join(args.src, f"{tbl}.parquet"))
+        src_df = spark.read.parquet(os.path.join(src, f"{tbl}.parquet"))
         out_df = _replica(src_df, tbl, 0, strides)
         for i in range(1, args.mult):
             out_df = out_df.unionByName(_replica(src_df, tbl, i, strides))

@@ -1,6 +1,7 @@
 """100×-scale dry run (VERDICT r6 item 8): time every declared key at
-two scale factors (default sf0.1 and the gen_sf.py-produced sf1) in
-one session, and report the per-key scaling exponent
+two scale factors (SPARK_GRAFT_SF_DIR, required, and the
+gen_sf.py-produced sf1) in one session, and report the per-key scaling
+exponent
 
     exponent = log(t_big / t_small) / log(data_ratio)
 
@@ -8,7 +9,7 @@ one session, and report the per-key scaling exponent
 superlinear — the 100 TB red flag. Setup/cache fills are billed
 separately per SF, mirroring bench.py's steady-state methodology.
 
-Usage: python tools/scale_probe.py [--small /root/testdata/sf0.1]
+Usage: SPARK_GRAFT_SF_DIR=<small sf dir> python tools/scale_probe.py
          [--big /tmp/dgdb_sf1] [--ratio 10] [--out SCALE_PROBE.json]
 Relative paths resolve against the checkout.
 """
@@ -31,7 +32,6 @@ sys.path.insert(0, REPO)
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--small", default="/root/testdata/sf0.1")
     ap.add_argument("--big", default="/tmp/dgdb_sf1")
     ap.add_argument("--ratio", type=float, default=10.0)
     ap.add_argument("--out", default="SCALE_PROBE.json")
@@ -64,7 +64,8 @@ def main() -> int:
         if args.setup_items
         else None
     )
-    for name, sf_dir in (("small", args.small), ("big", args.big)):
+    small = os.environ["SPARK_GRAFT_SF_DIR"]
+    for name, sf_dir in (("small", small), ("big", args.big)):
         setup = bench.run_setup(spark, sf_dir, only=only)
         timings, failures = bench.time_keys(spark, sf_dir, keys)
         legs[name] = {"sf_dir": sf_dir, "setup": setup,

@@ -4,9 +4,10 @@ Mirrors bench.py methodology exactly (same session factory, same
 warm-up, same noop-sink materialization, setup items billed
 separately) but runs only the named keys, repeating each --reps times
 so run-to-run noise is visible. Prints one JSON line.
+SPARK_GRAFT_SF_DIR (required) names the parquet dir.
 
 Usage:
-    python tools/time_keys_r13.py --keys k1 k2 ... [--reps 2]
+    SPARK_GRAFT_SF_DIR=<sf dir> python tools/time_keys_r13.py --keys k1 k2 ... [--reps 2]
         [--setup-items a,b,c | --all-setup]
 """
 
@@ -34,7 +35,7 @@ def main() -> int:
     ap.add_argument("--all-setup", action="store_true")
     args = ap.parse_args()
 
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = os.environ["SPARK_GRAFT_SF_DIR"]
 
     import bench
     from distributed_graph_database_spark.session import get_spark

@@ -1,6 +1,7 @@
 """Fresh-process driver-contract sweep: entry() smoke at sf0.001, then
 every queries() key vs its oracle_sql() at sf0.01 via the same
 canonical compare the round driver uses (tests/oracle_harness).
+SPARK_GRAFT_SF_DIR (required) names the sf0.01 parquet dir.
 
 Writes the per-key result to VERIFY_SWEEP.json at the repo root — the
 committed full-surface artifact that complements the driver's
@@ -20,7 +21,7 @@ from pyspark.sql import SparkSession
 
 from oracle_harness import assert_parity
 
-SF_ORACLE = "/root/testdata/sf0.01"
+SF_ORACLE = os.environ["SPARK_GRAFT_SF_DIR"]
 
 m = importlib.import_module("__spark_entry__")
 spark = (
