@@ -286,18 +286,15 @@ def _setup_items() -> list:
         # per session — Q11 consumed it 3× per run before this,
         # VERDICT r9 item 1).
         ("partsupp_agg", relational._partsupp_shared, ["ql_sql_q2", "ql_sql_q11"]),
-        # The two-pool threaded serve behind ops_concurrent_replay —
-        # requests execute once when they arrive; downstream scans
-        # read the served results (see the key's docstring).
+        # The readers-writers serve (primary applying writes while the
+        # secondaries read AS-OF states) — requests execute once when
+        # they arrive; ops_concurrent_full and its read rows,
+        # ops_concurrent_replay, read the served results.
         (
-            "concurrent_replay_serve",
-            ops_mod.ops_concurrent_replay,
-            ["ops_concurrent_replay"],
+            "concurrent_full_serve",
+            ops_mod.ops_concurrent_full,
+            ["ops_concurrent_full", "ops_concurrent_replay"],
         ),
-        # The full readers-writers serve (primary applying writes
-        # while the secondaries read AS-OF states) — same serving-
-        # layer rule: each arriving request executes once.
-        ("concurrent_full_serve", ops_mod.ops_concurrent_full, ["ops_concurrent_full"]),
         # stream_late_data's three-file arrival timeline (per-session
         # staging write, like stream_source_stage). Serves nothing (r10
         # review finding): it only stages the three SOURCE files —

@@ -15,6 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .session import local_frame
+
 # graph_id -> (n_vertices, undirected edges stored once with src <= dst;
 # src == dst is a self-loop, stored once)
 FIXTURE_GRAPHS: dict[str, tuple[int, list[tuple[int, int]]]] = {
@@ -72,7 +74,7 @@ def valid_ops() -> list[tuple[int, int, str]]:
     """Pure-Python closed form of the R10 validity verdict over
     OPS_LOG — the same rule ops._annotated_log expresses in DataFrame
     algebra (tests/test_ops.py pins the two implementations equal).
-    Needed driver-side by ops_concurrent_replay, whose request list is
+    Needed driver-side by ops_concurrent_full, whose request list is
     a fixture constant, never data-derived."""
     pre = set(FIXTURE_GRAPHS)
     created: dict[str, int] = {}
@@ -90,19 +92,6 @@ def valid_ops() -> list[tuple[int, int, str]]:
             continue
         out.append((seq, op, gid))
     return out
-
-
-def edges_as_of(graph_id: str, read_seq: int) -> list[tuple[int, int]]:
-    """Edge state of ``graph_id`` visible to a read at ``read_seq``:
-    the payload of the last valid write below it, else the fixture
-    state (the snapshot store's AS-OF rule, in fixture-constant
-    form)."""
-    writes = [
-        s for s, op, g in valid_ops() if g == graph_id and op <= 2 and s < read_seq
-    ]
-    if writes:
-        return WRITE_PAYLOADS[max(writes)][1]
-    return FIXTURE_GRAPHS[graph_id][1]
 
 
 # Edge/node-granular modify deltas (the spec's FULL op-2 semantics:
@@ -145,8 +134,9 @@ GRAPH_DELTAS: list[tuple[int, str, str, str, int, int]] = [
 
 
 def graph_deltas_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(GRAPH_DELTAS, 1),
+    return local_frame(
+        spark,
+        GRAPH_DELTAS,
         "seq bigint, graph_id string, kind string, action string, "
         "a bigint, b bigint",
     )
@@ -173,27 +163,17 @@ def fixture_edges_rows() -> list[tuple[str, int, int]]:
 
 
 def fixture_vertices_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(fixture_vertices_rows(), 1),
-        "graph_id string, vid bigint",
-    )
+    return local_frame(spark, fixture_vertices_rows(), "graph_id string, vid bigint")
 
 
 def fixture_edges_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(fixture_edges_rows(), 1),
-        "graph_id string, src bigint, dst bigint",
+    return local_frame(
+        spark, fixture_edges_rows(), "graph_id string, src bigint, dst bigint"
     )
 
 
 def ops_log_df(spark: SparkSession) -> DataFrame:
-    # 1-slice at creation: constant frames as 32 pickled slices cost
-    # 32 near-empty Python partition reads per action (ops.py
-    # _read_result documents the measured pathology)
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(OPS_LOG, 1),
-        "seq bigint, op int, graph_id string",
-    )
+    return local_frame(spark, OPS_LOG, "seq bigint, op int, graph_id string")
 
 
 def existing_graph_ids() -> list[str]:
@@ -252,9 +232,8 @@ def write_payload_rows() -> list[tuple[int, int, int]]:
 
 
 def write_payloads_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(write_payload_rows(), 1),
-        "seq bigint, src bigint, dst bigint",
+    return local_frame(
+        spark, write_payload_rows(), "seq bigint, src bigint, dst bigint"
     )
 
 

@@ -47,10 +47,10 @@ from __future__ import annotations
 
 from functools import reduce
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .iterate import fixpoint
 
 # Broadcast the frontier while its estimated serialized size is below
@@ -169,24 +169,6 @@ def bfs_levels(
     finally:
         if cache_edges:
             edges_sym.unpersist()
-
-
-def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
-    """Driver-held rows as a frame that collects with no Spark job.
-
-    pandas-backed under Arrow (the engine session enables it), so it is
-    a LocalRelation: `isLocal()` is True. A list-backed
-    `createDataFrame` is an RDD and costs a job per action. Without
-    Arrow (Spark's default) no such frame exists, so the rows go out
-    as one RDD slice: a pandas or list frame would be pickled into
-    defaultParallelism slices, and the one-task prefix read walks them
-    all through Python workers (~4 s per action at 32 slices). Such a
-    frame is not local, so the formatters take their Spark plans.
-    """
-    if spark.conf.get("spark.sql.execution.arrow.pyspark.enabled").lower() != "true":
-        return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-    names = [field.split()[0] for field in schema.split(",")]
-    return spark.createDataFrame(pd.DataFrame(rows, columns=names), schema)
 
 
 def _edge_prefix(edges_sym: DataFrame) -> list[tuple[int, int]]:

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from . import fixtures
 from .cache import memo, shared, stage_dir
+from .session import local_frame
 
 _REJECT_BAD_OP = "bad_op"
 _REJECT_EXISTS = "exists"
@@ -36,11 +37,8 @@ _REJECT_MISSING = "missing"
 def _annotated_log(spark: SparkSession) -> DataFrame:
     """Ops log + per-row validity verdict (the R10 predicate set)."""
     log = fixtures.ops_log_df(spark)
-    pre = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(g,) for g in fixtures.existing_graph_ids()], 1
-        ),
-        "graph_id string",
+    pre = local_frame(
+        spark, [(g,) for g in fixtures.existing_graph_ids()], "graph_id string"
     ).withColumn("pre_existing", F.lit(True))
 
     # Earliest op-1 per non-fixture graph = its creation seq.
@@ -154,11 +152,8 @@ def _snapshot_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so fixtures.WRITE_PAYLOADS loudly rejects empty payloads and
     # this check rejects missing ones.
     pay = fixtures.write_payloads_df(spark)
-    payload_seqs = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(s,) for s in fixtures.WRITE_PAYLOADS], 1
-        ),
-        "seq bigint",
+    payload_seqs = local_frame(
+        spark, [(s,) for s in fixtures.WRITE_PAYLOADS], "seq bigint"
     )
     n_orphan = writes.join(
         F.broadcast(payload_seqs), "seq", "left_anti"
@@ -354,36 +349,11 @@ def ops_graph_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 # so results are constants). Interpolated into the oracle too.
 READ_START_VERTEX = 1
 
-# Wall-clock (start, end) of each request's execution, per server —
-# written by the serving threads, read by the concurrency test
-# (tests/test_ops.py asserts the two secondaries' intervals overlap).
-_REPLAY_INTERVALS: dict[str, list[tuple[float, float]]] = {}
-
-
-def _read_result(spark: SparkSession, op: int, gid: str, rseq: int) -> DataFrame:
-    """One secondary-server read: BFS level order (op 4) or DFS
-    terminal vertices (op 3) over the graph state AS-OF the request's
-    sequence number, formatted the reference's way (R9, one string)."""
-    from .graph import traversal
-
-    edges = fixtures.edges_as_of(gid, rseq)
-    # The edge set is a fixture constant: symmetrize it in Python and
-    # hand the traversal a driver-held frame.
-    sym_rows = sorted({(s, d) for s, d in edges} | {(d, s) for s, d in edges})
-    sym = traversal.local_frame(spark, sym_rows, "src bigint, dst bigint")
-    lv = traversal.bfs_levels(
-        spark, sym, READ_START_VERTEX, cache_edges=False
-    )
-    return _format_read(op, lv, sym)
-
-
 def _format_read(op: int, lv: DataFrame, sym: DataFrame) -> DataFrame:
     """The reference's single-string read formatting (R9) over a
     traversal's levels frame: op 4 → BFS level order, op 3 → DFS
     terminal vertices, both under the BFS_ORDER_MAX_VERTICES cap that
-    the oracle mirrors (ADVICE r9 #3). ONE definition shared by every
-    read path (_read_result and the concurrent-full serve) so the cap
-    and format can never drift between them (r10 review finding)."""
+    the oracle mirrors (ADVICE r9 #3)."""
     from .graph import traversal
 
     if op == 4:
@@ -403,112 +373,11 @@ def _format_read(op: int, lv: DataFrame, sym: DataFrame) -> DataFrame:
     )
 
 
-def ops_concurrent_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inter-query parallelism — the reference's thread-per-request
-    serving loop (primary_server.c:270-281, secondary_server.c:335-346;
-    SURVEY §4.2 "inter-query parallelism", deferred r1–r8) made
-    physical: the ops log's valid reads are split by the parity router
-    (R8) into the two secondaries' batches, and each batch is served
-    by its own Python thread inside its own FAIR scheduler pool
-    ("secondary_1"/"secondary_2" — spark.scheduler.pool local
-    property, pools on demand, session.py sets
-    spark.scheduler.mode=FAIR). Each request executes the REAL
-    traversal kernels (R4/R5) against the graph state AS-OF its
-    sequence number and formats the reference's single-string output
-    (R9) → (seq, op, graph_id, server, result), one row per valid
-    read, merged deterministically — scheduling policy affects WHEN
-    jobs run, never the answer, so the key hash-checks like any other.
-
-    Threading notes: pyspark.InheritableThread keeps scheduler-pool /
-    job-group local properties per Python thread (pinned-thread mode);
-    each request's tiny result is localCheckpoint-ed in its serving
-    thread, so the traversal jobs are attributed to that server's pool
-    and job group (the test reads them back via statusTracker). On a
-    FIFO session the pool property is a no-op and results are
-    identical. At scale this is exactly two analysts sharing one
-    engine: per-pool fair shares bound each other's latency, and the
-    concurrency is load-bearing (total wall-clock ≈ max, not sum, of
-    the two batches).
-
-    The served result set is memoized per (session, sf_dir) via
-    cache.shared and the serve is a bench setup line item
-    (`concurrent_replay_serve`): a serving layer executes each
-    arriving request ONCE — re-replaying the whole log per downstream
-    scan is not the deployment shape. The concurrency claim is tested
-    on the UNCACHED serve (_concurrent_replay_serve) via
-    _REPLAY_INTERVALS + statusTracker job groups."""
-    return shared(
-        spark, sf_dir, "ops_concurrent_replay",
-        lambda: _concurrent_replay_serve(spark, sf_dir),
-    )
-
-
-def _concurrent_replay_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The actual two-pool threaded serve (see ops_concurrent_replay).
-
-    The serving threads rendezvous on a barrier before their first
-    request (ADVICE r9 #4): request batches "arrive together", so the
-    measured wall-clock intervals test concurrency capability rather
-    than thread-start scheduling luck."""
-    import threading
-    import time
-
-    from pyspark import InheritableThread
-
-    reads = [(s, op, g) for s, op, g in fixtures.valid_ops() if op >= 3]
-    batches: dict[str, list[tuple[int, int, str]]] = {
-        "secondary_1": [r for r in reads if r[0] % 2 == 1],
-        "secondary_2": [r for r in reads if r[0] % 2 == 0],
-    }
-    results: dict[int, DataFrame] = {}
-    errors: list[BaseException] = []
-
-    start_gate = threading.Barrier(len(batches))
-
-    def serve(server: str, reqs: list[tuple[int, int, str]]) -> None:
-        sc = spark.sparkContext
-        sc.setLocalProperty("spark.scheduler.pool", server)
-        sc.setJobGroup(f"replay-{server}", "ops_concurrent_replay reads")
-        ivals: list[tuple[float, float]] = []
-        try:
-            start_gate.wait(timeout=30)
-            for rseq, op, gid in reqs:
-                t0 = time.monotonic()
-                row = _read_result(spark, op, gid, rseq).select(
-                    F.lit(rseq).cast("bigint").alias("seq"),
-                    F.lit(op).cast("int").alias("op"),
-                    F.lit(gid).alias("graph_id"),
-                    F.lit(server).alias("server"),
-                    "result",
-                )
-                results[rseq] = row.localCheckpoint(eager=True)
-                ivals.append((t0, time.monotonic()))
-        except BaseException as exc:  # surfaced after join — a dead
-            errors.append(exc)        # thread must not yield a silent
-        finally:                      # partial result set
-            _REPLAY_INTERVALS[server] = ivals
-
-    threads = [
-        InheritableThread(target=serve, args=(srv, reqs))
-        for srv, reqs in batches.items()
-    ]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    if errors:
-        raise errors[0]
-    out = None
-    for rseq in sorted(results):
-        out = results[rseq] if out is None else out.unionByName(results[rseq])
-    return out
-
-
-# Wall-clock observability for ops_concurrent_full's readers-writers
-# claim (the _REPLAY_INTERVALS discipline): per-server request
-# intervals, plus the apply-completion instant of every write so the
-# test can prove a dependent read finished AFTER the write it waited
-# for.
+# Wall-clock observability for ops_concurrent_full's concurrency
+# claims: per-server (start, end) request intervals, written by the
+# serving threads, plus the apply-completion instant of every write so
+# the test can prove a dependent read finished AFTER the write it
+# waited for (tests/test_ops.py).
 _FULL_INTERVALS: dict[str, list[tuple[float, float]]] = {}
 _FULL_APPLIED_AT: dict[int, float] = {}
 
@@ -516,16 +385,18 @@ _FULL_APPLIED_AT: dict[int, float] = {}
 def ops_concurrent_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The COMPLETE readers-writers architecture of the reference
     (primary_server.c:62-107,270-281 + secondary_server.c:335-346;
-    VERDICT r9 item 4 — ops_concurrent_replay served only the read
-    half): a PRIMARY thread applies the ops log's valid writes in seq
-    order as immutable versioned partition APPENDS to a parquet
-    snapshot store, WHILE the two secondary threads serve the
-    parity-routed reads — each read blocks until the store holds every
-    write below its seq (the seq-ordered visibility the reference's
-    writer lock enforced), then runs the real R4/R5 kernel over the
-    partition-pruned AS-OF store state. → (seq, op, graph_id, server,
-    result): write acks as 'v{version} edges={n}', read rows identical
-    to ops_concurrent_replay's.
+    SURVEY §4.2 "inter-query parallelism"): a PRIMARY thread applies
+    the ops log's valid writes in seq order as immutable versioned
+    partition APPENDS to a parquet snapshot store, WHILE the two
+    secondary threads serve the reads the parity router (R8) sends
+    them — each read blocks until the store holds every write below
+    its seq (the seq-ordered visibility the reference's writer lock
+    enforced), then runs the real R4/R5 kernel over the
+    partition-pruned AS-OF store state and formats the reference's
+    single-string output (R9). → (seq, op, graph_id, server, result):
+    write acks as 'v{version} edges={n}', one row per valid read,
+    merged in seq order — scheduling policy affects WHEN jobs run,
+    never the answer, so the key hash-checks like any other.
 
     This is the lock dissolved into structure: writers only ever ADD
     (graph_id, seq) partitions, so readers never see a torn state —
@@ -537,10 +408,23 @@ def ops_concurrent_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     three pools are arbitrary writer/reader concurrency — nothing in
     the shape is fixture-bound.
 
-    Memoized per (session, sf_dir) like ops_concurrent_replay (bench
-    setup item `concurrent_full_serve`); the concurrency claims are
-    tested on the uncached serve via _FULL_INTERVALS/_FULL_APPLIED_AT
-    + statusTracker job groups."""
+    Threading: each server is a pyspark.InheritableThread in its own
+    FAIR scheduler pool ("primary", "secondary_1", "secondary_2" —
+    the spark.scheduler.pool local property; session.py sets
+    spark.scheduler.mode=FAIR) and job group, and each request's
+    result is materialized in its serving thread, so its jobs are
+    attributed to that server. The threads rendezvous on a barrier
+    before their first request (ADVICE r9 #4): request batches
+    "arrive together", so the measured intervals test concurrency
+    rather than thread-start luck. On a FIFO session the pool
+    property is a no-op and results are identical.
+
+    The served result set is memoized per (session, sf_dir) via
+    cache.shared and the serve is a bench setup line item
+    (`concurrent_full_serve`): a serving layer executes each arriving
+    request ONCE. The concurrency claims are tested on the uncached
+    serve via _FULL_INTERVALS/_FULL_APPLIED_AT + statusTracker job
+    groups."""
     return shared(
         spark, sf_dir, "ops_concurrent_full",
         lambda: _concurrent_full_serve(spark, sf_dir),
@@ -568,8 +452,8 @@ def _concurrent_full_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     #   store holds every write below my seq" is a global watermark
     #   condition, which is what each read blocks on;
     # as_of = last valid write below the read's seq FOR ITS GRAPH —
-    #   the partition the read actually scans (edges_as_of / the
-    #   oracle's as_of CTE rule).
+    #   the partition the read actually scans (the oracle's as_of CTE
+    #   rule).
     wait_for = {
         rs: max((ws for ws, _, _ in writes if ws < rs), default=0)
         for rs, _, _ in reads
@@ -582,9 +466,9 @@ def _concurrent_full_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     store = stage_dir(spark, sf_dir, "ops_concfull")
 
     def _edges_frame(gid: str, seq: int, edges) -> DataFrame:
-        rows = [(gid, seq, s, d) for s, d in edges]
-        return spark.createDataFrame(
-            spark.sparkContext.parallelize(rows, 1),
+        return local_frame(
+            spark,
+            [(gid, seq, s, d) for s, d in edges],
             "graph_id string, seq bigint, src bigint, dst bigint",
         )
 
@@ -624,11 +508,9 @@ def _concurrent_full_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).parquet(store)
                 version = version_of.get(gid, 0) + 1
                 version_of[gid] = version
-                row = spark.createDataFrame(
-                    spark.sparkContext.parallelize(
-                        [(wseq, op, gid, "primary",
-                          f"v{version} edges={len(edges)}")], 1
-                    ),
+                row = local_frame(
+                    spark,
+                    [(wseq, op, gid, "primary", f"v{version} edges={len(edges)}")],
                     "seq bigint, op int, graph_id string, "
                     "server string, result string",
                 )
@@ -717,6 +599,16 @@ def _concurrent_full_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     for seq in sorted(results):
         out = results[seq] if out is None else out.unionByName(results[seq])
     return out
+
+
+def ops_concurrent_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Inter-query parallelism, read half: the valid reads of
+    ops_concurrent_full's serve → (seq, op, graph_id, server, result),
+    one row per valid read, each served by its parity-routed secondary
+    (R8) against the graph state AS-OF its seq. A view over the one
+    memoized serve, so a session serves once; its DuckDB oracle
+    derives the reads without the write path."""
+    return ops_concurrent_full(spark, sf_dir).filter(F.col("op") >= 3)
 
 
 QUERIES = {

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ..cache import memo, shared
 from ..catalog import table
+from ..session import local_frame
 
 N_QUERIES = 5       # pinned query set: lowest vec_ids
 TOP_K = 10
@@ -780,12 +781,7 @@ def sim_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("query_id", "vec_id", "probe_rank", "cosine")
     )
-    legs = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(p,) for p in RECALL_CURVE_PROBES], 1
-        ),
-        "nprobe int",
-    )
+    legs = local_frame(spark, [(p,) for p in RECALL_CURVE_PROBES], "nprobe int")
     wk = Window.partitionBy("nprobe", "query_id").orderBy(
         F.col("cosine").desc(), F.col("vec_id")
     )
@@ -3181,11 +3177,9 @@ def ml_tree_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     hist = rows.groupBy("feature", "bin").agg(
         F.count(F.lit(1)).alias("n"), F.sum("y").alias("pos")
     )
-    grid = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(f, b) for f in ("price_cents", "order_day")
-             for b in range(TREE_BINS)], 1,
-        ),
+    grid = local_frame(
+        spark,
+        [(f, b) for f in ("price_cents", "order_day") for b in range(TREE_BINS)],
         "feature string, bin int",
     )
     full = F.broadcast(grid).join(hist, ["feature", "bin"], "left").select(

@@ -12,7 +12,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = "32"
 
@@ -40,13 +41,13 @@ def get_spark(app_name: str = "distributed-graph-database-spark") -> SparkSessio
         # FAIR scheduling between concurrently submitted jobs: the
         # reference serves N clients with thread-per-request on every
         # server (primary_server.c:270-281, secondary_server.c:335-346);
-        # ops_concurrent_replay makes that inter-query parallelism
-        # physical by running each secondary's read batch in its own
-        # scheduler pool (pools are created on demand by the
-        # spark.scheduler.pool local property; default weight 1 each —
-        # two analysts, one engine, neither starves). On a vanilla
-        # FIFO session (the round driver's) the pool property is
-        # ignored and the key still returns identical results —
+        # ops_concurrent_full makes that inter-query parallelism
+        # physical by running the primary's writes and each
+        # secondary's reads in their own scheduler pools (pools are
+        # created on demand by the spark.scheduler.pool local
+        # property; default weight 1 each, so none starves). On a
+        # vanilla FIFO session (the round driver's) the pool property
+        # is ignored and the key still returns identical results —
         # scheduling policy never affects answers.
         .config("spark.scheduler.mode", "FAIR")
         # AQE: runtime shuffle-partition coalescing, skew-join handling,
@@ -68,3 +69,21 @@ def get_spark(app_name: str = "distributed-graph-database-spark") -> SparkSessio
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """Driver-held rows as a frame that collects with no Spark job.
+
+    pandas-backed under Arrow (the engine session enables it), so it is
+    a LocalRelation: `isLocal()` is True. A list-backed
+    `createDataFrame` is an RDD and costs a job per action. Without
+    Arrow (Spark's default) no such frame exists, so the rows go out
+    as one RDD slice: a pandas or list frame would be pickled into
+    defaultParallelism slices, and every action on it walks them all
+    through Python workers (~4 s per action at 32 slices). Such a
+    frame is not local.
+    """
+    if spark.conf.get("spark.sql.execution.arrow.pyspark.enabled").lower() != "true":
+        return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    names = [field.split()[0] for field in schema.split(",")]
+    return spark.createDataFrame(pd.DataFrame(rows, columns=names), schema)

@@ -8,8 +8,6 @@ out of the caller's group would also fake a lower traced count.
 
 from __future__ import annotations
 
-import itertools
-
 import pytest
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -17,25 +15,7 @@ from pyspark.sql import functions as F
 from distributed_graph_database_spark import cache, registry
 from distributed_graph_database_spark.graph.iterate import fixpoint
 
-_tags = itertools.count()
-
-
-def _jobs(spark, fn) -> tuple[object, list[int]]:
-    """Run fn under a fresh job group → (its result, that group's job ids)."""
-    sc = spark.sparkContext
-    tag = f"test-iterate-{next(_tags)}"
-    sc.setJobGroup(tag, tag)
-    try:
-        out = fn()
-    finally:
-        _clear_group(sc)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, list(sc.statusTracker().getJobIdsForGroup(tag))
-
-
-def _clear_group(sc) -> None:
-    sc.setLocalProperty("spark.jobGroup.id", None)
-    sc.setLocalProperty("spark.job.description", None)
+from .conftest import clear_job_group, group_jobs
 
 
 def _all_job_ids(spark) -> set[int]:
@@ -65,7 +45,7 @@ def _halving(spark, **kw):
 
 
 def test_round_costs_one_job_and_step_sees_previous_probe(spark):
-    (states, last, seen, handed), jobs = _jobs(
+    (states, last, seen, handed), jobs = group_jobs(
         spark, lambda: _halving(spark, max_rounds=20, name="halving")
     )
     assert last == (0, 0, 0) and seen[-2] == seen[-1]
@@ -89,7 +69,7 @@ def test_named_loop_raises_and_bounded_loop_returns_at_bound(spark):
 def test_known_probe0_skips_state0_checkpoint_and_probe(spark):
     state0 = spark.createDataFrame([(4,)], "x bigint").localCheckpoint(eager=True)
 
-    (states, last), jobs = _jobs(
+    (states, last), jobs = group_jobs(
         spark,
         lambda: fixpoint(
             state0,
@@ -114,7 +94,7 @@ def test_kernel_jobs_stay_in_the_callers_job_group(spark):
         assert sc.getLocalProperty("spark.jobGroup.id") == "caller-span"
         assert sc.getLocalProperty("spark.job.description") == "caller-span"
     finally:
-        _clear_group(sc)
+        clear_job_group(sc)
     new = _all_job_ids(spark) - before
     grouped = set(sc.statusTracker().getJobIdsForGroup("caller-span"))
     assert len(new) == len(states)
@@ -154,5 +134,6 @@ def test_fixpoint_key_job_ceiling(spark, sf_oracle, key):
     for _ in range(2):
         if key == "graph_diameter":
             _fresh_bfs_sweeps(sf_oracle)
-        counts.append(len(_jobs(spark, lambda: run(spark, sf_oracle).collect())[1]))
+        _, jobs = group_jobs(spark, lambda: run(spark, sf_oracle).collect())
+        counts.append(len(jobs))
     assert min(counts) <= JOB_CEILINGS[key], (key, counts)

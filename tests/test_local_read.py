@@ -14,7 +14,6 @@ Python after one bounded read. Two things are pinned here:
 
 from __future__ import annotations
 
-import itertools
 import random
 from concurrent.futures import ThreadPoolExecutor
 
@@ -23,13 +22,14 @@ from pyspark.sql import functions as F
 
 from distributed_graph_database_spark import fixtures
 from distributed_graph_database_spark.graph import derive, traversal
+from distributed_graph_database_spark.session import local_frame
 from distributed_graph_database_spark.sources import matrix
 
-_tags = itertools.count()
+from .conftest import group_jobs
 
 
 def _edge_frame(spark, rows):
-    return traversal.local_frame(spark, rows, "src bigint, dst bigint")
+    return local_frame(spark, rows, "src bigint, dst bigint")
 
 
 def _sym_rows(edges):
@@ -152,23 +152,6 @@ def test_gate_sends_larger_frames_to_the_kernel(spark, monkeypatch):
     assert sorted(small.collect()) == sorted(large.collect())
 
 
-def _jobs(spark, fn) -> int:
-    """Spark jobs run by fn under a fresh job group (a ValueError is a
-    refused read, not a failure)."""
-    sc = spark.sparkContext
-    tag = f"test-local-read-{next(_tags)}"
-    sc.setJobGroup(tag, tag)
-    try:
-        fn()
-    except ValueError as e:
-        assert str(e) == traversal.START_NOT_PRESENT_MSG
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(tag))
-
-
 # Jobs per serve-shaped read: the bounded read, plus one more bounded
 # read for the DFS formatter's edges. AQE can move a count by one, so
 # the test takes the lower of two calls.
@@ -187,12 +170,20 @@ def test_serve_read_job_ceiling(spark, tmp_path, kind):
         )
         sym = derive.symmetrize(edges)
         start = 99 if kind == "refused" else 1
-        lv = traversal.bfs_levels(spark, sym, start, cache_edges=False, validate=True)
+        try:
+            lv = traversal.bfs_levels(
+                spark, sym, start, cache_edges=False, validate=True
+            )
+        except ValueError as e:
+            assert kind == "refused" and str(e) == traversal.START_NOT_PRESENT_MSG
+            return
+        assert kind != "refused", "an absent start was not refused"
         if kind == "dfs":
-            return traversal.dfs_leaves_from_levels(lv, sym).collect()
-        return traversal.bfs_order_from_levels(lv).collect()
+            traversal.dfs_leaves_from_levels(lv, sym).collect()
+        else:
+            traversal.bfs_order_from_levels(lv).collect()
 
-    counts = [_jobs(spark, read) for _ in range(2)]
+    counts = [len(group_jobs(spark, read)[1]) for _ in range(2)]
     assert min(counts) <= READ_JOB_CEILINGS[kind], (kind, counts)
 
 
