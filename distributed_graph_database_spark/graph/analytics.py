@@ -80,11 +80,11 @@ def _sym_edges(
     return sym.localCheckpoint(eager=True) if checkpoint else sym
 
 
-def _min_id_seeds(sym: DataFrame, n_seeds: int) -> DataFrame:
-    """The n smallest vertex ids as (s,) — the deterministic seed set
-    the multi-seed kernels (betweenness, PPR, closeness) share."""
+def _min_id_seeds(sym: DataFrame, k: int) -> DataFrame:
+    """The k smallest vertex ids as (s,) — the deterministic seed set
+    of the Brandes kernel's keys (betweenness, closeness)."""
     return (
-        sym.select("src").distinct().orderBy("src").limit(n_seeds)
+        sym.select("src").distinct().orderBy("src").limit(k)
         .select(F.col("src").alias("s"))
     )
 
@@ -358,9 +358,7 @@ def graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
 PPR_SEEDS = 8  # batched restart-set size (the BETW_SEEDS convention)
 
 
-def graph_ppr_multi(
-    spark: SparkSession, sf_dir: str, n_seeds: int | None = None
-) -> DataFrame:
+def graph_ppr_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batched multi-seed personalized PageRank → (seed, vid, ppr):
     the PPR_SEEDS minimum-id vertices each run their own restart walk,
     all in ONE plan with a seed column — the layout graph_ppr's
@@ -384,10 +382,7 @@ def graph_ppr_multi(
     supersteps — the pagerank discipline; re-aggregating kernels like
     HITS must checkpoint instead). Output stays K·|V| rows — the full
     per-seed mass vector (zero beyond the PR_ROUNDS-hop horizon)."""
-    k = PPR_SEEDS if n_seeds is None else n_seeds
-    return _ppr_sparse(spark, sf_dir, k).select(
-        "seed", "vid", F.col("ppr")
-    )
+    return _ppr_sparse(spark, sf_dir, PPR_SEEDS).select("seed", "vid", F.col("ppr"))
 
 
 def _ppr_sparse(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
@@ -615,125 +610,18 @@ FROM h{last} JOIN a{last} ON h{last}.v = a{last}.v"""
 
 BETW_H = 4  # bounded BFS horizon for the dependency pass (the
             # SSSP_ROUNDS convention: fixed ⇒ oracle-unrollable)
-
-
-def graph_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Single-source Brandes dependency accumulation from the
-    minimum-id seed over a BETW_H-hop horizon → (vid, level, sigma,
-    delta): σ = shortest-path counts from the forward BFS, δ = the
-    backward-accumulated dependency δ(v) = Σ_{w∈succ(v)} σ(v)/σ(w) ·
-    (1+δ(w)) — the inner loop of betweenness centrality. Full
-    betweenness is the SUM of this kernel over a seed set, which is
-    why the single-source pass is the distributable unit (seeds run
-    as independent jobs or as one plan with a seed column; the seed
-    count is the standard sampling knob for approximate betweenness).
-
-    Two Pregel phases, both checkpointed per level (the HITS lesson —
-    the backward pass re-consumes each level's σ AND δ): forward =
-    per-level frontier join + σ-sum with an anti-join against the
-    visited union; backward = per-level join of level l against
-    level l+1's (σ, δ) through the edge table. Level count is the
-    horizon, not the vertex count; σ stays exact bigint, only δ is
-    float (round 6)."""
-    sym = _sym_edges(spark, sf_dir, checkpoint=True)
-    s0 = sym.agg(F.min("src").alias("s"))
-    lv = [
-        s0.select(F.col("s").alias("v"), F.lit(1).cast("bigint").alias("sigma"))
-        .localCheckpoint(eager=True)
-    ]
-    visited = lv[0].select("v")
-    for _ in range(BETW_H):
-        nxt = (
-            sym.join(lv[-1], sym.src == F.col("v"))
-            .groupBy("dst")
-            .agg(F.sum("sigma").alias("sigma"))
-            .select(F.col("dst").alias("v"), "sigma")
-            .join(visited, "v", "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        lv.append(nxt)
-        # visited is a union of already-checkpointed frontiers — flat
-        # lineage, so no checkpoint job of its own (the r10 MST/HITS
-        # checkpoint-granularity lesson)
-        visited = visited.unionByName(nxt.select("v"))
-    delta = lv[BETW_H].select("v", F.lit(0.0).alias("delta"))
-    out = lv[BETW_H].select(
-        "v",
-        F.lit(BETW_H).cast("int").alias("level"),
-        "sigma",
-        F.lit(0.0).alias("delta"),
-    )
-    for level in range(BETW_H - 1, -1, -1):
-        succ = lv[level + 1].join(delta, "v").select(
-            F.col("v").alias("w"),
-            F.col("sigma").alias("w_sigma"),
-            F.col("delta").alias("w_delta"),
-        )
-        contrib = (
-            lv[level]
-            .join(sym, lv[level].v == sym.src)
-            .join(succ, sym.dst == succ.w)
-            .groupBy("v")
-            .agg(
-                F.sum(
-                    F.col("sigma") / F.col("w_sigma")
-                    * (F.lit(1.0) + F.col("w_delta"))
-                ).alias("dep")
-            )
-        )
-        delta = (
-            lv[level]
-            .join(contrib, "v", "left")
-            .select("v", "sigma", F.coalesce("dep", F.lit(0.0)).alias("delta"))
-            .localCheckpoint(eager=True)
-        )
-        out = out.unionByName(
-            delta.select(
-                "v", F.lit(level).cast("int").alias("level"), "sigma", "delta"
-            )
-        )
-        delta = delta.select("v", "delta")
-    return out.select(
-        F.col("v").alias("vid"), "level", "sigma", F.round("delta", 6).alias("delta")
-    )
-
-
 BETW_SEEDS = 8  # seed-set size for the batched approximation
 
 
-def graph_betweenness_multi(
-    spark: SparkSession, sf_dir: str, n_seeds: int = BETW_SEEDS
-) -> DataFrame:
-    """Batched multi-seed Brandes (VERDICT r7 next #4): the
-    single-source dependency kernel run for the BETW_SEEDS minimum-id
-    seeds as ONE plan with a seed column, δ summed across seeds →
-    (vid, n_seeds, betweenness) with betweenness = Σ_s δ_s(v) over
-    v ≠ s and n_seeds = how many seeds' BETW_H-hop horizons reached v.
-    This is the standard sampled approximation of betweenness
-    centrality (Brandes–Pich style: scale by |V|/|seeds| for the
-    unbiased estimate), and the form a user actually asks for — the
-    single-source key is its distributable unit.
-
-    Shape: identical to graph_betweenness but every frontier,
-    visited set, σ-sum, and δ-accumulation carries the seed column,
-    so K seeds cost one job of ~K× rows instead of K driver-sequenced
-    jobs — the batching matters at 100 TB because each Pregel round
-    is a shuffle whose LAUNCH overhead (not its rows) dominates at
-    small K. Both passes localCheckpoint per level (the HITS lesson:
-    the backward pass re-consumes each level's σ and δ). δ stays the
-    only float; the final Σ over ≤K values rounds at 6 like every
-    genuinely-float output.
-
-    Checkpoint granularity here is MEASURED, not assumed (the r11
-    A/B, AB_BRANDES_R11.json): skipping the δ checkpoint on alternate
-    backward levels (the graph_hits halving trick) RAISES job count
-    69→81 — δ has two consumers per level (next level's succ join +
-    the output union), so the skipped checkpoint recomputes the
-    backward join twice — and costs +15% at sf0.1 (2.45→2.81 s) while
-    tying at sf1. Per-level δ checkpoints are the right granularity
-    for this kernel; kept."""
-    sym = _sym_edges(spark, sf_dir, checkpoint=True)
-    seeds = _min_id_seeds(sym, n_seeds)
+def _brandes_levels(sym: DataFrame, seeds: DataFrame) -> list[DataFrame]:
+    """Brandes' forward pass for every seed (s,) at once → BETW_H + 1
+    per-level (s, v, sigma) frames: level h holds the vertices first
+    reached from s in h hops, σ their shortest-path counts (exact
+    bigint). One frontier join + σ-sum per level, a left-anti join
+    against the visited union, an eager checkpoint. The visited set is
+    a union of checkpointed levels, so it needs no checkpoint of its
+    own. No `iterate.fixpoint` here: the level count is the fixed
+    horizon, and its count probe would cost a job per level."""
     lv = [
         seeds.select(
             "s", F.col("s").alias("v"), F.lit(1).cast("bigint").alias("sigma")
@@ -741,7 +629,7 @@ def graph_betweenness_multi(
     ]
     visited = lv[0].select("s", "v")
     for _ in range(BETW_H):
-        nxt = (
+        lv.append(
             sym.join(lv[-1], sym.src == F.col("v"))
             .groupBy("s", "dst")
             .agg(F.sum("sigma").alias("sigma"))
@@ -749,49 +637,85 @@ def graph_betweenness_multi(
             .join(visited, ["s", "v"], "left_anti")
             .localCheckpoint(eager=True)
         )
-        lv.append(nxt)
-        # union of checkpointed frontiers — no checkpoint of its own
-        visited = visited.unionByName(nxt.select("s", "v"))
-    delta = lv[BETW_H].select("s", "v", F.lit(0.0).alias("delta"))
-    all_delta = [delta]
-    for level in range(BETW_H - 1, -1, -1):
-        succ = lv[level + 1].join(delta, ["s", "v"]).select(
+        visited = visited.unionByName(lv[-1].select("s", "v"))
+    return lv
+
+
+def _brandes(sym: DataFrame, seeds: DataFrame) -> list[DataFrame]:
+    """Brandes' dependency accumulation for every seed (s,) at once →
+    per-level (s, v, sigma, delta) frames, level 0 first, with
+    δ(v) = Σ_{w∈succ(v)} σ(v)/σ(w) · (1 + δ(w)) over the next level.
+    Per level one chain, level ⟕ sym ⟕ next level's δ frame (which
+    carries σ(w)), grouped by (s, v, σ): a vertex with no successor
+    sums nothing and gets 0. Seeds never meet, so K seeds ride one
+    plan and a seed's rows equal its one-seed run.
+
+    Every δ level is checkpointed eagerly: it has two consumers (the
+    level above and the caller's union), and skipping alternate
+    checkpoints measured 69 → 81 jobs (AB_BRANDES_R11.json)."""
+    lv = _brandes_levels(sym, seeds)
+    deltas = [lv[-1].withColumn("delta", F.lit(0.0))]
+    for level in lv[-2::-1]:
+        succ = deltas[-1].select(
             F.col("s").alias("ss"),
             F.col("v").alias("w"),
             F.col("sigma").alias("w_sigma"),
             F.col("delta").alias("w_delta"),
         )
-        cur = lv[level].select(
-            F.col("s").alias("cs"), F.col("v").alias("cv"), "sigma"
-        )
-        contrib = (
-            cur.join(sym, cur.cv == sym.src)
-            .join(succ, (F.col("dst") == F.col("w")) & (F.col("cs") == F.col("ss")))
-            .groupBy("cs", "cv")
+        deltas.append(
+            level.join(sym, level.v == sym.src, "left")
+            .join(
+                succ, (F.col("dst") == F.col("w")) & (F.col("s") == F.col("ss")), "left"
+            )
+            .groupBy("s", "v", "sigma")
             .agg(
-                F.sum(
-                    F.col("sigma") / F.col("w_sigma")
-                    * (F.lit(1.0) + F.col("w_delta"))
-                ).alias("dep")
-            )
-            .select(
-                F.col("cs").alias("s"), F.col("cv").alias("v"), "dep"
-            )
-        )
-        delta = (
-            lv[level]
-            .join(contrib, ["s", "v"], "left")
-            .select(
-                "s", "v", F.coalesce("dep", F.lit(0.0)).alias("delta")
+                F.coalesce(
+                    F.sum(
+                        F.col("sigma") / F.col("w_sigma")
+                        * (F.lit(1.0) + F.col("w_delta"))
+                    ),
+                    F.lit(0.0),
+                ).alias("delta")
             )
             .localCheckpoint(eager=True)
         )
-        all_delta.append(delta)
-    acc = all_delta[0]
-    for d in all_delta[1:]:
-        acc = acc.unionByName(d)
+    return deltas[::-1]
+
+
+def graph_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Single-source Brandes from the minimum-id seed over a BETW_H-hop
+    horizon → (vid, level, sigma, delta): the `_brandes` kernel with one
+    seed, the inner loop of betweenness centrality. Full betweenness is
+    the SUM of this pass over a seed set (`graph_betweenness_multi`).
+    σ stays exact bigint; δ is the only float (round 6)."""
+    sym = _sym_edges(spark, sf_dir, checkpoint=True)
+    deltas = _brandes(sym, _min_id_seeds(sym, 1))
+    return reduce(DataFrame.unionByName, [
+        d.select(
+            F.col("v").alias("vid"),
+            F.lit(level).cast("int").alias("level"),
+            "sigma",
+            F.round("delta", 6).alias("delta"),
+        )
+        for level, d in enumerate(deltas)
+    ])
+
+
+def graph_betweenness_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Batched multi-seed Brandes: the `_brandes` kernel for the
+    BETW_SEEDS minimum-id seeds as ONE plan, δ summed across seeds →
+    (vid, n_seeds, betweenness) with betweenness = Σ_s δ_s(v) over
+    v ≠ s and n_seeds = how many seeds' BETW_H-hop horizons reached v.
+    The standard sampled approximation of betweenness centrality
+    (Brandes–Pich: scale by |V|/|seeds| for the unbiased estimate).
+    K seeds cost one job of ~K× rows per level instead of K
+    driver-sequenced runs: at small K each round's shuffle launch
+    overhead, not its rows, dominates."""
+    sym = _sym_edges(spark, sf_dir, checkpoint=True)
+    deltas = _brandes(sym, _min_id_seeds(sym, BETW_SEEDS))
     return (
-        acc.filter(F.col("v") != F.col("s"))
+        reduce(DataFrame.unionByName, deltas)
+        .filter(F.col("v") != F.col("s"))
         .groupBy(F.col("v").alias("vid"))
         .agg(
             F.count(F.lit(1)).alias("n_seeds"),
@@ -868,63 +792,36 @@ FROM alld WHERE v <> s GROUP BY v"""
 CLOSE_LCM = math.lcm(*range(1, BETW_H + 1))
 
 
-def graph_closeness(
-    spark: SparkSession, sf_dir: str, n_seeds: int = BETW_SEEDS
-) -> DataFrame:
+def graph_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded-horizon closeness centrality for the BETW_SEEDS
     minimum-id seeds → (vid, n_reached, sum_dist, harmonic_num,
     closeness, harmonic): per seed, the BETW_H-hop reachable count,
     total shortest-path distance, truncated closeness
     n_reached/sum_dist (the within-reachable-set form; multiply by
     n_reached/(N−1) for the Wasserman–Faust variant — both factors
-    are in the output), and harmonic centrality Σ 1/d(v,·) — the
-    last classic centrality the family lacked (degree, pagerank,
-    HITS, betweenness, k-core are declared keys). Harmonic is the
-    form that stays meaningful on disconnected graphs. Each row is
-    that seed's own EXACT truncated centrality — nothing is sampled
-    or estimated; widening coverage means widening the seed set (the
-    n_seeds parameter), K seeds still riding one plan.
+    are in the output), and harmonic centrality Σ 1/d(v,·), the form
+    that stays meaningful on disconnected graphs. Each row is that
+    seed's own EXACT truncated centrality — nothing is sampled.
 
-    Exactness: every level's reach count is integer, so sum_dist =
-    Σ cnt_h·h and harmonic_num = Σ cnt_h·(LCM/h) are exact bigints
-    (LCM = lcm(1..BETW_H) makes every per-level weight integral);
-    the two float columns are each ONE division of exact integers —
-    no float accumulates across rows, so round(6) can never see
-    summation-order noise. Shape: the multi-seed BFS of
-    graph_betweenness_multi minus the σ/δ machinery — per round one
-    join + distinct + left_anti on the (seed, vertex) key, frontier
-    per-level counts folded map-side; K seeds ride one plan."""
+    Shape: per-seed row counts of `_brandes_levels`' forward levels
+    (a level's rows are the vertices first reached at that distance).
+    Exactness: sum_dist = Σ cnt_h·h and harmonic_num = Σ cnt_h·(LCM/h)
+    are exact bigints (LCM = lcm(1..BETW_H) makes every per-level
+    weight integral); the two float columns are each ONE division of
+    exact integers, so round(6) never sees summation-order noise."""
     sym = _sym_edges(spark, sf_dir, checkpoint=True)
-    seeds = _min_id_seeds(sym, n_seeds)
-    frontier = seeds.select("s", F.col("s").alias("v")).localCheckpoint(
-        eager=True
-    )
-    visited = frontier
-    per_level = []
-    for h in range(1, BETW_H + 1):
-        nxt = (
-            sym.join(frontier, sym.src == F.col("v"))
-            .select("s", F.col("dst").alias("v"))
-            .distinct()
-            .join(visited, ["s", "v"], "left_anti")
-            .localCheckpoint(eager=True)
+    levels = _brandes_levels(sym, _min_id_seeds(sym, BETW_SEEDS))
+    counts = reduce(DataFrame.unionByName, [
+        levels[h].groupBy("s").agg(F.count(F.lit(1)).alias("cnt")).select(
+            "s",
+            "cnt",
+            F.lit(h).cast("bigint").alias("level"),
+            # LCM/h is a Python-int literal per level, so the harmonic
+            # numerator never divides at runtime.
+            (F.col("cnt") * F.lit(CLOSE_LCM // h)).alias("hnum"),
         )
-        per_level.append(
-            nxt.groupBy("s").agg(F.count(F.lit(1)).alias("cnt")).select(
-                "s",
-                "cnt",
-                F.lit(h).cast("bigint").alias("level"),
-                # LCM/h is a Python-int literal per unrolled level, so
-                # the harmonic numerator never divides at runtime.
-                (F.col("cnt") * F.lit(CLOSE_LCM // h)).alias("hnum"),
-            )
-        )
-        # union of checkpointed frontiers — no checkpoint of its own
-        visited = visited.unionByName(nxt)
-        frontier = nxt
-    counts = per_level[0]
-    for p in per_level[1:]:
-        counts = counts.unionByName(p)
+        for h in range(1, BETW_H + 1)
+    ])
     agg = counts.groupBy(F.col("s").alias("vid")).agg(
         F.sum("cnt").cast("bigint").alias("n_reached"),
         F.sum(F.col("cnt") * F.col("level")).cast("bigint").alias("sum_dist"),

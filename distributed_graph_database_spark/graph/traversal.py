@@ -108,6 +108,9 @@ def bfs_levels(
 ) -> DataFrame:
     """Minimum-hop level per reachable vertex → (vid bigint, level int).
 
+    `edges_sym` must be symmetric: every (a, b) row has its (b, a) row
+    (every caller passes a symmetrized frame).
+
     Every call first reads at most LOCAL_READ_MAX_EDGES + 1 rows of
     `edges_sym` in one task (`_edge_prefix`). If the whole frame fits,
     the levels come from a Python BFS over those rows with the same
@@ -126,12 +129,13 @@ def bfs_levels(
 
     validate=True enforces the reference's R10 bounds check
     (secondary_server.c:187-188): unknown start ⇒ ValueError with the
-    reference's message. "Known" means some edge row has it as `src`;
-    the prefix answers that, and only a large graph whose prefix lacks
-    the start pays a probe of the whole frame.
+    reference's message. "Known" means some edge row has it as `src`.
+    By symmetry any prefix row that holds the start, as `src` or `dst`,
+    proves that, and only a large graph whose prefix never names the
+    start pays a probe of the whole frame.
     """
     prefix = _edge_prefix(edges_sym)
-    in_prefix = any(src == start for src, _ in prefix)
+    in_prefix = any(start in edge for edge in prefix)
     if len(prefix) <= LOCAL_READ_MAX_EDGES:
         if validate and not in_prefix:
             raise ValueError(START_NOT_PRESENT_MSG)

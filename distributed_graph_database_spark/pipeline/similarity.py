@@ -588,8 +588,8 @@ def sim_dedup_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("vec_b").alias("n_dropped"),
         )
     )
-    th = spark.createDataFrame(
-        [(float(t),) for t in SWEEP_THRESHOLDS], "threshold double"
+    th = local_frame(
+        spark, [(float(t),) for t in SWEEP_THRESHOLDS], "threshold double"
     )
     return th.join(F.broadcast(agg), "threshold", "left").select(
         "threshold",

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from . import fixtures, ops, oracles, relational
 from .cache import memo, shared
+from .session import local_frame
 from .pipeline import clean as pl_clean
 from .pipeline import dedup as pl_dedup
 from .pipeline import events as pl_events
@@ -154,8 +155,8 @@ def q_graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    graph_ids = spark.createDataFrame(
-        [(g,) for g in fixtures.existing_graph_ids()], "graph_id string"
+    graph_ids = local_frame(
+        spark, [(g,) for g in fixtures.existing_graph_ids()], "graph_id string"
     )
     return traversal.graph_stats(
         graph_ids, fixtures.fixture_vertices_df(spark), fixtures.fixture_edges_df(spark)

@@ -12,8 +12,10 @@ from __future__ import annotations
 
 import os
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 DEFAULT_SHUFFLE_PARTITIONS = "32"
 
@@ -74,16 +76,14 @@ def get_spark(app_name: str = "distributed-graph-database-spark") -> SparkSessio
 def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
     """Driver-held rows as a frame that collects with no Spark job.
 
-    pandas-backed under Arrow (the engine session enables it), so it is
-    a LocalRelation: `isLocal()` is True. A list-backed
-    `createDataFrame` is an RDD and costs a job per action. Without
-    Arrow (Spark's default) no such frame exists, so the rows go out
-    as one RDD slice: a pandas or list frame would be pickled into
-    defaultParallelism slices, and every action on it walks them all
-    through Python workers (~4 s per action at 32 slices). Such a
-    frame is not local.
+    The rows go in as an Arrow table, which Spark turns into a
+    LocalRelation whether or not the session enables Arrow, zero rows
+    included: `isLocal()` is True. A list-backed `createDataFrame` is
+    an RDD of defaultParallelism pickled slices instead, and every
+    action on it walks them all through Python workers.
     """
-    if spark.conf.get("spark.sql.execution.arrow.pyspark.enabled").lower() != "true":
-        return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-    names = [field.split()[0] for field in schema.split(",")]
-    return spark.createDataFrame(pd.DataFrame(rows, columns=names), schema)
+    struct = StructType.fromDDL(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(struct.names, row)) for row in rows], schema=to_arrow_schema(struct)
+    )
+    return spark.createDataFrame(table, struct)

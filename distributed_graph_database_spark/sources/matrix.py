@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import fixtures
+from ..session import local_frame
 
 # The roundtrip query's "op 2 modify": replace G1's edge set with this
 # (single source of truth for both the Spark write and the oracle).
@@ -166,7 +167,8 @@ def graph_store_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(STORE_DIR)
     )
 
-    modified = spark.createDataFrame(
+    modified = local_frame(
+        spark,
         [(MODIFY_GRAPH_ID, s, d) for s, d in MODIFIED_EDGES],
         "graph_id string, src bigint, dst bigint",
     )
@@ -271,8 +273,8 @@ def graph_export_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # empty graph (G4, n=0): no vertices ⇒ no header row from verts —
     # emit its `0` header from the catalog of graph ids.
-    gids = spark.createDataFrame(
-        [(g,) for g in fixtures.existing_graph_ids()], "graph_id string"
+    gids = local_frame(
+        spark, [(g,) for g in fixtures.existing_graph_ids()], "graph_id string"
     )
     empty_header = (
         gids.join(verts.select("graph_id").distinct(), "graph_id", "left_anti")

@@ -187,17 +187,18 @@ def test_serve_read_job_ceiling(spark, tmp_path, kind):
     assert min(counts) <= READ_JOB_CEILINGS[kind], (kind, counts)
 
 
-def test_read_without_arrow_keeps_one_slice_and_answers(spark):
-    """Spark's default session has Arrow off: the rows then ship as one
-    slice (not defaultParallelism pickled ones) and the formatters take
-    their Spark plans, with the same answers."""
+def test_read_without_arrow_is_local_and_answers(spark):
+    """A local frame is a LocalRelation, zero rows included, with Arrow
+    on (the engine's session) or off (Spark's default); without Arrow
+    the read gives the same answers."""
     rows = _sym_rows(fixtures.FIXTURE_GRAPHS["G5"][1])
+    assert _edge_frame(spark, []).isLocal()
     key = "spark.sql.execution.arrow.pyspark.enabled"
     before = spark.conf.get(key)
     spark.conf.set(key, "false")
     try:
-        edges = _edge_frame(spark, rows)
-        assert edges.rdd.getNumPartitions() == 1 and not edges.isLocal()
+        assert _edge_frame(spark, rows).isLocal()
+        assert _edge_frame(spark, []).isLocal()
         assert _read(spark, rows, 1) == (
             [(1, 0), (2, 1), (3, 1), (4, 1), (5, 2)], "1 2 3 4 5", [2, 4, 5]
         )

@@ -1,5 +1,5 @@
-"""Round-8 operator invariants: batched multi-seed Brandes vs the
-single-source golden, and the per-sf quantizer scaling contracts."""
+"""Round-8 operator invariants: batched multi-seed Brandes vs one-seed
+kernel runs, and the per-sf quantizer scaling contracts."""
 
 from __future__ import annotations
 
@@ -7,25 +7,46 @@ from __future__ import annotations
 def test_betweenness_multi_restricted_to_one_seed_equals_single_source(
     spark, sf_smoke
 ):
-    """Additivity anchor: graph_betweenness_multi with n_seeds=1 must
-    reproduce the single-source kernel exactly — per vertex v ≠ seed,
-    betweenness = that vertex's δ and n_seeds = 1 (each vertex sits at
+    """Additivity anchor: the batched Brandes kernel's rows for one seed
+    equal the kernel run with that seed alone (seeds never meet), and
+    graph_betweenness_multi is Σ_s δ_s(v) over v ≠ s of the batched
+    rows, with n_seeds = how many seeds reached v (each vertex sits at
     exactly one BFS level per seed)."""
+    from pyspark.sql import functions as F
+
     from distributed_graph_database_spark.graph import analytics as g
 
-    single = g.graph_betweenness(spark, sf_smoke).collect()
-    seed = min(r.vid for r in single if r.level == 0)
-    want = {
-        r.vid: round(r.delta, 6) for r in single if r.vid != seed
-    }
+    sym = g._sym_edges(spark, sf_smoke, checkpoint=True)
+    seeds = g._min_id_seeds(sym, g.BETW_SEEDS)
+
+    def kernel_rows(seeds):
+        return {
+            (r.s, r.v, level): (r.sigma, r.delta)
+            for level, d in enumerate(g._brandes(sym, seeds))
+            for r in d.collect()
+        }
+
+    batched = kernel_rows(seeds)
+    last = max(s for s, _, _ in batched)
+    alone = kernel_rows(seeds.filter(F.col("s") == last))
+    assert alone.keys() == {k for k in batched if k[0] == last}
+    for k, (sigma, delta) in alone.items():
+        assert batched[k][0] == sigma
+        assert abs(batched[k][1] - delta) < 1e-9
+
+    want = {}
+    for (s, v, _), (_, delta) in batched.items():
+        if v != s:
+            n, b = want.get(v, (0, 0.0))
+            want[v] = (n + 1, b + delta)
     got = {
         r.vid: (r.n_seeds, r.betweenness)
-        for r in g.graph_betweenness_multi(spark, sf_smoke, n_seeds=1).collect()
+        for r in g.graph_betweenness_multi(spark, sf_smoke).collect()
     }
-    assert set(got) == set(want)
+    assert got.keys() == want.keys()
     for vid, (n, b) in got.items():
-        assert n == 1
-        assert abs(b - want[vid]) < 1e-9
+        assert n == want[vid][0]
+        assert abs(b - want[vid][1]) < 1e-6
 
 
 def test_betweenness_multi_seed_count_and_positivity(spark, sf_smoke):
@@ -302,17 +323,25 @@ def test_audio_fingerprint_bounds_and_short_doc(spark, sf_smoke):
 
 
 def test_ppr_multi_restricted_to_one_seed_equals_single_source(spark, sf_smoke):
-    """graph_ppr_multi with n_seeds=1 must reproduce graph_ppr exactly
-    (the seed set ordered by vertex id starts at the min-id vertex —
-    the single-source kernel's seed convention)."""
+    """The sparse PPR kernel run for one seed must reproduce
+    graph_ppr_multi's rows for that seed (the seed set ordered by vertex
+    id starts at the min-id vertex — the single-source kernel's seed
+    convention). Seeds never meet; only the order of the float sums may
+    differ, so the rounded values agree to 1e-6."""
     from distributed_graph_database_spark.graph import analytics as g
 
-    got = {
+    one = g._ppr_sparse(spark, sf_smoke, 1).collect()
+    seed = one[0].seed
+    got = {r.vid: r.ppr for r in one}
+    want = {
         r.vid: r.ppr
-        for r in g.graph_ppr_multi(spark, sf_smoke, n_seeds=1).collect()
+        for r in g.graph_ppr_multi(spark, sf_smoke).collect()
+        if r.seed == seed
     }
-    want = {r.vid: r.ppr for r in g.graph_ppr(spark, sf_smoke).collect()}
-    assert got == want
+    assert {r.seed for r in one} == {seed}
+    assert got.keys() == want.keys()
+    for vid, ppr in got.items():
+        assert abs(ppr - want[vid]) <= 1e-6 + 1e-12
 
 
 def test_ppr_multi_mass_conservation_per_seed(spark, sf_smoke):

@@ -316,11 +316,14 @@ HEADLINERS: dict[str, str] = {
         "one lazy job, no per-round dense (seed x vertex) join."
     ),
     "graph_betweenness": (
-        "Brandes on DataFrames: forward levels materialize once each "
-        "(checkpoint), the backward dependency pass walks them in "
-        "reverse with one equi-join per level — level count is the "
-        "horizon, never the vertex count, and sigma stays exact "
-        "integer the whole way."
+        "Brandes on DataFrames, one seeded kernel: forward levels "
+        "(seed, vertex, sigma) materialize once each (checkpoint); the "
+        "backward pass walks them in reverse with one chain per level, "
+        "level left-join edges left-join the next level's delta frame "
+        "(which carries sigma), grouped by (seed, vertex, sigma). The "
+        "multi-seed betweenness and closeness keys run the same kernel "
+        "— level count is the horizon, never the vertex count, and "
+        "sigma stays exact integer the whole way."
     ),
     "ops_graph_snapshot": (
         "Version-partitioned snapshot store: every version is its own "
