@@ -189,6 +189,9 @@ def _setup_items() -> list:
         ),
         ("stream_source_stage", streaming._events_src_dir, []),
         ("copurchase_project", g_an._copurchase_edges, []),
+        # The symmetric (src, dst, n_orders, outdeg) edge table every
+        # co-purchase kernel reads.
+        ("graph_sym_edges", g_an._sym_edges, []),
         ("triangle_enumerate", g_an._tri_cached, []),
         ("bfs_levels_persist", registry._bfs_levels_cached, []),
         ("dedup_near_pairs", pl_dedup.dedup_near_pairs, ["dedup_near"]),

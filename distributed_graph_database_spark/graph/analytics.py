@@ -56,33 +56,40 @@ COPURCHASE_MAX_BASKET = 64
 
 
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cached entry (cache.shared): the projected edge table feeds
-    graph_copurchase, graph_triangles, and graph_pagerank."""
+    """Cached entry (cache.shared): the projected (p1 < p2) edge table
+    feeds graph_copurchase, the symmetric graph (`_sym_edges`) and the
+    triangle family (triangles, jaccard, clustering_coef, k-truss)."""
     return shared(
         spark, sf_dir, "graph_copurchase", lambda: _copurchase_impl(spark, sf_dir)
     )
 
 
-def _sym_edges(
-    spark: SparkSession, sf_dir: str, checkpoint: bool = False
-) -> DataFrame:
-    """Undirected co-purchase adjacency → (src, dst): both directions
-    of the deduped edge list — THE single definition every unweighted
-    graph kernel symmetrizes through (a tie-break or checkpoint-policy
-    change lands here, not in N hand-copied blocks).
-    checkpoint=True for kernels that re-consume the table across
-    rounds (the loop-invariant-table rule); leave False when it feeds
-    one lazy plan."""
-    e = _copurchase_edges(spark, sf_dir).select("p1", "p2")
-    sym = e.union(
-        e.select(F.col("p2").alias("p1"), F.col("p1").alias("p2"))
-    ).select(F.col("p1").alias("src"), F.col("p2").alias("dst"))
-    return sym.localCheckpoint(eager=True) if checkpoint else sym
+def _sym_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The symmetric co-purchase graph, one cache.shared artifact
+    ("graph_sym") → (src, dst, n_orders, outdeg): both directions of
+    every co-purchase edge with its order count and src's degree. THE
+    single definition every co-purchase kernel reads (PageRank, PPR,
+    HITS, SSSP, label propagation, modularity, Brandes, k-core,
+    assortativity, link prediction, walks), checkpointed once per
+    (session, sf) — the GraphX edge table every algorithm joins
+    against. Every vertex is both a src and a dst, with outdeg ≥ 1."""
+
+    def build() -> DataFrame:
+        e = _copurchase_edges(spark, sf_dir)
+        sym = e.select(
+            F.col("p1").alias("src"), F.col("p2").alias("dst"), "n_orders"
+        ).unionAll(
+            e.select(F.col("p2").alias("src"), F.col("p1").alias("dst"), "n_orders")
+        )
+        deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
+        return sym.join(deg, "src")
+
+    return shared(spark, sf_dir, "graph_sym", build)
 
 
 def _min_id_seeds(sym: DataFrame, k: int) -> DataFrame:
     """The k smallest vertex ids as (s,) — the deterministic seed set
-    of the Brandes kernel's keys (betweenness, closeness)."""
+    of the seeded kernels (PPR, SSSP, betweenness, closeness)."""
     return (
         sym.select("src").distinct().orderBy("src").limit(k)
         .select(F.col("src").alias("s"))
@@ -255,8 +262,8 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The engine's flagship *iterative analytics* operator beyond
     traversal: same driver-loop shape as bfs_levels/components —
-    per-round join + groupBy-sum over a checkpointed edge table, rank
-    state checkpointed each round. The round count is FIXED (not
+    per-round join + groupBy-sum over the shared symmetric edge table
+    (`_sym_edges`), lazy rank state. The round count is FIXED (not
     convergence-driven) on purpose: both engines run exactly
     PR_ROUNDS supersteps, so the DuckDB oracle can unroll them as
     generated CTEs and hash-check the float ranks (rounded 6 dp —
@@ -267,26 +274,19 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the edge table is the bucketed canonical one and this loop
     is GraphX's Pregel superstep expressed in DataFrame algebra.
     """
+    # The rounds stay lazy: with a fixed small round count the whole
+    # iteration is one linear plan, and a per-round materialization
+    # would quintuple the stage overhead (measured 11.6s → ~4s at
+    # sf0.1). Unbounded-round loops (BFS, components) checkpoint per
+    # round because their lineage is unbounded; a fixed-superstep
+    # kernel's isn't.
     sym = _sym_edges(spark, sf_dir)
-    deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    # The two loop-invariant tables are checkpointed ONCE; the rounds
-    # themselves stay lazy — with a fixed small round count the whole
-    # iteration is one linear plan executed in a single job, and a
-    # per-round materialization would quintuple the stage overhead
-    # (measured 11.6s → ~4s at sf0.1). Unbounded-round loops (BFS,
-    # components) checkpoint per round because their lineage is
-    # unbounded; a fixed-superstep kernel's isn't.
-    ew = sym.join(deg, "src").localCheckpoint(eager=True)
-    n1 = deg.agg(F.count(F.lit(1)).alias("n"))
-    verts = (
-        deg.select(F.col("src").alias("v"))
-        .crossJoin(F.broadcast(n1))
-        .localCheckpoint(eager=True)
-    )
+    vs = sym.select(F.col("src").alias("v")).distinct()
+    verts = vs.crossJoin(F.broadcast(vs.agg(F.count(F.lit(1)).alias("n"))))
     ranks = verts.select("v", (F.lit(1.0) / F.col("n")).alias("r"))
     for _ in range(PR_ROUNDS):
         contrib = (
-            ew.join(ranks, ew.src == ranks.v)
+            sym.join(ranks, sym.src == ranks.v)
             .groupBy("dst")
             .agg(F.sum(F.col("r") / F.col("outdeg")).alias("contrib"))
         )
@@ -345,8 +345,8 @@ def graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-graph BFS could only approximate by hop count.
 
     Same kernel as graph_pagerank — per-round join + groupBy-sum over
-    the once-checkpointed degree-annotated edges, lazy bounded
-    lineage, one job — differing only in the restart vector: the
+    the shared degree-annotated edges (`_sym_edges`), lazy bounded
+    lineage — differing only in the restart vector: the
     (1-d) mass lands on the indicator [v = source] rather than 1/n.
     Since r11 this is literally the k=1 case of the batched sparse
     kernel (_ppr_sparse below): PPR's restart vector is SPARSE (unlike
@@ -379,9 +379,9 @@ def graph_ppr_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact 6-dp parity both SFs): 2.91→2.61 s sf0.1, 6.56→5.17 s sf1.
     At 100 TB the saving is structural: per-round state is
     O(reached), not O(K·V). Lazy bounded lineage (fixed PR_ROUNDS
-    supersteps — the pagerank discipline; re-aggregating kernels like
-    HITS must checkpoint instead). Output stays K·|V| rows — the full
-    per-seed mass vector (zero beyond the PR_ROUNDS-hop horizon)."""
+    supersteps — the pagerank and HITS discipline). Output stays
+    K·|V| rows — the full per-seed mass vector (zero beyond the
+    PR_ROUNDS-hop horizon)."""
     return _ppr_sparse(spark, sf_dir, PPR_SEEDS).select("seed", "vid", F.col("ppr"))
 
 
@@ -391,13 +391,9 @@ def _ppr_sparse(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
     state₀ = {(s, s, 1.0)}; per round state' = d·(edge-propagated
     contrib) ∪ (1-d)·seed-indicator; densified once at the end."""
     sym = _sym_edges(spark, sf_dir)
-    deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    ew = sym.join(deg, "src").localCheckpoint(eager=False)
-    seeds = (
-        deg.select("src").orderBy("src").limit(k).select(F.col("src").alias("s"))
-    )
+    seeds = _min_id_seeds(sym, k)
     verts = (
-        deg.select(F.col("src").alias("v"))
+        sym.select(F.col("src").alias("v")).distinct()
         .crossJoin(F.broadcast(seeds))
         .localCheckpoint(eager=False)
     )
@@ -406,14 +402,14 @@ def _ppr_sparse(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
     ).localCheckpoint(eager=False)
     # derived from the CHECKPOINTED state, not the raw seeds subplan:
     # restart is unioned into every round, so deriving it from seeds
-    # would embed the degree-groupBy + sort-limit subtree PR_ROUNDS
+    # would embed the distinct + sort-limit subtree PR_ROUNDS
     # times in the final lazy plan (r11 review finding)
     restart = state.select(
         "s", "v", F.lit(1.0 - PR_DAMPING).alias("r")
     )
     for _ in range(PR_ROUNDS):
         contrib = (
-            ew.join(state, ew.src == state.v)
+            sym.join(state, sym.src == state.v)
             .groupBy("s", "dst")
             .agg(F.sum(F.col("r") / F.col("outdeg")).alias("c"))
             .select(
@@ -481,7 +477,7 @@ HITS_ROUNDS = 4  # fixed mutual-reinforcement iterations (oracle-unrollable)
 
 def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HITS hubs-and-authorities, HITS_ROUNDS fixed mutual-
-    reinforcement iterations with L1 normalization per half-step →
+    reinforcement iterations with L1 normalization →
     (vid, round(hub, 6), round(authority, 6)). The third classic
     eigenvector centrality next to pagerank (global stationary walk)
     and PPR (seeded walk): authority mass flows FROM hubs over edges,
@@ -490,78 +486,38 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     their divergence from pagerank is exactly the degree-vs-walk
     distinction an analyst wants surfaced.
 
-    Per half-step one equi-join + groupBy-sum over the once-
-    checkpointed edges, then a broadcast 1-row L1 total. UNLIKE
-    pagerank, each half-step's NORMALIZED state is localCheckpoint-ed:
-    a fully lazy lineage re-derives the whole prefix per reuse —
-    measured 35 s at sf0.1 lazy vs ~3 s checkpointed; pagerank stays
-    lazy only because its contributions are consumed exactly once.
-    Checkpoint granularity is a measured decision (VERDICT r9 item
-    6): the RAW half-step vectors are NOT checkpointed — each is
-    consumed twice (rows + L1 total), but both consumers sit in the
-    SAME eager checkpoint plan of the normalized vector, so the
-    re-evaluation is one extra join+agg over already-checkpointed
-    inputs, cheaper than the checkpoint job it replaces (2 vs 4
-    checkpoints/round: 5.9→5.2 s at sf0.1, 10.4→9.2 s at sf1,
-    results identical). Fixed rounds make the DuckDB oracle a
-    generated CTE unroll (MATERIALIZED per round — the same reuse
-    argument). Normalization sums are float (order-jitter ~1e-13
-    over 4 rounds, absorbed by round(6) — the pagerank contract)."""
-    sym = _sym_edges(spark, sf_dir, checkpoint=True)
-    verts = sym.select(F.col("src").alias("v")).distinct().localCheckpoint(
-        eager=True
-    )
-    n1 = verts.agg(F.count(F.lit(1)).alias("n"))
-    hub = verts.crossJoin(F.broadcast(n1)).select(
-        "v", (F.lit(1.0) / F.col("n")).alias("h")
-    )
-    auth = None
-    # No per-half-step densify join (r14, guide §2.4): on the
-    # SYMMETRIZED edge table every vertex appears as both src and dst,
-    # and the propagating vector always covers all of `verts` (round 0
-    # by construction, later rounds inductively by this same
-    # argument), so the raw sums already carry one row per vertex —
-    # the old verts LEFT-join + coalesce(0.0) was an identity densify
-    # (its coalesce could never fire) costing one join per half-step,
-    # 8 per key. Removing it changes no row: same vertex set, same
-    # sums, same normalization. The final-output join of hub×auth
-    # remains the only join outside the propagation itself.
-    for _ in range(HITS_ROUNDS):
-        a_raw = (
-            sym.join(hub, sym.src == hub.v)
-            .groupBy("dst")
-            .agg(F.sum("h").alias("a_raw"))
+    One power iteration: on a symmetric graph A = Aᵀ, so from the
+    uniform start a_k ∝ A^(2k−1)·1 and h_k ∝ A^(2k)·1, and since L1
+    normalization of a non-negative vector is scale-invariant it runs
+    once, at the end. The kernel is a lazy chain of walk counts
+    v_{j+1} = groupBy(dst).sum over sym ⋈ v_j from v₁ = outdeg, and
+    authority = v₇/Σv₇, hub = v₈/Σv₈ (HITS_ROUNDS = 4). The counts
+    are exact bigints — no summation-order noise, no dependence on
+    partitioning — so the only float op is that final division. They
+    stay far below 2⁶³ (largest on the testdata: Σv₈ = 4.1e13 at
+    sf0.001, max degree 51), and an overflow would raise under ANSI
+    mode rather than wrap. Each vector feeds only the next step, and
+    v₇/v₈ their normalization, so the lineage is a linear chain like
+    pagerank's. The DuckDB oracle keeps the per-half-step
+    normalization, an independent check of the algebra."""
+    sym = _sym_edges(spark, sf_dir)
+    # v₂ needs no join: each sym row carries its src's v₁ = outdeg.
+    walks = [sym.groupBy(F.col("dst").alias("v")).agg(F.sum("outdeg").alias("x"))]
+    for _ in range(2 * HITS_ROUNDS - 2):
+        walks.append(
+            sym.join(walks[-1], sym.src == walks[-1].v)
+            .groupBy(F.col("dst").alias("v"))
+            .agg(F.sum("x").alias("x"))
         )
-        a_tot = a_raw.agg(F.sum("a_raw").alias("t"))
-        auth = (
-            a_raw.crossJoin(F.broadcast(a_tot))
-            .select(
-                F.col("dst").alias("v"),
-                (F.col("a_raw") / F.col("t")).alias("a"),
-            )
-            .localCheckpoint(eager=True)
+
+    def l1(x: DataFrame, name: str) -> DataFrame:
+        t = x.agg(F.sum("x").alias("t"))
+        return x.crossJoin(F.broadcast(t)).select(
+            "v", F.round(F.col("x") / F.col("t"), 6).alias(name)
         )
-        h_raw = (
-            sym.join(auth, sym.dst == auth.v)
-            .groupBy("src")
-            .agg(F.sum("a").alias("h_raw"))
-        )
-        h_tot = h_raw.agg(F.sum("h_raw").alias("t"))
-        hub = (
-            h_raw.crossJoin(F.broadcast(h_tot))
-            .select(
-                F.col("src").alias("v"),
-                (F.col("h_raw") / F.col("t")).alias("h"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return (
-        hub.join(auth, "v")
-        .select(
-            F.col("v").alias("vid"),
-            F.round("h", 6).alias("hub"),
-            F.round("a", 6).alias("authority"),
-        )
+
+    return l1(walks[-1], "hub").join(l1(walks[-2], "authority"), "v").select(
+        F.col("v").alias("vid"), "hub", "authority"
     )
 
 
@@ -688,7 +644,7 @@ def graph_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
     seed, the inner loop of betweenness centrality. Full betweenness is
     the SUM of this pass over a seed set (`graph_betweenness_multi`).
     σ stays exact bigint; δ is the only float (round 6)."""
-    sym = _sym_edges(spark, sf_dir, checkpoint=True)
+    sym = _sym_edges(spark, sf_dir)
     deltas = _brandes(sym, _min_id_seeds(sym, 1))
     return reduce(DataFrame.unionByName, [
         d.select(
@@ -711,7 +667,7 @@ def graph_betweenness_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     K seeds cost one job of ~K× rows per level instead of K
     driver-sequenced runs: at small K each round's shuffle launch
     overhead, not its rows, dominates."""
-    sym = _sym_edges(spark, sf_dir, checkpoint=True)
+    sym = _sym_edges(spark, sf_dir)
     deltas = _brandes(sym, _min_id_seeds(sym, BETW_SEEDS))
     return (
         reduce(DataFrame.unionByName, deltas)
@@ -809,7 +765,7 @@ def graph_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     are exact bigints (LCM = lcm(1..BETW_H) makes every per-level
     weight integral); the two float columns are each ONE division of
     exact integers, so round(6) never sees summation-order noise."""
-    sym = _sym_edges(spark, sf_dir, checkpoint=True)
+    sym = _sym_edges(spark, sf_dir)
     levels = _brandes_levels(sym, _min_id_seeds(sym, BETW_SEEDS))
     counts = reduce(DataFrame.unionByName, [
         levels[h].groupBy("s").agg(F.count(F.lit(1)).alias("cnt")).select(
@@ -991,26 +947,14 @@ def graph_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     round count becomes a convergence loop with per-round checkpoints
     (the bfs_levels shape) once the horizon is unbounded.
     """
-    e = _copurchase_edges(spark, sf_dir)
-    sym = e.union(
-        e.select(F.col("p2").alias("p1"), F.col("p1").alias("p2"), "n_orders")
-    ).select(
-        F.col("p1").alias("src"),
-        F.col("p2").alias("dst"),
-        (F.lit(1.0) / F.col("n_orders")).alias("w"),
-    ).localCheckpoint(eager=True)
-    src0 = sym.agg(F.min("src").alias("s"))
-    dist = (
-        sym.select("src").distinct()
-        .crossJoin(F.broadcast(src0))
-        .filter(F.col("src") == F.col("s"))
-        .select(F.col("src").alias("v"), F.lit(0.0).alias("dist"))
+    sym = _sym_edges(spark, sf_dir)
+    edges = sym.select("src", "dst", (F.lit(1.0) / F.col("n_orders")).alias("w"))
+    dist = _min_id_seeds(sym, 1).select(
+        F.col("s").alias("v"), F.lit(0.0).alias("dist")
     )
     for _ in range(SSSP_ROUNDS):
-        relaxed = (
-            sym.join(dist, sym.src == dist.v)
-            .select("dst", (F.col("dist") + F.col("w")).alias("dist"))
-            .select(F.col("dst").alias("v"), "dist")
+        relaxed = edges.join(dist, edges.src == dist.v).select(
+            F.col("dst").alias("v"), (F.col("dist") + F.col("w")).alias("dist")
         )
         dist = (
             dist.unionByName(relaxed)
@@ -1070,8 +1014,6 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     vertex count. Rounds run on `iterate.fixpoint`, which raises if
     KCORE_MAX_ROUNDS is hit without convergence rather than silently
     returning an unpeeled set (the components lesson, ADVICE r2)."""
-    e = _copurchase_edges(spark, sf_dir).select("p1", "p2")
-
     def peel(sub: DataFrame, _) -> DataFrame:
         survivors = (
             sub.groupBy("src")
@@ -1105,9 +1047,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fixpoint: if no edge was removed, degrees are unchanged, so the
     # next survivor set is identical.
     states, _ = fixpoint(
-        e.select(F.col("p1").alias("src"), F.col("p2").alias("dst")).unionAll(
-            e.select(F.col("p2").alias("src"), F.col("p1").alias("dst"))
-        ),
+        _sym_edges(spark, sf_dir).select("src", "dst"),
         peel,
         DataFrame.count,
         operator.eq,
@@ -1253,24 +1193,15 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cross-engine exactness: ql_corr's recipe — the five moment sums run
     in exact decimal(38,0) (degrees are small ints, edges bounded, so
     intermediates are exact), the only float ops are the final
-    conversions both engines apply to identical integers. Cost: one
-    degree groupBy + two joins of the edge list against the (tiny)
-    degree table + one global aggregate; no shuffle carries anything
-    wider than (x, y) int pairs."""
-    e = _copurchase_edges(spark, sf_dir).select("p1", "p2")
-    sym = e.select(F.col("p1").alias("src"), F.col("p2").alias("dst")).unionAll(
-        e.select(F.col("p2").alias("src"), F.col("p1").alias("dst"))
-    )
-    deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    xy = (
-        sym.join(deg.withColumnRenamed("src", "src").withColumnRenamed("d", "dx"), "src")
-        .join(
-            deg.select(F.col("src").alias("dst"), F.col("d").alias("dy")), "dst"
-        )
-        .select(
-            F.col("dx").cast("decimal(38,0)").alias("x"),
-            F.col("dy").cast("decimal(38,0)").alias("y"),
-        )
+    conversions both engines apply to identical integers. Cost: the
+    shared symmetric edge table already carries src's degree, dst's is
+    one count window partitioned by dst, then one global aggregate; no
+    shuffle carries anything wider than (dst, degree) int pairs."""
+    # On a symmetric graph dst's degree is its row count as a dst.
+    xy = _sym_edges(spark, sf_dir).select(
+        F.col("outdeg").cast("decimal(38,0)").alias("x"),
+        F.count(F.lit(1)).over(Window.partitionBy("dst"))
+        .cast("decimal(38,0)").alias("y"),
     )
     agg = xy.agg(
         F.count(F.lit(1)).cast("decimal(38,0)").alias("n"),
@@ -1416,20 +1347,14 @@ def graph_link_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
     is also the standard quality move (a hub vertex connects
     everything to everything and carries ~zero predictive signal —
     the same reasoning as Adamic-Adar's 1/log(deg) downweight, taken
-    to its cap limit). Candidate pairs then anti-join the existing
+    to its cap limit); the cap is a row filter on the degree each
+    symmetric edge carries. Candidate pairs then anti-join the existing
     edge set; the global top-K is a TakeOrderedAndProject with
     (common DESC, p1, p2) — deterministic, never a full sort."""
-    e = _copurchase_edges(spark, sf_dir).select("p1", "p2")
-    sym = e.select(F.col("p1").alias("src"), F.col("p2").alias("dst")).unionAll(
-        e.select(F.col("p2").alias("src"), F.col("p1").alias("dst"))
+    sym = _sym_edges(spark, sf_dir)
+    legs = sym.filter(F.col("outdeg") <= LINKPRED_MAX_DEG).select(
+        F.col("src").alias("mid"), "dst"
     )
-    deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    mids = deg.filter(F.col("d") <= LINKPRED_MAX_DEG).select(
-        F.col("src").alias("mid")
-    )
-    legs = sym.join(
-        F.broadcast(mids), sym.src == mids.mid
-    ).select("mid", "dst")
     a, b = legs.alias("a"), legs.alias("b")
     wedges = a.join(
         b,
@@ -1439,8 +1364,8 @@ def graph_link_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("common_neighbors")
     )
     nonedges = cand.join(
-        e,
-        (F.col("wa") == F.col("p1")) & (F.col("wc") == F.col("p2")),
+        sym,
+        (F.col("wa") == F.col("src")) & (F.col("wc") == F.col("dst")),
         "left_anti",
     )
     return (
@@ -1507,18 +1432,11 @@ def graph_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     longs per vertex. Same Pregel-on-DataFrames shape as pagerank:
     fixed rounds ⇒ lazy bounded lineage, one job."""
     return shared(
-        spark, sf_dir, "lpa_communities", lambda: _communities_impl(spark, sf_dir)
+        spark,
+        sf_dir,
+        "lpa_communities",
+        lambda: label_propagation(_sym_edges(spark, sf_dir), LPA_ROUNDS),
     )
-
-
-def _communities_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _copurchase_edges(spark, sf_dir).select("p1", "p2")
-    sym = (
-        e.union(e.select(F.col("p2").alias("p1"), F.col("p1").alias("p2")))
-        .select(F.col("p1").alias("src"), F.col("p2").alias("dst"))
-        .localCheckpoint(eager=True)
-    )
-    return label_propagation(sym, LPA_ROUNDS)
 
 
 def label_propagation(sym: DataFrame, rounds: int = LPA_ROUNDS) -> DataFrame:
@@ -1605,40 +1523,26 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     to 6dp. No per-community float accumulation order to diverge.
 
     Scale: consumes the session-shared LPA result (built once, the
-    dedup_ngram owner/composite rule) + the checkpointed sym edge
-    table; two label joins partition on the vertex key, the term table
-    is one row per community, and the three 1-row totals ride
-    broadcast cross joins. Nothing here exceeds the LPA pass already
+    dedup_ngram owner/composite rule) + the shared sym edge table;
+    two label joins partition on the vertex key, one groupBy yields
+    the term table (one row per community), and the two 1-row totals
+    ride broadcast cross joins. Nothing here exceeds the LPA pass already
     paid."""
     comm = graph_communities(spark, sf_dir)
-    # checkpoint=True: sym feeds three sub-plans here (deg, intra, m2)
-    # — the module's loop-invariant/multi-consumption rule (ADVICE
-    # r11 #3; the underlying co-purchase edges are shared-cached, so
-    # this trims plan re-derivation, not recompute).
-    sym = _sym_edges(spark, sf_dir, checkpoint=True)
-    deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    degc = (
-        deg.join(comm.select(F.col("vid").alias("src"), "community"), "src")
-        .groupBy("community")
-        .agg(F.sum("d").cast("bigint").alias("deg_c"))
-    )
-    intra = (
-        sym.join(
-            comm.select(F.col("vid").alias("src"), F.col("community").alias("c_src")),
-            "src",
-        )
+    sym = _sym_edges(spark, sf_dir)
+    # One pass over the labelled edges: a community's degree sum is its
+    # members' row count as src, intra2 the rows whose dst shares it.
+    terms = (
+        sym.join(comm.select(F.col("vid").alias("src"), "community"), "src")
         .join(
             comm.select(F.col("vid").alias("dst"), F.col("community").alias("c_dst")),
             "dst",
         )
-        .filter(F.col("c_src") == F.col("c_dst"))
-        .groupBy(F.col("c_src").alias("community"))
-        .agg(F.count(F.lit(1)).alias("intra2"))
-    )
-    terms = degc.join(intra, "community", "left").select(
-        "community",
-        F.coalesce("intra2", F.lit(0)).alias("intra2"),
-        "deg_c",
+        .groupBy("community")
+        .agg(
+            F.count(F.lit(1)).alias("deg_c"),
+            F.count(F.when(F.col("community") == F.col("c_dst"), 1)).alias("intra2"),
+        )
     )
     m2 = sym.agg(F.count(F.lit(1)).alias("m2"))
     nv = comm.agg(F.count(F.lit(1)).alias("n_vertices"))
@@ -1814,10 +1718,9 @@ def graph_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     step is one equi-join of the walk frontier against the edge table
     plus a per-walk struct-min — |V| walks advance together, the
     Pregel discipline; nothing is sequential per-walk."""
-    e = _copurchase_edges(spark, sf_dir).select("p1", "p2")
-    sym = e.union(e.select(F.col("p2").alias("p1"), F.col("p1").alias("p2")))
+    sym = _sym_edges(spark, sf_dir)
     state = (
-        sym.select(F.col("p1").alias("start"))
+        sym.select(F.col("src").alias("start"))
         .distinct()
         .select(
             "start",
@@ -1830,20 +1733,20 @@ def graph_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat(
                 F.col("cur").cast("string"),
                 F.lit(f"_{step}_"),
-                F.col("p2").cast("string"),
+                F.col("dst").cast("string"),
             )
         )
-        cand = state.join(sym, state.cur == sym.p1).select(
-            "start", "walk", h.alias("h"), "p2"
+        cand = state.join(sym, state.cur == sym.src).select(
+            "start", "walk", h.alias("h"), "dst"
         )
         state = (
             cand.groupBy("start", "walk")
-            .agg(F.min(F.struct("h", "p2")).alias("m"))
+            .agg(F.min(F.struct("h", "dst")).alias("m"))
             .select(
                 "start",
-                F.col("m.p2").alias("cur"),
+                F.col("m.dst").alias("cur"),
                 F.concat(
-                    F.col("walk"), F.lit(">"), F.col("m.p2").cast("string")
+                    F.col("walk"), F.lit(">"), F.col("m.dst").cast("string")
                 ).alias("walk"),
             )
         )

@@ -23,10 +23,10 @@ caller's span.
 
 Users: `bfs_levels`, `connected_components_with_rounds`, `graph_kcore`,
 `graph_ktruss` and `graph_scc`'s closure. Loops left outside on purpose:
-the fixed-round lazy loops (PageRank, PPR, SSSP, label propagation)
-have nothing to checkpoint or probe; HITS and the seeded Brandes kernel
-(`analytics._brandes_levels`/`_brandes`, which betweenness and
-closeness share) are fixed-level eager loops with no probe. On the
+the fixed-round lazy loops (PageRank, PPR, HITS, SSSP, label
+propagation) have nothing to checkpoint or probe; the seeded Brandes
+kernel (`analytics._brandes_levels`/`_brandes`, which betweenness and
+closeness share) is a fixed-level eager loop with no probe. On the
 Brandes forward pass a count probe adds an exchange that an eager
 checkpoint does not: measured +1 job per level (`graph_closeness` 33 →
 38 jobs at sf0.01). Borůvka (`minimum_spanning_forest`) carries three

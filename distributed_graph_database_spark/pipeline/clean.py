@@ -29,6 +29,7 @@ from .text import (
     QUALITY_MIN_CHARS,
     QUALITY_MIN_DIVERSITY,
     _marker_score,
+    _norm_tokens,
     _tokens,
     fingerprint_col,
     lang_pred_col,
@@ -841,7 +842,7 @@ def corpus_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = table(spark, sf_dir, "documents").select(
         "doc_id",
-        F.size(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("n_tokens"),
+        F.size(_norm_tokens()).alias("n_tokens"),
         # Single-definition exact-dedup key (shared with dedup_exact
         # and text_fingerprint): if the normalization ever changes,
         # the funnel's stage 1 moves with it.

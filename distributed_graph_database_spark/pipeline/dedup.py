@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from ..cache import shared
 from ..catalog import table
+from .text import INCR_BASE_PCT, _norm_tokens
 
 # MinHash configuration: H hashes in B bands of R rows (H = B*R).
 MINHASH_BANDS = 8
@@ -55,10 +56,6 @@ NEAR_TRUTH_DF_CAP = 256
 # sf0.01, 6 at sf0.1 — measured) so fixture output is byte-identical
 # to the uncapped oracle.
 NGRAM_DF_CAP = 64
-
-
-def _norm_tokens() -> F.Column:
-    return F.split(F.lower(F.trim(F.col("text"))), r"\s+")
 
 
 def _shingles(tokens: F.Column) -> F.Column:
@@ -716,9 +713,6 @@ walk(vid, lbl) AS (
 SELECT CAST(vid AS BIGINT) AS doc_id, CAST(MIN(lbl) AS BIGINT) AS cluster_id
 FROM walk GROUP BY vid
 """
-
-
-INCR_BASE_PCT = 90  # md5 buckets 0-89 → released base; 90-99 → delta
 
 
 def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:

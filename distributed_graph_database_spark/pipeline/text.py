@@ -40,6 +40,13 @@ def _tokens(col: str = "text") -> F.Column:
     return F.split(F.trim(F.col(col)), r"\s+")
 
 
+def _norm_tokens() -> F.Column:
+    """The `text` column lower-cased and split on whitespace runs: the
+    one word tokenization the dedup, n-gram and corpus-statistics
+    operators share."""
+    return F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+
+
 def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document surface statistics → one row per doc.
 
@@ -397,7 +404,7 @@ def text_ngrams_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     bigram) set, never a full sort."""
     toks = (
         table(spark, sf_dir, "documents")
-        .select("doc_id", F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("toks"))
+        .select("doc_id", _norm_tokens().alias("toks"))
         .localCheckpoint(eager=False)
     )
     bigrams = toks.select(
@@ -465,7 +472,7 @@ def text_tfidf_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot flip ranks."""
     toks = (
         table(spark, sf_dir, "documents")
-        .select("doc_id", F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("term"))
+        .select("doc_id", F.explode(_norm_tokens()).alias("term"))
     )
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -549,7 +556,7 @@ def _text_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = CONTAM_SHINGLE_K
     toks = (
         table(spark, sf_dir, "documents")
-        .select("doc_id", F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("toks"))
+        .select("doc_id", _norm_tokens().alias("toks"))
         .localCheckpoint(eager=False)
     )
     sh = toks.select(
@@ -1185,7 +1192,7 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = (
         table(spark, sf_dir, "documents")
-        .select("doc_id", F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("toks"))
+        .select("doc_id", _norm_tokens().alias("toks"))
         .localCheckpoint(eager=False)
     )
     uni = (
@@ -1308,7 +1315,7 @@ def text_dup_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = DUPNG_K
     toks = (
         table(spark, sf_dir, "documents")
-        .select("doc_id", F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("toks"))
+        .select("doc_id", _norm_tokens().alias("toks"))
         .localCheckpoint(eager=False)
     )
     sh = (
@@ -1532,11 +1539,7 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounding (the text_unigram_logprob / ql_corr argument)."""
     docs = table(spark, sf_dir, "documents")
     vocab = (
-        docs.select(
-            F.explode(
-                F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-            ).alias("w")
-        )
+        docs.select(F.explode(_norm_tokens()).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -1739,7 +1742,7 @@ def text_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pipeline-brief dedup surface at line granularity."""
     w = LINE_W
     toks = table(spark, sf_dir, "documents").select(
-        "doc_id", F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("toks")
+        "doc_id", _norm_tokens().alias("toks")
     )
     n_blocks = F.floor((F.size("toks") + (w - 1)) / w).cast("int")
     lines = toks.select(
@@ -1939,9 +1942,7 @@ def text_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         table(spark, sf_dir, "documents")
         .select(
             "doc_id",
-            F.explode(
-                F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-            ).alias("term"),
+            F.explode(_norm_tokens()).alias("term"),
         )
         .filter(F.col("term").isin(terms))
     )
@@ -2008,6 +2009,11 @@ SELECT * FROM (
 NOVELTY_SHINGLE_K = 3
 
 
+# The md5 release split text_novelty and dedup_incremental share:
+# buckets 0-89 → released base; 90-99 → delta.
+INCR_BASE_PCT = 90
+
+
 def text_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source novelty of the incoming DELTA vs the released BASE
     → (source, n_docs, n_shingles, n_novel, novelty_pct): the fraction
@@ -2015,8 +2021,8 @@ def text_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     seen in the released corpus — the freshness/memorization dial a
     pretraining ingest watches next to dedup_incremental's drop
     report (same md5 release split: buckets < INCR_BASE_PCT are the
-    base, the dedup.py:679 convention, so 'released' means the same
-    docs in both keys).
+    base, the dedup_incremental convention, so 'released' means the
+    same docs in both keys).
 
     Scale shape: both sides contract to md5 shingle HASHES before
     meeting; the base side is DISTINCT'd (bounded by the shingle-hash
@@ -2027,7 +2033,6 @@ def text_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pct is one integer division in double (bit-identical across
     engines)."""
     from .clean import _md5_u32
-    from .dedup import INCR_BASE_PCT
 
     k = NOVELTY_SHINGLE_K
     toks = (
@@ -2036,7 +2041,7 @@ def text_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             "source",
             (_md5_u32() % 100 < INCR_BASE_PCT).alias("is_base"),
-            F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("toks"),
+            _norm_tokens().alias("toks"),
         )
         .localCheckpoint(eager=False)
     )
@@ -2085,8 +2090,6 @@ def text_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_text_novelty() -> str:
-    from .dedup import INCR_BASE_PCT
-
     k = NOVELTY_SHINGLE_K
     gram = " || ' ' || ".join(f"t[i+{j}]" for j in range(k))
     return rf"""
@@ -2160,7 +2163,7 @@ def text_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents").select(
         "doc_id",
         "source",
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("toks"),
+        _norm_tokens().alias("toks"),
     )
     n_blocks = F.floor((F.size("toks") + (w - 1)) / w).cast("int")
     lines = docs.select(
@@ -2244,7 +2247,7 @@ def text_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = LINE_W
     docs = table(spark, sf_dir, "documents").select(
         "source",
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("toks"),
+        _norm_tokens().alias("toks"),
     )
     n_blocks = F.floor((F.size("toks") + (w - 1)) / w).cast("int")
     hs = docs.select(

@@ -159,9 +159,9 @@ def test_token_budget_invariants(spark, sf_oracle):
 
 def test_hits_mass_and_symmetric_convergence(spark, sf_oracle):
     """L1 normalization conserves unit mass on both vectors; on a
-    SYMMETRIZED graph hub and authority are the SAME iteration offset
-    by one half-step (h_k = normalize(A·a_k)), so after 4 rounds they
-    agree to within the power-iteration convergence gap (well under
+    SYMMETRIZED graph hub and authority are one power iteration one
+    step apart (the normalized walk counts A⁸·1 and A⁷·1 after 4
+    rounds), so they agree to within the convergence gap (well under
     1e-3 per vertex here) and share their argmax vertex."""
     from distributed_graph_database_spark.graph import analytics
 
@@ -174,18 +174,47 @@ def test_hits_mass_and_symmetric_convergence(spark, sf_oracle):
     ).vid
 
 
+def test_copurchase_kernels_ignore_shuffle_partitioning(spark, sf_smoke):
+    """HITS, PageRank and SSSP give the same rows with 1 and with 7
+    shuffle partitions, the shared edge artifacts rebuilt under each:
+    HITS's walk counts are exact integers, SSSP takes minima, and
+    PageRank's float sums round to 6 dp."""
+    from distributed_graph_database_spark import cache
+    from distributed_graph_database_spark.graph import analytics
+
+    def drop_edge_artifacts():
+        for k in [k for k in cache._MEMO if k[1] == sf_smoke
+                  and k[2] in ("graph_copurchase", "graph_sym")]:
+            del cache._MEMO[k]
+
+    keys = (analytics.graph_hits, analytics.graph_pagerank, analytics.graph_sssp)
+    conf = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(conf)
+    rows = {}
+    try:
+        for n in (1, 7):
+            spark.conf.set(conf, str(n))
+            drop_edge_artifacts()
+            rows[n] = [sorted(map(tuple, f(spark, sf_smoke).collect())) for f in keys]
+    finally:
+        spark.conf.set(conf, before)
+        drop_edge_artifacts()
+    assert all(rows[1]) and rows[1] == rows[7]
+
+
 def test_betweenness_path_graph_golden(spark, monkeypatch):
     """Brandes dependency golden on a 4-path 0-1-2-3 (seed 0): σ = 1
     everywhere, δ(v) = #descendants on the path (3, 2, 1, 0)."""
     from distributed_graph_database_spark.graph import analytics
 
     edges = spark.createDataFrame(
-        [(0, 1), (1, 2), (2, 3)], "p1 bigint, p2 bigint"
+        [(0, 1, 2), (1, 2, 2), (2, 3, 2)], "p1 bigint, p2 bigint, n_orders bigint"
     )
     monkeypatch.setattr(
         analytics, "_copurchase_edges", lambda spark_, sf_: edges
     )
-    rows = analytics.graph_betweenness(spark, "ignored").collect()
+    # Its own sf_dir: the symmetric edge artifact is memoized per sf_dir.
+    rows = analytics.graph_betweenness(spark, "fixture-path-graph").collect()
     got = {r.vid: (r.level, r.sigma, r.delta) for r in rows}
     assert got == {
         0: (0, 1, 3.0),
@@ -202,12 +231,13 @@ def test_betweenness_diamond_splits_dependency(spark, monkeypatch):
     from distributed_graph_database_spark.graph import analytics
 
     edges = spark.createDataFrame(
-        [(0, 1), (0, 2), (1, 3), (2, 3)], "p1 bigint, p2 bigint"
+        [(0, 1, 2), (0, 2, 2), (1, 3, 2), (2, 3, 2)],
+        "p1 bigint, p2 bigint, n_orders bigint",
     )
     monkeypatch.setattr(
         analytics, "_copurchase_edges", lambda spark_, sf_: edges
     )
-    rows = analytics.graph_betweenness(spark, "ignored").collect()
+    rows = analytics.graph_betweenness(spark, "fixture-diamond-graph").collect()
     got = {r.vid: (r.level, r.sigma, r.delta) for r in rows}
     assert got == {
         0: (0, 1, 3.0),

@@ -16,7 +16,7 @@ def test_betweenness_multi_restricted_to_one_seed_equals_single_source(
 
     from distributed_graph_database_spark.graph import analytics as g
 
-    sym = g._sym_edges(spark, sf_smoke, checkpoint=True)
+    sym = g._sym_edges(spark, sf_smoke)
     seeds = g._min_id_seeds(sym, g.BETW_SEEDS)
 
     def kernel_rows(seeds):
