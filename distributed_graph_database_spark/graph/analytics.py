@@ -165,6 +165,13 @@ def _degrees(e: DataFrame) -> DataFrame:
     )
 
 
+def _sym_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(v, d): the degrees graph_sym already holds as outdeg."""
+    return _sym_edges(spark, sf_dir).groupBy(F.col("src").alias("v")).agg(
+        F.max("outdeg").alias("d")
+    )
+
+
 def _oriented_edges(e: DataFrame) -> DataFrame:
     """Degree-oriented edges (a, b): each undirected edge pointed from
     its (degree, id)-smaller endpoint — the compact-forward orientation
@@ -1111,7 +1118,7 @@ def graph_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     each in the union via the edge itself)."""
     tri = _tri_cached(spark, sf_dir)
     e = _copurchase_edges(spark, sf_dir).select("p1", "p2")
-    deg = _degrees(e)
+    deg = _sym_degrees(spark, sf_dir)
     da = deg.select(F.col("v").alias("p1"), F.col("d").alias("d1"))
     db = deg.select(F.col("v").alias("p2"), F.col("d").alias("d2"))
     # each closed triangle (a,b,c) contributes one common neighbor to
@@ -1267,7 +1274,7 @@ def graph_clustering_coef(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines: t and d are integers, and 2t/(d(d−1)) is one identical
     double op on identical integers before the 6dp round."""
     tri = _tri_cached(spark, sf_dir)
-    deg = _degrees(_copurchase_edges(spark, sf_dir).select("p1", "p2"))
+    deg = _sym_degrees(spark, sf_dir)
     tri_verts = (
         tri.select(F.col("a").alias("v"))
         .unionAll(tri.select(F.col("b").alias("v")))

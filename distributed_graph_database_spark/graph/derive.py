@@ -51,12 +51,17 @@ def symmetrize(edges: DataFrame) -> DataFrame:
     Self-loops (allowed by the spec, Assignment 2.pdf p.2) are emitted
     ONCE — the reference's adjacency-row sum sees a loop as a single 1
     on the diagonal, so reversing (v,v) would double-count degree and
-    duplicate traversal rows.
+    duplicate traversal rows. A row with a null end is emitted once,
+    as it stands (`!=` on a null is not true).
+
+    One generator over one scan of `edges`, not a self-union: a union
+    would scan the input once per branch.
     """
-    return edges.select("src", "dst").unionByName(
-        edges.filter(F.col("src") != F.col("dst")).select(
-            F.col("dst").alias("src"), F.col("src").alias("dst")
-        )
+    src, dst = F.col("src"), F.col("dst")
+    fwd = F.struct(src.alias("src"), dst.alias("dst"))
+    rev = F.struct(dst.alias("src"), src.alias("dst"))
+    return edges.select(
+        F.inline(F.when(src != dst, F.array(fwd, rev)).otherwise(F.array(fwd)))
     )
 
 

@@ -35,16 +35,20 @@ costs the distributed kernel 40-70 jobs per request, all of it per-job
 overhead. So every `bfs_levels` call first reads a bounded prefix of
 its edge frame in one task (`coalesce(1).limit(LOCAL_READ_MAX_EDGES +
 1)`, which stops at that many rows). A graph that fits is traversed in
-Python and returned as a driver-held local frame; the formatters see
-`isLocal()` and format in Python too. Anything larger runs the
-distributed kernel, with the prefix serving its start-vertex check.
-The prefix is read from the frame the caller hands over, so a catalog
-read this way must fit one task's scan; a catalog too large for that
-is out of scope (ROADMAP: not "millions of users").
+Python and returned as a driver-held local frame, which remembers the
+edge frame and rows it came from; the formatters see `isLocal()` and
+format in Python too, and DFS leaves over that same edge frame reuse
+those rows, so a read is one Spark job and its leaves come from the
+same snapshot as its levels. Anything larger runs the distributed
+kernel, with the prefix serving its start-vertex check. The prefix is
+read from the frame the caller hands over; a read of one graph from a
+matrix directory (`sources.matrix`, filtered on `graph_id`) scans only
+that graph's file.
 """
 
 from __future__ import annotations
 
+import weakref
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
@@ -97,6 +101,10 @@ START_NOT_PRESENT_MSG = "Starting vertex not present in graph"
 # declared graph keys keep their distributed plans.
 LOCAL_READ_MAX_EDGES = 1024
 
+# Local levels frame → (the edge frame it was traversed from, the edge
+# rows read from it). Weak keys: an entry lives as long as its levels.
+_LOCAL_READS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
 
 def bfs_levels(
     spark: SparkSession,
@@ -116,7 +124,8 @@ def bfs_levels(
     the levels come from a Python BFS over those rows with the same
     `max_levels` bound, returned as a local frame (`local_frame`): one
     Spark job per call. The read therefore assumes the frame can be
-    scanned by a single task up to that limit.
+    scanned by a single task up to that limit. The local frame keeps
+    the rows for `dfs_leaves_from_levels` over the same `edges_sym`.
 
     Otherwise one `fixpoint` round runs per level; the state is the
     level's new frontier and the probe its row count. The cumulative
@@ -140,7 +149,9 @@ def bfs_levels(
         if validate and not in_prefix:
             raise ValueError(START_NOT_PRESENT_MSG)
         levels = _local_bfs(prefix, start, max_levels)
-        return local_frame(spark, list(levels.items()), "vid bigint, level int")
+        lv = local_frame(spark, list(levels.items()), "vid bigint, level int")
+        _LOCAL_READS[lv] = (edges_sym, prefix)
+        return lv
     if validate and not in_prefix and not _start_in_graph(edges_sym, start):
         raise ValueError(START_NOT_PRESENT_MSG)
 
@@ -268,7 +279,10 @@ def dfs_leaves_from_levels(lv: DataFrame, edges_sym: DataFrame) -> DataFrame:
     # Deterministic traversal tree (vid, level, parent): parent(v) is
     # the min-vid neighbor of v at level(v)-1; the start has none.
     if lv.isLocal():
-        edges = _edge_prefix(edges_sym)
+        # The rows bfs_levels traversed, if it traversed this very
+        # frame; any other edge frame is read afresh.
+        read = _LOCAL_READS.get(lv)
+        edges = read[1] if read and read[0] is edges_sym else _edge_prefix(edges_sym)
         if len(edges) <= LOCAL_READ_MAX_EDGES:
             return _local_leaves(lv, edges)
     child = lv.alias("c")

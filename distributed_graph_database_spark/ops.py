@@ -530,6 +530,7 @@ def _concurrent_full_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def serve_reads(server: str, reqs: list[tuple[int, int, str]]) -> None:
         from .graph import traversal
+        from .graph.derive import symmetrize
 
         sc = spark.sparkContext
         sc.setLocalProperty("spark.scheduler.pool", server)
@@ -564,10 +565,10 @@ def _concurrent_full_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
                     )
                     .select("src", "dst")
                 )
-                sym = e.union(
-                    e.select(F.col("dst").alias("src"),
-                             F.col("src").alias("dst"))
-                ).distinct()
+                # No dedup: the stored rows are canonical (src <= dst)
+                # fixture and payload edges, each once per snapshot,
+                # and BFS levels and DFS leaves ignore duplicates.
+                sym = symmetrize(e)
                 lv = traversal.bfs_levels(
                     spark, sym, READ_START_VERTEX, cache_edges=False
                 )

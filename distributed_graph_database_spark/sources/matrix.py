@@ -11,14 +11,18 @@ Reference lineage (SURVEY.md §2.1 R1-R3):
   dynamic partition overwrite of that graph_id only.
 
 Spark-first shape: matrix files are ingested with `wholetext` (one row
-per file — a graph's matrix is one record by construction), then two
-`posexplode` steps unpack row lines and row cells entirely JVM-side.
-Per-file parallelism scales to millions of graph files. The parsed edge
-rows reach the driver only when a traversal of a reference-sized graph
-collects them (`graph.traversal.LOCAL_READ_MAX_EDGES`): that read scans
-the directory in one task. The canonical store is parquet partitioned
-by graph_id, so "modify graph G" rewrites exactly one partition while
-readers elsewhere see an atomic swap.
+per file — a graph's matrix is one record by construction), then one
+`inline` over a filtered `transform` of the row lines unpacks the
+upper-triangle 1-cells entirely JVM-side. Per-file parallelism scales
+to millions of graph files. `graph_id` comes from the file-source
+metadata column `_metadata.file_name`, so a filter on one graph id is
+pushed into the file index and a read of one graph opens only its own
+`Gx.txt` (the reference's secondary opens exactly that file). The
+parsed edge rows reach the driver only when a traversal of a
+reference-sized graph collects them
+(`graph.traversal.LOCAL_READ_MAX_EDGES`). The canonical store is
+parquet partitioned by graph_id, so "modify graph G" rewrites exactly
+one partition while readers elsewhere see an atomic swap.
 """
 
 from __future__ import annotations
@@ -62,15 +66,16 @@ def write_fixture_matrix_files(out_dir: str = FIXTURE_MATRIX_DIR) -> str:
     return out_dir
 
 
-def parse_matrix_dir(spark: SparkSession, path: str) -> DataFrame:
-    """R1 ingest, distributed: directory of Gx.txt → edge list
-    (graph_id, src, dst) stored once (src <= dst; self-loops once).
+def _matrix_files(spark: SparkSession, path: str) -> DataFrame:
+    """Each `*.txt` file under `path` as one row (graph_id, value).
 
-    wholetext puts each file in one row; posexplode(split) unpacks the
-    matrix without any Python-side row handling. The n=0 file (G4)
-    yields no matrix rows and therefore no edges — correct degenerate.
+    graph_id is the file name less `.txt`, read from the file-source
+    metadata column: a filter on it is then a metadata-only predicate,
+    which Spark pushes into the file index, so reading one graph lists
+    the directory but scans one file. (The per-row input-file-name
+    function hides the file from the planner: every file is scanned.)
     """
-    raw = (
+    return (
         spark.read.format("text")
         .option("wholetext", True)
         # directory + pathGlobFilter, not a glob-in-path: a literal
@@ -80,52 +85,52 @@ def parse_matrix_dir(spark: SparkSession, path: str) -> DataFrame:
         .option("pathGlobFilter", "*.txt")
         .load(path)
         .select(
-            F.regexp_extract(F.input_file_name(), r"([^/]+)\.txt$", 1).alias("graph_id"),
-            F.split(F.trim(F.col("value")), "\n").alias("lines"),
+            F.regexp_extract(F.col("_metadata.file_name"), r"^(.+)\.txt$", 1).alias(
+                "graph_id"
+            ),
+            "value",
         )
     )
-    cells = (
-        raw.select(
-            "graph_id",
-            # lines[0] is n; matrix rows follow. posexplode keeps the
-            # 0-based row index → 1-based vid = pos + 1.
-            F.posexplode(F.slice(F.col("lines"), 2, F.size("lines") - 1)).alias(
-                "row_idx", "row_line"
+
+
+def parse_matrix_dir(spark: SparkSession, path: str) -> DataFrame:
+    """R1 ingest, distributed: directory of Gx.txt → edge list
+    (graph_id, src, dst) stored once (src <= dst; self-loops once).
+
+    wholetext puts each file in one row; one `inline` over a nested
+    `transform` of its row lines emits the 1-cells, with no Python-side
+    row handling. Line 1 is n; matrix row i (0-based) holds the cells
+    (i+1, j+1). The file stores the symmetric matrix, so only the upper
+    triangle incl. the diagonal is kept: each undirected edge once,
+    self-loops once. The n=0 file (G4) yields no matrix rows and
+    therefore no edges — correct degenerate.
+    """
+    lines = F.split(F.trim(F.col("value")), "\n")
+
+    def row_cells(line, i):
+        return F.transform(
+            F.split(F.trim(line), r"\s+"),
+            lambda cell, j: F.when(
+                (cell == "1") & (i <= j),
+                F.struct(
+                    (i + 1).cast("bigint").alias("src"),
+                    (j + 1).cast("bigint").alias("dst"),
+                ),
             ),
         )
-        .select(
-            "graph_id",
-            (F.col("row_idx") + 1).cast("bigint").alias("src"),
-            F.posexplode(F.split(F.trim(F.col("row_line")), r"\s+")).alias(
-                "col_idx", "cell"
-            ),
-        )
-        .filter(F.col("cell") == "1")
-        .select(
-            "graph_id", "src", (F.col("col_idx") + 1).cast("bigint").alias("dst")
-        )
+
+    cells = F.flatten(F.transform(F.slice(lines, 2, F.size(lines) - 1), row_cells))
+    return _matrix_files(spark, path).select(
+        "graph_id", F.inline(F.filter(cells, lambda e: e.isNotNull()))
     )
-    # The file stores the symmetric matrix; keep each undirected edge
-    # once (upper triangle incl. diagonal = self-loops counted once).
-    return cells.filter(F.col("src") <= F.col("dst"))
 
 
 def parse_matrix_vertices(spark: SparkSession, path: str) -> DataFrame:
     """Vertex set 1..n per graph, from line 1 — isolated vertices (G6)
     exist even with zero edges."""
-    raw = (
-        spark.read.format("text")
-        .option("wholetext", True)
-        # directory + pathGlobFilter, not a glob-in-path: a literal
-        # glob makes the source resolver stat the glob string itself
-        # and log a spurious FileNotFoundException WARN + stack trace
-        # into otherwise-clean runs (seen in BENCH_r02 stderr).
-        .option("pathGlobFilter", "*.txt")
-        .load(path)
-        .select(
-            F.regexp_extract(F.input_file_name(), r"([^/]+)\.txt$", 1).alias("graph_id"),
-            F.split(F.trim(F.col("value")), "\n").getItem(0).cast("int").alias("n"),
-        )
+    raw = _matrix_files(spark, path).select(
+        "graph_id",
+        F.split(F.trim(F.col("value")), "\n").getItem(0).cast("int").alias("n"),
     )
     return (
         # guard n=0 (G4): sequence(1, 0) would count DOWN to [1, 0].

@@ -9,12 +9,16 @@ Python after one bounded read. Two things are pinned here:
   sends every non-empty edge frame down the distributed path;
 - the cost: a read shaped like the benchmark's serve read (matrix dir →
   `symmetrize` → `bfs_levels(validate=True)` → formatter) runs at most
-  1 Spark job for BFS, 2 for DFS and 1 for a refused start.
+  1 Spark job for BFS, DFS or a refused start, and that job scans only
+  the read graph's file.
+
+`symmetrize` itself is pinned against its Python law `_sym_rows`.
 """
 
 from __future__ import annotations
 
 import random
+from collections import Counter
 from concurrent.futures import ThreadPoolExecutor
 
 import pytest
@@ -25,7 +29,7 @@ from distributed_graph_database_spark.graph import derive, traversal
 from distributed_graph_database_spark.session import local_frame
 from distributed_graph_database_spark.sources import matrix
 
-from .conftest import group_jobs
+from .conftest import SF_SMOKE, group_jobs
 
 
 def _edge_frame(spark, rows):
@@ -152,39 +156,106 @@ def test_gate_sends_larger_frames_to_the_kernel(spark, monkeypatch):
     assert sorted(small.collect()) == sorted(large.collect())
 
 
-# Jobs per serve-shaped read: the bounded read, plus one more bounded
-# read for the DFS formatter's edges. AQE can move a count by one, so
-# the test takes the lower of two calls.
-READ_JOB_CEILINGS = {"bfs": 1, "dfs": 2, "refused": 1}
+@pytest.mark.parametrize(
+    "rows",
+    [[(1, 1), (1, 2), (3, 3)], [(1, 2), (1, 2), (2, 1)], [], "sf0.001"],
+    ids=["self-loops", "duplicated-edge", "empty", "sf0.001-derived"],
+)
+def test_symmetrize_equals_its_law(spark, rows):
+    """symmetrize's rows are _sym_rows of its input, as a multiset."""
+    if rows == "sf0.001":
+        edges = derive.derived_edges(spark, SF_SMOKE)
+        rows = [(r.src, r.dst) for r in edges.collect()]
+    else:
+        edges = _edge_frame(spark, rows)
+    got = Counter((r.src, r.dst) for r in derive.symmetrize(edges).collect())
+    assert got == Counter(_sym_rows(rows))
+
+
+def test_symmetrize_keeps_a_null_end_once(spark):
+    """`src != dst` is not true on a null, so such a row is not reversed."""
+    rows = derive.symmetrize(_edge_frame(spark, [(None, 1), (2, None)])).collect()
+    assert sorted(map(tuple, rows), key=str) == [(2, None), (None, 1)]
+
+
+def _serve_read(spark, catalog, kind):
+    """The benchmark's serve read of G5: matrix dir → symmetrize →
+    bfs_levels(validate=True) → the kind's formatter, collected."""
+    edges = (
+        matrix.parse_matrix_dir(spark, catalog)
+        .filter(F.col("graph_id") == "G5")
+        .select("src", "dst")
+    )
+    sym = derive.symmetrize(edges)
+    start = 99 if kind == "refused" else 1
+    try:
+        lv = traversal.bfs_levels(spark, sym, start, cache_edges=False, validate=True)
+    except ValueError as e:
+        assert kind == "refused" and str(e) == traversal.START_NOT_PRESENT_MSG
+        return
+    assert kind != "refused", "an absent start was not refused"
+    if kind == "dfs":
+        traversal.dfs_leaves_from_levels(lv, sym).collect()
+    else:
+        traversal.bfs_order_from_levels(lv).collect()
+
+
+# Jobs per serve-shaped read: the one bounded read of the graph's rows,
+# which the DFS formatter reuses. AQE can move a count by one, so the
+# test takes the lower of two calls.
+READ_JOB_CEILINGS = {"bfs": 1, "dfs": 1, "refused": 1}
 
 
 @pytest.mark.parametrize("kind", sorted(READ_JOB_CEILINGS))
 def test_serve_read_job_ceiling(spark, tmp_path, kind):
     catalog = matrix.write_fixture_matrix_files(str(tmp_path))
-
-    def read():
-        edges = (
-            matrix.parse_matrix_dir(spark, catalog)
-            .filter(F.col("graph_id") == "G5")
-            .select("src", "dst")
-        )
-        sym = derive.symmetrize(edges)
-        start = 99 if kind == "refused" else 1
-        try:
-            lv = traversal.bfs_levels(
-                spark, sym, start, cache_edges=False, validate=True
-            )
-        except ValueError as e:
-            assert kind == "refused" and str(e) == traversal.START_NOT_PRESENT_MSG
-            return
-        assert kind != "refused", "an absent start was not refused"
-        if kind == "dfs":
-            traversal.dfs_leaves_from_levels(lv, sym).collect()
-        else:
-            traversal.bfs_order_from_levels(lv).collect()
-
-    counts = [len(group_jobs(spark, read)[1]) for _ in range(2)]
+    counts = [
+        len(group_jobs(spark, lambda: _serve_read(spark, catalog, kind))[1])
+        for _ in range(2)
+    ]
     assert min(counts) <= READ_JOB_CEILINGS[kind], (kind, counts)
+
+
+def _files_read(spark, job_ids):
+    """The "number of files read" of every file scan in the SQL
+    executions that ran these jobs, from Spark's SQL status store."""
+    conv = spark._jvm.scala.jdk.javaapi.CollectionConverters
+    store = spark._jsparkSession.sharedState().statusStore()
+    files = []
+    for ex in conv.asJava(store.executionsList()):
+        if not set(conv.asJava(ex.jobs()).keySet()) & set(job_ids):
+            continue
+        values = conv.asJava(store.executionMetrics(ex.executionId()))
+        for node in conv.asJava(store.planGraph(ex.executionId()).allNodes()):
+            files += [
+                int(values.get(m.accumulatorId()))
+                for m in conv.asJava(node.metrics())
+                if node.name().startswith("Scan") and m.name() == "number of files read"
+            ]
+    return files
+
+
+@pytest.mark.parametrize("kind", ["bfs", "dfs"])
+def test_serve_read_scans_only_its_graph_file(spark, tmp_path, kind):
+    """graph_id comes from file metadata, so the filter on it prunes the
+    catalog to the one file the read asks for."""
+    catalog = matrix.write_fixture_matrix_files(str(tmp_path))
+    assert len(list(tmp_path.glob("*.txt"))) >= 6
+    _, jobs = group_jobs(spark, lambda: _serve_read(spark, catalog, kind))
+    assert _files_read(spark, jobs) == [1]
+
+
+def test_dfs_leaves_rereads_another_edge_frame(spark):
+    """Levels remember the rows of the frame they were traversed from;
+    a different edge frame is read afresh. Over the levels of the star
+    1-2, 1-3, the path 1-2-3 gives vertex 3 no parent at level 0, so it
+    leaves the tree and only 2 is a leaf."""
+    star = _edge_frame(spark, _sym_rows([(1, 2), (1, 3)]))
+    path = _edge_frame(spark, _sym_rows([(1, 2), (2, 3)]))
+    lv = traversal.bfs_levels(spark, star, 1)
+    leaves = traversal.dfs_leaves_from_levels
+    assert sorted(r.vid for r in leaves(lv, star).collect()) == [2, 3]
+    assert sorted(r.vid for r in leaves(lv, path).collect()) == [2]
 
 
 def test_read_without_arrow_is_local_and_answers(spark):
