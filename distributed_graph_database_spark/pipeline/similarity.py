@@ -95,8 +95,10 @@ def sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _raw_queries(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(query_id, qv): the pinned query set (N_QUERIES lowest vec_ids)
-    over RAW vectors — the single definition every sim_* key derives
-    its query side from (the unit-normalized flavor is _pq_queries)."""
+    over RAW vectors — the single definition the pinned-query keys
+    derive their query side from (the unit-normalized flavor is
+    _pq_queries; sim_range_search cuts the same rows from its own
+    scan)."""
     return (
         _embeddings(spark, sf_dir)
         .orderBy("vec_id")
@@ -105,31 +107,82 @@ def _raw_queries(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _pq_queries(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(query_id, qv): the pinned query set, unit-normalized — the query
+    side of the PQ keys' lookup table and exact re-rank."""
+    return _unit(_raw_queries(spark, sf_dir), "qv")
+
+
+# --- The ANN pipeline ---------------------------------------------------
+# Every top-k key is one pass through the same stages, the distributed
+# top-k shape of REPOSE (ICDE'21): candidates (the broadcast query set
+# against the whole corpus, or only the IVF-probed cells) → score →
+# [ADC shortlist → exact re-rank] → per-key top-k; the recall keys
+# compare two such results. Each key keeps its own score expression
+# (dot/(‖q‖·‖v‖) on raw vectors, a plain dot on unit vectors): the
+# oracles replay that exact expression, and a different rounding path
+# could flip a tie.
+
+
+def _cosine(a: str, b: str) -> F.Column:
+    """Cosine of two raw-vector columns, dot/(‖a‖·‖b‖)."""
+    return _dot(F.col(a), F.col(b)) / (_norm(a) * _norm(b))
+
+
+def _all_pairs(q: DataFrame, emb: DataFrame, key: str = "query_id") -> DataFrame:
+    """Brute-force candidates: the broadcast query set × one corpus
+    scan, each query's own vector excluded."""
+    return F.broadcast(q).join(emb, F.col("vec_id") != F.col(key))
+
+
+def _topk(scored: DataFrame, by, score: F.Column, k: int) -> DataFrame:
+    """The `k` best rows per `by` (a column name or list of names):
+    row_number ordered by the sort column `score`, ties to the smaller
+    vec_id, kept while rank <= k. That rank filter is the form Spark
+    plans as a WindowGroupLimit, the partial top-k that runs before the
+    window's shuffle."""
+    w = Window.partitionBy(by).orderBy(score, F.col("vec_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
+
+
+def _neighbors(scored: DataFrame, key: str, score: str, k: int) -> DataFrame:
+    """The `k` highest-`score` rows per `key` in the ranked-neighbor
+    schema of every top-k key: (key, neighbor_id, rank, score rounded
+    to 6dp)."""
+    return _topk(scored, key, F.desc(score), k).select(
+        key,
+        F.col("vec_id").alias("neighbor_id"),
+        "rank",
+        F.round(score, 6).alias(score),
+    )
+
+
+def _recall(exact: DataFrame, approx: DataFrame, key: str) -> DataFrame:
+    """(key, n_hits, recall_at_k): how many of each key's exact
+    neighbors the approximate result also returns. A left join, so a
+    key with no approximate hit still reports n_hits = 0."""
+    hits = approx.select(key, "neighbor_id", F.lit(1).alias("hit"))
+    hit = F.coalesce("hit", F.lit(0))
+    return (
+        exact.select(key, "neighbor_id")
+        .join(hits, [key, "neighbor_id"], "left")
+        .groupBy(key)
+        .agg(
+            F.sum(hit).cast("bigint").alias("n_hits"),
+            F.round(F.sum(hit) / F.count(F.lit(1)), 6).alias("recall_at_k"),
+        )
+    )
+
+
 def _sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-k: pinned queries (N_QUERIES lowest vec_ids) ×
     full corpus → (query_id, neighbor_id, rank, cosine). The query
     side is tiny and broadcast; the corpus is scanned once."""
-    emb = _embeddings(spark, sf_dir)
-    q = _raw_queries(spark, sf_dir)
-    scored = (
-        F.broadcast(q)
-        .join(emb, F.col("vec_id") != F.col("query_id"))
-        .withColumn(
-            "cosine", _dot(F.col("qv"), F.col("v")) / (_norm("qv") * _norm("v"))
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "rank",
-            F.round("cosine", 6).alias("cosine"),
-        )
+    scored = _all_pairs(_raw_queries(spark, sf_dir), _embeddings(spark, sf_dir))
+    return _neighbors(
+        scored.withColumn("cosine", _cosine("qv", "v")), "query_id", "cosine", TOP_K
     )
 
 
@@ -273,6 +326,39 @@ def sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return shared(spark, sf_dir, "sim_topk_ivf", lambda: _sim_topk_ivf(spark, sf_dir))
 
 
+def _ivf_corpus(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(cells, corpus): the pinned IVF quantizer and every raw corpus
+    vector in its one home cell, (vec_id, v, cell_id)."""
+    cells = _cells(spark, sf_dir)
+    corpus = _assign(_embeddings(spark, sf_dir), cells, "v", "cells", 1).select(
+        "vec_id", "v", F.explode("cells").alias("cell_id")
+    )
+    return cells, corpus
+
+
+def _probed(probes: DataFrame, corpus: DataFrame) -> DataFrame:
+    """IVF candidates: the broadcast probes (query_id, qv, cell_id, …)
+    × the corpus vectors homed in the probed cells, each query's own
+    vector excluded, scored by raw cosine."""
+    return (
+        F.broadcast(probes)
+        .join(corpus, "cell_id")
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .withColumn("cosine", _cosine("qv", "v"))
+    )
+
+
+def _ivf_route(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The IVF candidate routing of sim_topk_ivf and sim_ivfpq_topk:
+    each pinned raw query probes its IVF_NPROBE nearest cells →
+    (query_id, qv, vec_id, v, cosine)."""
+    cells, corpus = _ivf_corpus(spark, sf_dir)
+    probes = _assign(
+        _raw_queries(spark, sf_dir), cells, "qv", "probe_cells", IVF_NPROBE
+    ).select("query_id", "qv", F.explode("probe_cells").alias("cell_id"))
+    return _probed(probes, corpus)
+
+
 def _sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate top-k: corpus assigned to 1 cell, queries probe
     their IVF_NPROBE nearest cells; exact cosine + top-k inside the
@@ -280,37 +366,7 @@ def _sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     does NOT call this per leg — it ranks probes once at the largest
     count and filters, see its docstring; only the ORACLE side is
     parameterized, _oracle_ivf_route(nprobe).)"""
-    emb = _embeddings(spark, sf_dir)
-    cells = _cells(spark, sf_dir)
-
-    corpus = _assign(emb, cells, "v", "cells", 1).select(
-        "vec_id", "v", F.explode("cells").alias("cell_id")
-    )
-    q = _raw_queries(spark, sf_dir)
-    probes = _assign(q, cells, "qv", "probe_cells", IVF_NPROBE).select(
-        "query_id", "qv", F.explode("probe_cells").alias("cell_id")
-    )
-    scored = (
-        F.broadcast(probes)
-        .join(corpus, "cell_id")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn(
-            "cosine", _dot(F.col("qv"), F.col("v")) / (_norm("qv") * _norm("v"))
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "rank",
-            F.round("cosine", 6).alias("cosine"),
-        )
-    )
+    return _neighbors(_ivf_route(spark, sf_dir), "query_id", "cosine", TOP_K)
 
 
 def dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -696,26 +752,15 @@ def sim_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the driver artifact itself records how much the nprobe={IVF_NPROBE}
     approximation gives up. Cost: one extra broadcast join over two
     already-tiny (N_QUERIES·K-row) results."""
-    exact = sim_topk(spark, sf_dir).select("query_id", "neighbor_id")
-    approx = sim_topk_ivf(spark, sf_dir).select(
-        "query_id", "neighbor_id", F.lit(1).alias("hit")
-    )
-    return (
-        exact.join(approx, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.sum(F.coalesce("hit", F.lit(0))).cast("bigint").alias("n_hits"),
-            F.round(
-                F.sum(F.coalesce("hit", F.lit(0))) / F.count(F.lit(1)), 6
-            ).alias("recall_at_k"),
-        )
-        .select("query_id", "n_hits", "recall_at_k")
-    )
+    return _recall(sim_topk(spark, sf_dir), sim_topk_ivf(spark, sf_dir), "query_id")
 
 
-ORACLE_SIM_IVF_RECALL = f"""
+def _oracle_recall(approx_sql: str) -> str:
+    """The DuckDB twin of _recall against the exact sim_topk oracle —
+    one template for the IVF, PQ and IVF-PQ recall keys."""
+    return f"""
 WITH exact AS ({ORACLE_SIM_TOPK}),
-approx AS ({ORACLE_SIM_TOPK_IVF})
+approx AS ({approx_sql})
 SELECT e.query_id,
        CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
          AS n_hits,
@@ -726,6 +771,9 @@ LEFT JOIN approx a
   ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
 GROUP BY e.query_id
 """
+
+
+ORACLE_SIM_IVF_RECALL = _oracle_recall(ORACLE_SIM_TOPK_IVF)
 
 
 # sim_recall_curve's probe sweep (the declared sim_topk_ivf point,
@@ -753,44 +801,28 @@ def sim_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     max(nprobe)/cells of the corpus; the recall join is over
     N_QUERIES·K·legs rows. At 100 TB this is the offline index-tuning
     job vector stores run on a sample."""
-    emb = _embeddings(spark, sf_dir)
-    cells = _cells(spark, sf_dir)
-    corpus = _assign(emb, cells, "v", "cells", 1).select(
-        "vec_id", "v", F.explode("cells").alias("cell_id")
-    )
-    q = _raw_queries(spark, sf_dir)
-    max_np = max(RECALL_CURVE_PROBES)
+    cells, corpus = _ivf_corpus(spark, sf_dir)
     wq = Window.partitionBy("query_id").orderBy(
         F.col("sim").desc(), F.col("cell_id")
     )
     probes = (
-        q.crossJoin(F.broadcast(cells))
-        .withColumn(
-            "sim", _dot(F.col("qv"), F.col("cv")) / (_norm("qv") * _norm("cv"))
-        )
+        _raw_queries(spark, sf_dir)
+        .crossJoin(F.broadcast(cells))
+        .withColumn("sim", _cosine("qv", "cv"))
         .withColumn("probe_rank", F.row_number().over(wq))
-        .filter(F.col("probe_rank") <= max_np)
+        .filter(F.col("probe_rank") <= max(RECALL_CURVE_PROBES))
         .select("query_id", "qv", "cell_id", "probe_rank")
     )
-    cand = (
-        F.broadcast(probes)
-        .join(corpus, "cell_id")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn(
-            "cosine", _dot(F.col("qv"), F.col("v")) / (_norm("qv") * _norm("v"))
-        )
-        .select("query_id", "vec_id", "probe_rank", "cosine")
-    )
+    cand = _probed(probes, corpus).select("query_id", "vec_id", "probe_rank", "cosine")
     legs = local_frame(spark, [(p,) for p in RECALL_CURVE_PROBES], "nprobe int")
-    wk = Window.partitionBy("nprobe", "query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id")
-    )
-    approx = (
-        cand.join(F.broadcast(legs), F.col("probe_rank") <= F.col("nprobe"))
-        .withColumn("rank", F.row_number().over(wk))
-        .filter(F.col("rank") <= TOP_K)
-        .select("nprobe", "query_id", F.col("vec_id").alias("neighbor_id"),
-                F.lit(1).alias("hit"))
+    approx = _topk(
+        cand.join(F.broadcast(legs), F.col("probe_rank") <= F.col("nprobe")),
+        ["nprobe", "query_id"],
+        F.desc("cosine"),
+        TOP_K,
+    ).select(
+        "nprobe", "query_id", F.col("vec_id").alias("neighbor_id"),
+        F.lit(1).alias("hit"),
     )
     exact = (
         sim_topk(spark, sf_dir)
@@ -859,6 +891,9 @@ def sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     (|cos(q,c)| ≥ T - cell radius); at this corpus size the single
     scan IS the right plan."""
     emb = _unit(_embeddings(spark, sf_dir), "v")
+    # The query side is cut from the same scan frame as the corpus
+    # side: _pq_queries would read the table a second time, and each
+    # read costs one more Spark job (parquet schema inference).
     q = (
         emb.orderBy("vec_id")
         .limit(N_QUERIES)
@@ -869,8 +904,7 @@ def sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of a vector whose cosine lands within float rounding of T
     # between the two engines' independent dot evaluations (ADVICE r5).
     return (
-        F.broadcast(q)
-        .join(emb, F.col("vec_id") != F.col("query_id"))
+        _all_pairs(q, emb)
         .withColumn("cosine", F.round(_dot(F.col("qv"), F.col("v")), 6))
         .filter(F.col("cosine") >= RANGE_SEARCH_T)
         .select(
@@ -1085,18 +1119,11 @@ def _knn_exact_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = emb.join(F.broadcast(sample), "vec_id", "left_semi").select(
         F.col("vec_id").alias("src_id"), F.col("v").alias("qv")
     )
-    scored = (
-        F.broadcast(q)
-        .join(emb, F.col("vec_id") != F.col("src_id"))
-        .withColumn("cosine", _dot(F.col("qv"), F.col("v")))
+    scored = _all_pairs(q, emb, "src_id").withColumn(
+        "cosine", _dot(F.col("qv"), F.col("v"))
     )
-    w = Window.partitionBy("src_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= KNN_K)
-        .select("src_id", F.col("vec_id").alias("neighbor_id"))
+    return _topk(scored, "src_id", F.desc("cosine"), KNN_K).select(
+        "src_id", F.col("vec_id").alias("neighbor_id")
     )
 
 
@@ -1222,19 +1249,7 @@ def _sim_knn_graph_2level(
         .filter(F.col("vec_id") != F.col("src_id"))
         .withColumn("cosine", _dot(F.col("sv"), F.col("v")))
     )
-    w = Window.partitionBy("src_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= KNN_K)
-        .select(
-            "src_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "rank",
-            F.round("cosine", 6).alias("cosine"),
-        )
-    )
+    return _neighbors(scored, "src_id", "cosine", KNN_K)
 
 
 def sim_knn_graph_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1270,19 +1285,8 @@ def sim_knn_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(sample.select(F.col("vec_id").alias("src_id"))),
         "src_id",
         "left_semi",
-    ).select("src_id", "neighbor_id", F.lit(1).alias("hit"))
-    return (
-        _knn_exact_topk(spark, sf_dir)
-        .join(knn, ["src_id", "neighbor_id"], "left")
-        .groupBy("src_id")
-        .agg(
-            F.sum(F.coalesce("hit", F.lit(0))).cast("bigint").alias("n_hits"),
-            F.round(
-                F.sum(F.coalesce("hit", F.lit(0))) / F.count(F.lit(1)), 6
-            ).alias("recall_at_k"),
-        )
-        .select("src_id", "n_hits", "recall_at_k")
     )
+    return _recall(_knn_exact_topk(spark, sf_dir), knn, "src_id")
 
 
 ORACLE_SIM_KNN_RECALL = f"""
@@ -2216,8 +2220,16 @@ def _sub_d2(a, b) -> F.Column:
     return _dot(a, a) - 2 * _dot(a, b) + _dot(b, b)
 
 
+def _subspaces(df: DataFrame, key: str, vec: str, out: str) -> DataFrame:
+    """(key, m, out): array column `vec` cut into its PQ_M subspace
+    slices of PQ_SUB dims, one row per subspace m."""
+    return df.select(
+        key, F.explode(F.sequence(F.lit(0), F.lit(PQ_M - 1))).alias("m"), vec
+    ).select(key, "m", F.slice(vec, F.col("m") * PQ_SUB + 1, PQ_SUB).alias(out))
+
+
 def _pq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(m, cid, cv): PQ_K pinned codebook vectors per subspace — the
+    """(cid, m, cv): PQ_K pinned codebook vectors per subspace — the
     vectors right after the query + IVF-centroid id ranges,
     unit-normalized then sliced per subspace."""
     # The pinned id ranges (queries, IVF cells, codebook) must be
@@ -2243,16 +2255,8 @@ def _pq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unpartitioned window is safe HERE only because the input is the
     # PQ_K-row pinned base (constant-bounded, never data-sized)
     w = Window.orderBy("vec_id")
-    return (
-        base.withColumn("cid", F.row_number().over(w) - 1)
-        .select(
-            "cid",
-            F.explode(F.sequence(F.lit(0), F.lit(PQ_M - 1))).alias("m"),
-            "v",
-        )
-        .select(
-            "m", "cid", F.slice("v", F.col("m") * PQ_SUB + 1, PQ_SUB).alias("cv")
-        )
+    return _subspaces(
+        base.withColumn("cid", F.row_number().over(w) - 1), "cid", "v", "cv"
     )
 
 
@@ -2275,13 +2279,7 @@ def _pq_codes_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
     with zero corpus shuffles (the window key (vec_id, m) is the
     explosion key, so AQE keeps it partition-local)."""
     emb = _unit(_embeddings(spark, sf_dir), "v")
-    subs = emb.select(
-        "vec_id",
-        F.explode(F.sequence(F.lit(0), F.lit(PQ_M - 1))).alias("m"),
-        "v",
-    ).select(
-        "vec_id", "m", F.slice("v", F.col("m") * PQ_SUB + 1, PQ_SUB).alias("sv")
-    )
+    subs = _subspaces(emb, "vec_id", "v", "sv")
     scored = subs.join(F.broadcast(_pq_codebook(spark, sf_dir)), "m").withColumn(
         "d2", _sub_d2(F.col("sv"), F.col("cv"))
     )
@@ -2315,19 +2313,17 @@ def sim_pq_code(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cached entry point (cache.shared): reused by sim_pq_recall."""
-    return shared(spark, sf_dir, "sim_pq_topk", lambda: _sim_pq_topk(spark, sf_dir))
+    """PQ-ADC top-k with exact re-rank → same schema as sim_topk.
+    Per query: build the (PQ_M × PQ_K)-entry distance lookup table
+    ONCE, rank the whole corpus by summed table lookups (codes only —
+    no vector is touched), keep the PQ_SHORTLIST best, then exact-
+    cosine re-rank just those. At 100 TB the corpus side of the ADC
+    join carries 96-bit codes instead of 256-byte vectors — the scan,
+    the shuffle, and the state all shrink ~21×; full vectors are read
+    only for |queries| · PQ_SHORTLIST rows.
 
-
-def _pq_queries(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(query_id, qv): the pinned unit-normalized query set the PQ
-    keys score and re-rank against."""
-    return (
-        _unit(_embeddings(spark, sf_dir), "v")
-        .orderBy("vec_id")
-        .limit(N_QUERIES)
-        .select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
-    )
+    Cached entry point (cache.shared): reused by sim_pq_recall."""
+    return shared(spark, sf_dir, "sim_pq_topk", lambda: _adc_topk(spark, sf_dir))
 
 
 def _pq_query_lut(
@@ -2338,13 +2334,7 @@ def _pq_query_lut(
     rows total (constant-bounded, always broadcastable). Takes the
     _pq_queries frame from the caller so a plan that also re-ranks
     against it derives the query set once, not twice."""
-    qsubs = q.select(
-        "query_id",
-        F.explode(F.sequence(F.lit(0), F.lit(PQ_M - 1))).alias("m"),
-        "qv",
-    ).select(
-        "query_id", "m", F.slice("qv", F.col("m") * PQ_SUB + 1, PQ_SUB).alias("qs")
-    )
+    qsubs = _subspaces(q, "query_id", "qv", "qs")
     return qsubs.join(F.broadcast(_pq_codebook(spark, sf_dir)), "m").select(
         "query_id",
         "m",
@@ -2353,50 +2343,33 @@ def _pq_query_lut(
     )
 
 
-def _sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ-ADC top-k with exact re-rank → same schema as sim_topk.
-    Per query: build the (PQ_M × PQ_K)-entry distance lookup table
-    ONCE, rank the whole corpus by summed table lookups (codes only —
-    no vector is touched), keep the PQ_SHORTLIST best, then exact-
-    cosine re-rank just those. At 100 TB the corpus side of the ADC
-    join carries 96-bit codes instead of 256-byte vectors — the scan,
-    the shuffle, and the state all shrink ~21×; full vectors are read
-    only for |queries| · PQ_SHORTLIST rows."""
-    emb = _unit(_embeddings(spark, sf_dir), "v")
+def _adc_topk(
+    spark: SparkSession, sf_dir: str, cand: DataFrame | None = None
+) -> DataFrame:
+    """The ADC stages of the PQ keys → the sim_topk schema: score the
+    candidates by summed lookup-table distances over their PQ codes,
+    shortlist the PQ_SHORTLIST smallest per query, re-rank those by
+    the exact dot of unit vectors. Candidates are the whole corpus
+    (sim_pq_topk) or the (query_id, vec_id) pairs IVF routing probed
+    (sim_ivfpq_topk); that is the only difference between the keys."""
     q = _pq_queries(spark, sf_dir)
-    lut = _pq_query_lut(spark, sf_dir, q)
+    lut = F.broadcast(_pq_query_lut(spark, sf_dir, q))
     codes = _pq_codes_long(spark, sf_dir).select("vec_id", "m", "code")
-    adist = (
-        codes.join(F.broadcast(lut), ["m", "code"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum("d2").alias("adist2"))
-    )
-    ws = Window.partitionBy("query_id").orderBy("adist2", "vec_id")
-    short = (
-        adist.withColumn("srank", F.row_number().over(ws))
-        .filter(F.col("srank") <= PQ_SHORTLIST)
-        .select("query_id", "vec_id")
-    )
-    rerank = (
-        short.join(emb, "vec_id")
-        .join(
-            F.broadcast(q),
-            "query_id",
+    if cand is None:
+        coded = codes.join(lut, ["m", "code"]).filter(
+            F.col("vec_id") != F.col("query_id")
         )
+    else:
+        coded = codes.join(cand, "vec_id").join(lut, ["query_id", "m", "code"])
+    adist = coded.groupBy("query_id", "vec_id").agg(F.sum("d2").alias("adist2"))
+    short = _topk(adist, "query_id", F.asc("adist2"), PQ_SHORTLIST)
+    rerank = (
+        short.select("query_id", "vec_id")
+        .join(_unit(_embeddings(spark, sf_dir), "v"), "vec_id")
+        .join(F.broadcast(q), "query_id")
         .withColumn("cosine", _dot(F.col("qv"), F.col("v")))
     )
-    wr = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), "vec_id")
-    return (
-        rerank.withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "rank",
-            F.round("cosine", 6).alias("cosine"),
-        )
-    )
+    return _neighbors(rerank, "query_id", "cosine", TOP_K)
 
 
 def sim_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2405,32 +2378,10 @@ def sim_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     price of 21× compression on PQ-hostile near-random embeddings,
     hash-checked into the driver artifact (the sim_ivf_recall
     discipline)."""
-    exact = sim_topk(spark, sf_dir).select("query_id", "neighbor_id")
-    approx = sim_pq_topk(spark, sf_dir).select(
-        "query_id", "neighbor_id", F.lit(1).alias("hit")
-    )
-    return (
-        exact.join(approx, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.sum(F.coalesce("hit", F.lit(0))).cast("bigint").alias("n_hits"),
-            F.round(
-                F.sum(F.coalesce("hit", F.lit(0))) / F.count(F.lit(1)), 6
-            ).alias("recall_at_k"),
-        )
-        .select("query_id", "n_hits", "recall_at_k")
-    )
+    return _recall(sim_topk(spark, sf_dir), sim_pq_topk(spark, sf_dir), "query_id")
 
 
 def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cached entry point (cache.shared): reused by
-    sim_ivfpq_recall."""
-    return shared(
-        spark, sf_dir, "sim_ivfpq_topk", lambda: _sim_ivfpq_topk(spark, sf_dir)
-    )
-
-
-def _sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ hybrid top-k — the full production ANN shape (an
     inverted-file index over PQ codes, Jégou et al.'s IVFADC):
     queries route to their IVF_NPROBE nearest coarse cells exactly as
@@ -2449,53 +2400,16 @@ def _sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-pairs); the ADC lookup table is constant-bounded
     (N_QUERIES·PQ_M·PQ_K rows) and broadcast. Fully deterministic
     (pinned cells, codebook, and tie-breaks) ⇒ exact oracle composing
-    the IVF and PQ oracle CTEs."""
-    emb = _embeddings(spark, sf_dir)
-    cells = _cells(spark, sf_dir)
-    corpus_cells = _assign(emb, cells, "v", "cells", 1).select(
-        "vec_id", F.explode("cells").alias("cell_id")
-    )
-    qraw = _raw_queries(spark, sf_dir)
-    probes = _assign(qraw, cells, "qv", "probe_cells", IVF_NPROBE).select(
-        "query_id", F.explode("probe_cells").alias("cell_id")
-    )
-    cand = (
-        F.broadcast(probes)
-        .join(corpus_cells, "cell_id")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id")
-    )
-    codes = _pq_codes_long(spark, sf_dir).select("vec_id", "m", "code")
-    qunit = _pq_queries(spark, sf_dir)
-    lut = _pq_query_lut(spark, sf_dir, qunit)
-    adist = (
-        codes.join(cand, "vec_id")
-        .join(F.broadcast(lut), ["query_id", "m", "code"])
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum("d2").alias("adist2"))
-    )
-    ws = Window.partitionBy("query_id").orderBy("adist2", "vec_id")
-    short = (
-        adist.withColumn("srank", F.row_number().over(ws))
-        .filter(F.col("srank") <= PQ_SHORTLIST)
-        .select("query_id", "vec_id")
-    )
-    uemb = _unit(_embeddings(spark, sf_dir), "v")
-    rerank = (
-        short.join(uemb, "vec_id")
-        .join(F.broadcast(qunit), "query_id")
-        .withColumn("cosine", _dot(F.col("qv"), F.col("v")))
-    )
-    wr = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), "vec_id")
-    return (
-        rerank.withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "rank",
-            F.round("cosine", 6).alias("cosine"),
-        )
+    the IVF and PQ oracle CTEs.
+
+    Cached entry point (cache.shared): reused by sim_ivfpq_recall."""
+    return shared(
+        spark,
+        sf_dir,
+        "sim_ivfpq_topk",
+        lambda: _adc_topk(
+            spark, sf_dir, _ivf_route(spark, sf_dir).select("query_id", "vec_id")
+        ),
     )
 
 
@@ -2506,20 +2420,8 @@ def sim_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantization misses), hash-checked into the driver artifact —
     the sim_ivf_recall / sim_pq_recall discipline applied to their
     composition."""
-    exact = sim_topk(spark, sf_dir).select("query_id", "neighbor_id")
-    approx = sim_ivfpq_topk(spark, sf_dir).select(
-        "query_id", "neighbor_id", F.lit(1).alias("hit")
-    )
-    return (
-        exact.join(approx, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.sum(F.coalesce("hit", F.lit(0))).cast("bigint").alias("n_hits"),
-            F.round(
-                F.sum(F.coalesce("hit", F.lit(0))) / F.count(F.lit(1)), 6
-            ).alias("recall_at_k"),
-        )
-        .select("query_id", "n_hits", "recall_at_k")
+    return _recall(
+        sim_topk(spark, sf_dir), sim_ivfpq_topk(spark, sf_dir), "query_id"
     )
 
 
@@ -2582,14 +2484,13 @@ SELECT vec_id,
 FROM pqcodes GROUP BY vec_id
 """
 
-ORACLE_SIM_PQ_TOPK = f"""
+def _oracle_adc_topk(adist_ctes: str, e: str) -> str:
+    """The DuckDB twin of _adc_topk: `adist_ctes` ends in the `adist`
+    CTE over the key's candidates; the shortlist, the re-rank (corpus
+    side aliased `e`) and the top-k are shared."""
+    return f"""
 WITH {_ORACLE_PQ_BASE},
-adist AS (
-  SELECT l.query_id, co.vec_id, SUM(l.d2) AS adist2
-  FROM pqcodes co JOIN lut l ON l.m = co.m AND l.code = co.code
-  WHERE co.vec_id <> l.query_id
-  GROUP BY l.query_id, co.vec_id
-),
+{adist_ctes},
 short AS (
   SELECT query_id, vec_id FROM (
     SELECT query_id, vec_id,
@@ -2600,9 +2501,9 @@ short AS (
 ),
 rerank AS (
   SELECT s.query_id, s.vec_id AS neighbor_id,
-         list_dot_product(q.qv, e.v) AS cosine
+         list_dot_product(q.qv, {e}.v) AS cosine
   FROM short s
-  JOIN eu e ON e.vec_id = s.vec_id
+  JOIN eu {e} ON {e}.vec_id = s.vec_id
   JOIN q ON q.query_id = s.query_id
 )
 SELECT query_id, neighbor_id,
@@ -2613,19 +2514,18 @@ FROM rerank
 QUALIFY rank <= {TOP_K}
 """
 
-ORACLE_SIM_PQ_RECALL = f"""
-WITH exact AS ({ORACLE_SIM_TOPK}),
-approx AS ({ORACLE_SIM_PQ_TOPK})
-SELECT e.query_id,
-       CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_hits,
-       ROUND(SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-               / CAST(COUNT(*) AS DOUBLE), 6) AS recall_at_k
-FROM exact e
-LEFT JOIN approx a
-  ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
-GROUP BY e.query_id
-"""
+
+ORACLE_SIM_PQ_TOPK = _oracle_adc_topk(
+    """adist AS (
+  SELECT l.query_id, co.vec_id, SUM(l.d2) AS adist2
+  FROM pqcodes co JOIN lut l ON l.m = co.m AND l.code = co.code
+  WHERE co.vec_id <> l.query_id
+  GROUP BY l.query_id, co.vec_id
+)""",
+    "e",
+)
+
+ORACLE_SIM_PQ_RECALL = _oracle_recall(ORACLE_SIM_PQ_TOPK)
 
 # IVF-PQ hybrid: the shared IVF routing fragment (raw vectors — cosine
 # is scale-invariant but the EXPRESSION must match the Spark side
@@ -2633,9 +2533,8 @@ GROUP BY e.query_id
 # PQ base's ADC LUT + shortlist + rerank run restricted to it. Both
 # fragments are single-definition (_ORACLE_IVF_ROUTE / _ORACLE_PQ_BASE),
 # so the three sim oracles cannot drift apart.
-ORACLE_SIM_IVFPQ_TOPK = f"""
-WITH {_ORACLE_PQ_BASE},
-{_ORACLE_IVF_ROUTE},
+ORACLE_SIM_IVFPQ_TOPK = _oracle_adc_topk(
+    f"""{_ORACLE_IVF_ROUTE},
 cand AS (
   SELECT p.query_id, cc.vec_id
   FROM probes p JOIN corpus cc ON cc.cell_id = p.cell_id
@@ -2648,43 +2547,11 @@ adist AS (
   JOIN lut l ON l.query_id = ca.query_id
             AND l.m = co.m AND l.code = co.code
   GROUP BY ca.query_id, co.vec_id
-),
-short AS (
-  SELECT query_id, vec_id FROM (
-    SELECT query_id, vec_id,
-           ROW_NUMBER() OVER (PARTITION BY query_id
-                              ORDER BY adist2, vec_id) AS srank
-    FROM adist) t
-  WHERE srank <= {PQ_SHORTLIST}
-),
-rerank AS (
-  SELECT s.query_id, s.vec_id AS neighbor_id,
-         list_dot_product(q.qv, e2.v) AS cosine
-  FROM short s
-  JOIN eu e2 ON e2.vec_id = s.vec_id
-  JOIN q ON q.query_id = s.query_id
+)""",
+    "e2",
 )
-SELECT query_id, neighbor_id,
-       ROW_NUMBER() OVER (PARTITION BY query_id
-                          ORDER BY cosine DESC, neighbor_id) AS rank,
-       ROUND(cosine, 6) AS cosine
-FROM rerank
-QUALIFY rank <= {TOP_K}
-"""
 
-ORACLE_SIM_IVFPQ_RECALL = f"""
-WITH exact AS ({ORACLE_SIM_TOPK}),
-approx AS ({ORACLE_SIM_IVFPQ_TOPK})
-SELECT e.query_id,
-       CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_hits,
-       ROUND(SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-               / CAST(COUNT(*) AS DOUBLE), 6) AS recall_at_k
-FROM exact e
-LEFT JOIN approx a
-  ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
-GROUP BY e.query_id
-"""
+ORACLE_SIM_IVFPQ_RECALL = _oracle_recall(ORACLE_SIM_IVFPQ_TOPK)
 
 
 # --- PCA power iteration ----------------------------------------------------
@@ -3615,25 +3482,9 @@ def sim_mips_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     The MIPS-to-cosine reduction (augment dims so IVF routing works
     on inner product) is the documented escalation path; at this d
     the flat scan IS the baseline the IVF keys compare against."""
-    emb = _embeddings(spark, sf_dir)
-    q = _raw_queries(spark, sf_dir)
-    scored = (
-        F.broadcast(q)
-        .join(emb, F.col("vec_id") != F.col("query_id"))
-        .withColumn("dot", _dot(F.col("qv"), F.col("v")))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dot").desc(), F.col("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "rank",
-            F.round("dot", 6).alias("dot"),
-        )
+    scored = _all_pairs(_raw_queries(spark, sf_dir), _embeddings(spark, sf_dir))
+    return _neighbors(
+        scored.withColumn("dot", _dot(F.col("qv"), F.col("v"))), "query_id", "dot", TOP_K
     )
 
 

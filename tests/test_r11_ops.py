@@ -303,30 +303,6 @@ def test_events_windowed_quantiles_laws(spark, sf_oracle):
         assert lo <= r.p50_cents <= hi and lo <= r.p95_cents <= hi, r
 
 
-def test_ml_knn_classify_laws(spark, sf_oracle):
-    """k-NN classifier invariants: exactly KNN_SAMPLE_CAP verdict rows
-    (one per sampled query); is_correct consistent with the label
-    pair; accuracy beats the uniform-chance floor over the label
-    alphabet (the embedding space carries SOME signal); predicted
-    labels come from the true label alphabet."""
-    from distributed_graph_database_spark.catalog import table
-    from distributed_graph_database_spark.pipeline.similarity import (
-        KNN_SAMPLE_CAP,
-        ml_knn_classify,
-    )
-
-    rows = ml_knn_classify(spark, sf_oracle).collect()
-    assert len(rows) == KNN_SAMPLE_CAP
-    alphabet = {
-        r.label for r in table(spark, sf_oracle, "embeddings").select("label").distinct().collect()
-    }
-    for r in rows:
-        assert r.is_correct == (r.true_label == r.pred_label), r
-        assert r.pred_label in alphabet, r
-    acc = sum(r.is_correct for r in rows) / len(rows)
-    assert acc >= 1.0 / len(alphabet), (acc, len(alphabet))
-
-
 def test_graph_modularity_laws(spark, sf_oracle):
     """Modularity invariants: Q in [-0.5, 1) (the proven bounds for
     any partition); n_vertices and n_communities consistent with the

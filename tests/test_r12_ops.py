@@ -169,61 +169,6 @@ def test_text_pii_scrub_mask_placement(spark, tmp_path):
     assert masked[7] == "plain text", masked[7]
 
 
-def test_knn_2level_shape_laws(spark, sf_oracle):
-    """The two-level-quantizer kNN build (probe/deployment variant):
-    same output contract as the declared key — ≤ KNN_K neighbors per
-    source with contiguous ranks starting at 1, no self-edges, every
-    src has a home cell (appears at all)."""
-    from distributed_graph_database_spark.pipeline.similarity import (
-        KNN_K,
-        _corpus_n,
-        _sim_knn_graph_2level,
-    )
-
-    n = _corpus_n(spark, sf_oracle)
-    rows = _sim_knn_graph_2level(
-        spark, sf_oracle, n_cells=max(16, n // 50)
-    ).collect()
-    assert rows
-    by_src: dict[int, list] = {}
-    for r in rows:
-        assert r.src_id != r.neighbor_id
-        by_src.setdefault(r.src_id, []).append(r)
-    for src, rs in by_src.items():
-        ranks = sorted(x.rank for x in rs)
-        assert ranks == list(range(1, len(rs) + 1)), (src, ranks)
-        assert len(rs) <= KNN_K
-        # cosine non-increasing along rank
-        rs_sorted = sorted(rs, key=lambda x: x.rank)
-        for a, b in zip(rs_sorted, rs_sorted[1:]):
-            assert a.cosine >= b.cosine, (src, a, b)
-
-
-def test_sim_knn_graph_tree_declared_key_laws(spark, sf_oracle):
-    """The declared tree key: same output contract as sim_knn_graph
-    (≤ K ranked neighbors, no self-edges), and its recall audit rows
-    are in [0, 1] with n_hits consistent."""
-    from distributed_graph_database_spark.pipeline.similarity import (
-        KNN_K,
-        KNN_SAMPLE_CAP,
-        sim_knn_graph_tree,
-        sim_knn_tree_recall,
-    )
-
-    rows = sim_knn_graph_tree(spark, sf_oracle).collect()
-    assert rows
-    per = {}
-    for r in rows:
-        assert r.src_id != r.neighbor_id
-        per.setdefault(r.src_id, []).append(r.rank)
-    assert all(sorted(v) == list(range(1, len(v) + 1)) for v in per.values())
-    rec = sim_knn_tree_recall(spark, sf_oracle).collect()
-    assert 0 < len(rec) <= KNN_SAMPLE_CAP
-    for r in rec:
-        assert 0 <= r.n_hits <= KNN_K
-        assert abs(r.recall_at_k - r.n_hits / KNN_K) < 1e-6
-
-
 def test_dedup_embed_tree_laws(spark, sf_oracle):
     """The declared dedup pair build (tree quantizer — the PRIMARY
     since r13): every emitted pair is a genuine near-dup (cosine >=

@@ -1,5 +1,4 @@
-"""Round-13 session-2 operator laws: the k-means training loop and
-the semantic-dedup threshold sweep."""
+"""Round-13 operator laws: the k-means training loop."""
 
 from __future__ import annotations
 
@@ -106,24 +105,3 @@ def test_kmeans_train_converges_against_local_lloyd(spark, sf_smoke):
     for g, w in zip(got, want):
         assert g[:3] == w[:3]
         assert abs(g[3] - w[3]) <= 1e-6
-
-
-def test_sim_dedup_sweep_monotone_and_anchored(spark, sf_oracle):
-    """The yield curve is monotone non-increasing in threshold, its
-    lowest threshold equals the full pair table (the sweep's anchor
-    is the declared dedup_embed artifact), and n_dropped never
-    exceeds n_pairs."""
-    pairs = sim.dedup_embed(spark, sf_oracle)
-    n_pairs_all = pairs.count()
-    n_dropped_all = pairs.select("vec_b").distinct().count()
-    rows = sorted(
-        (r["threshold"], r["n_pairs"], r["n_dropped"])
-        for r in sim.sim_dedup_sweep(spark, sf_oracle).collect()
-    )
-    assert [t for t, _, _ in rows] == sim.SWEEP_THRESHOLDS
-    assert rows[0][1] == n_pairs_all and rows[0][2] == n_dropped_all
-    for (t0, p0, d0), (t1, p1, d1) in zip(rows, rows[1:]):
-        assert p1 <= p0 and d1 <= d0
-    for _, p, d in rows:
-        assert d <= p
-        assert (p == 0) == (d == 0)

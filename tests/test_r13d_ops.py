@@ -1,5 +1,5 @@
 """Round-13 third-batch operator laws: boilerplate removal, source
-overlap, MIPS top-k, and DBSCAN point classification — each checked
+overlap and DBSCAN point classification — each checked
 against an independent Python implementation or a structural
 invariant, plus oracle parity at sf0.001 (the sweep covers sf0.01)."""
 
@@ -8,7 +8,6 @@ from __future__ import annotations
 import hashlib
 from collections import defaultdict
 
-import numpy as np
 from pyspark.sql import functions as F
 
 from distributed_graph_database_spark.catalog import table
@@ -95,42 +94,6 @@ def test_source_overlap_parity(spark, sf_smoke):
         text.ORACLE_SQL["text_source_overlap"],
         sf_smoke,
         "text_source_overlap",
-    )
-
-
-# ---------- sim_mips_topk ----------
-
-def test_mips_topk_matches_numpy(spark, sf_smoke):
-    emb = {
-        r.vec_id: np.array(r.embedding, dtype=np.float64)
-        for r in table(spark, sf_smoke, "embeddings").collect()
-    }
-    qids = sorted(emb)[: similarity.N_QUERIES]
-    got = text_rows = similarity.QUERIES["sim_mips_topk"](
-        spark, sf_smoke
-    ).collect()
-    by_q = defaultdict(list)
-    for r in got:
-        by_q[r.query_id].append(r)
-    assert sorted(by_q) == qids
-    for q in qids:
-        scored = sorted(
-            ((float(emb[q] @ v), -vid) for vid, v in emb.items() if vid != q),
-            reverse=True,
-        )
-        want_ids = [-nid for _, nid in scored[: similarity.TOP_K]]
-        rows = sorted(by_q[q], key=lambda r: r.rank)
-        assert [r.neighbor_id for r in rows] == want_ids
-        for r, (dot, _) in zip(rows, scored):
-            assert abs(r.dot - round(dot, 6)) < 1e-9
-
-
-def test_mips_topk_parity(spark, sf_smoke):
-    assert_parity(
-        similarity.QUERIES["sim_mips_topk"](spark, sf_smoke),
-        similarity.ORACLE_SQL["sim_mips_topk"],
-        sf_smoke,
-        "sim_mips_topk",
     )
 
 

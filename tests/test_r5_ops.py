@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from distributed_graph_database_spark import relational
 from distributed_graph_database_spark.catalog import table
-from distributed_graph_database_spark.pipeline import events, similarity
+from distributed_graph_database_spark.pipeline import events
 from distributed_graph_database_spark.sources import formats
 
 
@@ -40,13 +40,6 @@ def test_grouping_sets_partials_sum_to_details(spark, sf_oracle):
         mine = [r for r in details if r.returnflag == flag]
         assert p.n_items == sum(r.n_items for r in mine)
         assert p.sum_qty == sum(r.sum_qty for r in mine)
-
-
-def test_range_search_respects_radius(spark, sf_oracle):
-    rows = similarity.sim_range_search(spark, sf_oracle).collect()
-    assert rows  # threshold chosen inside the data's cosine range
-    assert all(r.cosine >= similarity.RANGE_SEARCH_T for r in rows)
-    assert all(r.neighbor_id != r.query_id for r in rows)
 
 
 def test_store_stats_bounds(spark, sf_oracle):

@@ -1,5 +1,5 @@
 """Round-8 operator invariants: batched multi-seed Brandes vs one-seed
-kernel runs, and the per-sf quantizer scaling contracts."""
+kernel runs."""
 
 from __future__ import annotations
 
@@ -60,57 +60,6 @@ def test_betweenness_multi_seed_count_and_positivity(spark, sf_smoke):
     for r in rows:
         assert 1 <= r.n_seeds <= g.BETW_SEEDS
         assert r.betweenness >= 0.0
-
-
-def test_coarse_anchor_count_matches_duckdb_floor_sqrt_everywhere():
-    """_assign_2level takes max(4, isqrt(n_cells)) coarse anchors; the
-    oracles replay it as GREATEST(4, FLOOR(SQRT(n))) in double. The two
-    must agree for every cell count (double sqrt must not misround next
-    to a perfect square at these magnitudes) — sweep all n ≤ 200k plus
-    perfect squares and their neighbors up to 10^10."""
-    import duckdb
-
-    from distributed_graph_database_spark.pipeline.similarity import _n_coarse
-
-    rule = "GREATEST(4, CAST(FLOOR(SQRT(CAST(n AS DOUBLE))) AS BIGINT))"
-    edge = [k * k + d for k in (10**3, 10**4, 10**5, 99991) for d in (-1, 0, 1)]
-    rows = duckdb.connect().execute(
-        f"SELECT n, {rule} FROM range(0, 200001) t(n) "
-        f"UNION ALL SELECT n, {rule} FROM (SELECT UNNEST(?) AS n)",
-        [edge],
-    ).fetchall()
-    assert len(rows) == 200001 + len(edge)
-    for n, want in rows:
-        assert _n_coarse(n) == want, n
-
-
-def test_ivfpq_dominated_by_ivf_recall(spark, sf_smoke):
-    """Per query, the hybrid's hit set is provably contained in IVF's:
-    IVF hits = global top-k ∩ candidate set (exact cosine keeps every
-    global-top-k candidate), and the hybrid only further drops
-    candidates via the ADC shortlist — so n_hits(ivfpq) ≤ n_hits(ivf)
-    per query. Also pin result-shape invariants: ranks contiguous
-    from 1, ≤ TOP_K rows per query."""
-    from distributed_graph_database_spark.pipeline import similarity as sim
-
-    hyb = sim.sim_ivfpq_topk(spark, sf_smoke)
-    rows = hyb.collect()
-    per_q = {}
-    for r in rows:
-        per_q.setdefault(r.query_id, []).append(r.rank)
-    assert per_q, "hybrid returned no rows"
-    for q, ranks in per_q.items():
-        assert sorted(ranks) == list(range(1, len(ranks) + 1)), q
-        assert len(ranks) <= sim.TOP_K
-
-    ivf = {
-        r.query_id: r.n_hits
-        for r in sim.sim_ivf_recall(spark, sf_smoke).collect()
-    }
-    for r in sim.sim_ivfpq_recall(spark, sf_smoke).collect():
-        assert r.n_hits <= ivf[r.query_id], (
-            f"query {r.query_id}: hybrid hits {r.n_hits} > ivf {ivf[r.query_id]}"
-        )
 
 
 def _brute_pairs(feats, hmax):

@@ -104,7 +104,8 @@ HEADLINERS: dict[str, str] = {
     ),
     "sim_topk": (
         "The pinned query set is broadcast; the corpus is scanned once; "
-        "per-query top-k via windowed rank."
+        "per-query top-k via windowed rank, planned as a partial "
+        "WindowGroupLimit before the window's shuffle."
     ),
     "pipeline_clean_corpus": (
         "Fused cleaning pipeline: ONE scan of documents computes "
@@ -167,10 +168,11 @@ HEADLINERS: dict[str, str] = {
         "zero Python; scoring cost is exactly one pass over the data."
     ),
     "sim_knn_graph": (
-        "All-corpus ANN join: one scan assigns every vector its probe "
-        "cells (broadcast centroids + window rank), then home-side × "
-        "probe-side equi-join on cell_id — candidate work is "
-        "N²·(probes/cells), never a corpus² product; at 100 TB the home "
+        "All-corpus ANN join: the two-level quantizer routes every vector "
+        "to its probe cells (broadcast coarse anchors + narrow window "
+        "ranks), then home-side × probe-side equi-join on cell_id — "
+        "per-cell occupancy is constant at cells ∝ N, so candidate work "
+        "is linear in N, never a corpus² product; at 100 TB the home "
         "table hash-partitions by cell_id so each block is one "
         "partition's work."
     ),
