@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from ..cache import shared
 from ..catalog import table
 from . import traversal
-from .iterate import fixpoint
+from .iterate import fixpoint, propagate
 
 # Support threshold: a pair must co-occur in at least this many orders
 # to become an edge. Co-occurrence of 1 is sampling noise in a basket
@@ -268,8 +268,8 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed power iterations → (vid, round(rank, 6)).
 
     The engine's flagship *iterative analytics* operator beyond
-    traversal: same driver-loop shape as bfs_levels/components —
-    per-round join + groupBy-sum over the shared symmetric edge table
+    traversal: same driver-loop shape as bfs_levels/components — per
+    round one `propagate` sum over the shared symmetric edge table
     (`_sym_edges`), lazy rank state. The round count is FIXED (not
     convergence-driven) on purpose: both engines run exactly
     PR_ROUNDS supersteps, so the DuckDB oracle can unroll them as
@@ -292,20 +292,13 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     verts = vs.crossJoin(F.broadcast(vs.agg(F.count(F.lit(1)).alias("n"))))
     ranks = verts.select("v", (F.lit(1.0) / F.col("n")).alias("r"))
     for _ in range(PR_ROUNDS):
-        contrib = (
-            sym.join(ranks, sym.src == ranks.v)
-            .groupBy("dst")
-            .agg(F.sum(F.col("r") / F.col("outdeg")).alias("contrib"))
-        )
-        ranks = (
-            verts.join(contrib, F.col("v") == contrib.dst, "left")
-            .select(
-                "v",
-                (
-                    (1.0 - PR_DAMPING) / F.col("n")
-                    + PR_DAMPING * F.coalesce("contrib", F.lit(0.0))
-                ).alias("r"),
-            )
+        contrib = propagate(sym, ranks, F.col("r") / F.col("outdeg"), F.sum)
+        ranks = verts.join(contrib, "v", "left").select(
+            "v",
+            (
+                (1.0 - PR_DAMPING) / F.col("n")
+                + PR_DAMPING * F.coalesce("m", F.lit(0.0))
+            ).alias("r"),
         )
     return ranks.select(F.col("v").alias("vid"), F.round("r", 6).alias("rank"))
 
@@ -351,7 +344,7 @@ def graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     products, seed-expansion community detection) the reference's
     per-graph BFS could only approximate by hop count.
 
-    Same kernel as graph_pagerank — per-round join + groupBy-sum over
+    Same kernel as graph_pagerank — per round one `propagate` sum over
     the shared degree-annotated edges (`_sym_edges`), lazy bounded
     lineage — differing only in the restart vector: the
     (1-d) mass lands on the indicator [v = source] rather than 1/n.
@@ -376,7 +369,7 @@ def graph_ppr_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     Kernel (r11 SPARSE rank state — the measured A/B win): rank mass
     lives only on rows that HAVE mass. PPR's restart vector is an
     indicator on the seed, so unlike pagerank there is no dense term:
-    per round one edge equi-join + one (seed, dst) groupBy-sum, and
+    per round one `propagate` sum grouped by (seed, dst), and
     the d·contrib rows simply UNION the (1-d) seed rows — the next
     round's sum absorbs both. The dense K·|V| (seed × vertex)
     left-join the r10 kernel ran EVERY round (to materialize zeros
@@ -415,16 +408,9 @@ def _ppr_sparse(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
         "s", "v", F.lit(1.0 - PR_DAMPING).alias("r")
     )
     for _ in range(PR_ROUNDS):
-        contrib = (
-            sym.join(state, sym.src == state.v)
-            .groupBy("s", "dst")
-            .agg(F.sum(F.col("r") / F.col("outdeg")).alias("c"))
-            .select(
-                "s",
-                F.col("dst").alias("v"),
-                (F.lit(PR_DAMPING) * F.col("c")).alias("r"),
-            )
-        )
+        contrib = propagate(
+            sym, state, F.col("r") / F.col("outdeg"), F.sum, by=["s"]
+        ).select("s", "v", (F.lit(PR_DAMPING) * F.col("m")).alias("r"))
         state = contrib.unionByName(restart)
     mass = state.groupBy("s", "v").agg(F.sum("r").alias("r"))
     return (
@@ -497,7 +483,8 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     uniform start a_k ∝ A^(2k−1)·1 and h_k ∝ A^(2k)·1, and since L1
     normalization of a non-negative vector is scale-invariant it runs
     once, at the end. The kernel is a lazy chain of walk counts
-    v_{j+1} = groupBy(dst).sum over sym ⋈ v_j from v₁ = outdeg, and
+    v_{j+1} = groupBy(dst).sum over sym ⋈ v_j (one `propagate` sum)
+    from v₁ = outdeg, and
     authority = v₇/Σv₇, hub = v₈/Σv₈ (HITS_ROUNDS = 4). The counts
     are exact bigints — no summation-order noise, no dependence on
     partitioning — so the only float op is that final division. They
@@ -509,18 +496,14 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalization, an independent check of the algebra."""
     sym = _sym_edges(spark, sf_dir)
     # v₂ needs no join: each sym row carries its src's v₁ = outdeg.
-    walks = [sym.groupBy(F.col("dst").alias("v")).agg(F.sum("outdeg").alias("x"))]
+    walks = [sym.groupBy(F.col("dst").alias("v")).agg(F.sum("outdeg").alias("m"))]
     for _ in range(2 * HITS_ROUNDS - 2):
-        walks.append(
-            sym.join(walks[-1], sym.src == walks[-1].v)
-            .groupBy(F.col("dst").alias("v"))
-            .agg(F.sum("x").alias("x"))
-        )
+        walks.append(propagate(sym, walks[-1], F.col("m"), F.sum))
 
     def l1(x: DataFrame, name: str) -> DataFrame:
-        t = x.agg(F.sum("x").alias("t"))
+        t = x.agg(F.sum("m").alias("t"))
         return x.crossJoin(F.broadcast(t)).select(
-            "v", F.round(F.col("x") / F.col("t"), 6).alias(name)
+            "v", F.round(F.col("m") / F.col("t"), 6).alias(name)
         )
 
     return l1(walks[-1], "hub").join(l1(walks[-2], "authority"), "v").select(
@@ -943,8 +926,8 @@ def graph_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     Bellman-Ford relaxations from the minimum vertex id →
     (vid, round(dist, 6)) for vertices within the hop horizon.
 
-    The weighted complement to bfs_levels' hop counting: the same
-    per-round join + groupBy-min superstep, lazy like graph_pagerank
+    The weighted complement to bfs_levels' hop counting: per round one
+    self-inclusive `propagate` min, lazy like graph_pagerank
     (fixed rounds ⇒ bounded lineage, one job). Distances are exact
     across engines even before rounding — both sides accumulate each
     path left-to-right through the identical recurrence — rounding
@@ -955,18 +938,13 @@ def graph_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the bfs_levels shape) once the horizon is unbounded.
     """
     sym = _sym_edges(spark, sf_dir)
-    edges = sym.select("src", "dst", (F.lit(1.0) / F.col("n_orders")).alias("w"))
     dist = _min_id_seeds(sym, 1).select(
         F.col("s").alias("v"), F.lit(0.0).alias("dist")
     )
+    hop = F.col("dist") + F.lit(1.0) / F.col("n_orders")
     for _ in range(SSSP_ROUNDS):
-        relaxed = edges.join(dist, edges.src == dist.v).select(
-            F.col("dst").alias("v"), (F.col("dist") + F.col("w")).alias("dist")
-        )
-        dist = (
-            dist.unionByName(relaxed)
-            .groupBy("v")
-            .agg(F.min("dist").alias("dist"))
+        dist = propagate(sym, dist, hop, F.min, keep=F.col("dist")).select(
+            "v", F.col("m").alias("dist")
         )
     return dist.select(F.col("v").alias("vid"), F.round("dist", 6).alias("dist"))
 
@@ -1433,43 +1411,33 @@ def graph_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the last — DuckDB unrolls the same supersteps as generated CTEs
     (the graph_pagerank recipe).
 
-    Scale: per round one join of the checkpointed sym edge table
-    against the (vid, lbl) state + one (v, lbl) count + one per-vertex
-    arg-max window — all partitioned on the vertex key; state is two
-    longs per vertex. Same Pregel-on-DataFrames shape as pagerank:
-    fixed rounds ⇒ lazy bounded lineage, one job."""
+    Scale: per round one self-inclusive `propagate` of the sym edge
+    table against the (v, lbl) state whose one aggregate, the
+    deterministic `mode`, is that arg-max; state is two longs per
+    vertex. Fixed rounds ⇒ lazy bounded lineage, like pagerank."""
     return shared(
         spark,
         sf_dir,
         "lpa_communities",
-        lambda: label_propagation(_sym_edges(spark, sf_dir), LPA_ROUNDS),
+        lambda: label_propagation(_sym_edges(spark, sf_dir)),
     )
 
 
-def label_propagation(sym: DataFrame, rounds: int = LPA_ROUNDS) -> DataFrame:
-    """The LPA superstep core over any symmetric (src, dst) edge table
-    → (vid, community). Exposed separately so invariance tests can run
-    it on fixture graphs (cliques, disjoint unions) independent of the
-    co-purchase derivation."""
+def label_propagation(sym: DataFrame) -> DataFrame:
+    """LPA_ROUNDS supersteps over any symmetric (src, dst) edge table →
+    (vid, community), each the `mode` of a vertex's own and neighbors'
+    labels. Exposed so invariance tests can run it on fixture graphs
+    (cliques, disjoint unions) independent of the co-purchase graph."""
     labels = (
         sym.select(F.col("src").alias("v"))
         .distinct()
         .select("v", F.col("v").alias("lbl"))
     )
-    w = Window.partitionBy("v").orderBy(F.col("n").desc(), F.col("lbl"))
-    for _ in range(rounds):
-        votes = (
-            sym.join(labels, sym.src == labels.v)
-            .select(F.col("dst").alias("v"), "lbl")
-            .unionAll(labels)  # self-vote: breaks sync-LPA oscillation
-        )
-        labels = (
-            votes.groupBy("v", "lbl")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("v", "lbl")
-        )
+    # The self-vote (`keep`) damps sync-LPA oscillation.
+    for _ in range(LPA_ROUNDS):
+        labels = propagate(
+            sym, labels, F.col("lbl"), lambda m: F.mode(m, True), keep=F.col("lbl")
+        ).select("v", F.col("m").alias("lbl"))
     return labels.select(
         F.col("v").alias("vid"), F.col("lbl").alias("community")
     )

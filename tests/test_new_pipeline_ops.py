@@ -153,25 +153,6 @@ def test_copurchase_support_threshold_and_triangles(spark, sf_oracle):
     assert n == 61
 
 
-def test_pagerank_mass_conservation(spark, sf_oracle):
-    """With every vertex having outdeg >= 1 on the symmetrized graph,
-    total rank mass stays 1 through every round (teleport + damped
-    redistribution); row count = vertex count of the support graph."""
-    from distributed_graph_database_spark.graph import analytics
-
-    pr = analytics.graph_pagerank(spark, sf_oracle)
-    total = pr.agg(F.sum("rank")).first()[0]
-    assert abs(total - 1.0) < 1e-3  # 6-dp per-vertex rounding residue
-    e = analytics.graph_copurchase(spark, sf_oracle)
-    n_verts = (
-        e.select(F.col("p1").alias("v"))
-        .union(e.select(F.col("p2").alias("v")))
-        .distinct()
-        .count()
-    )
-    assert pr.count() == n_verts
-
-
 def test_salted_agg_equals_plain_aggregate(spark, sf_oracle):
     """The two-phase salted aggregate must be provably identical to
     the single-phase one (skew mitigation must not change results)."""
@@ -249,23 +230,6 @@ def test_corpus_mix_respects_weights(spark, sf_oracle):
     # nested-sample property: lowering a rate keeps a subset, so the
     # total kept under default 20% must be <= kept under 50%.
     assert all(r.n_kept <= r.n_total for r in rows.values())
-
-
-def test_sssp_source_zero_and_positive_distances(spark, sf_oracle):
-    from distributed_graph_database_spark.graph import analytics
-
-    d = {r.vid: r.dist for r in analytics.graph_sssp(spark, sf_oracle).collect()}
-    src = min(
-        r.p1
-        for r in analytics.graph_copurchase(spark, sf_oracle)
-        .select("p1")
-        .collect()
-    )
-    assert d[src] == 0.0
-    assert all(v > 0 for k, v in d.items() if k != src)
-    # every reached vertex got there through >=1 edge of weight <= 1/2
-    # per hop within the horizon, so distances are bounded
-    assert max(d.values()) <= analytics.SSSP_ROUNDS * 0.5 + 1e-9
 
 
 def _plan(df) -> str:

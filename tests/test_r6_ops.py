@@ -1,71 +1,11 @@
-"""Invariance/property tests for the round-6 operators: LPA
-communities (vs connected components), the kNN-graph family's exact
+"""Invariance/property tests for the round-6 operators; their exact
 values are oracle-checked in test_oracle_parity.py."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from distributed_graph_database_spark.graph import analytics, traversal
-
-
-def _sym(spark, pairs):
-    e = spark.createDataFrame(pairs, "src bigint, dst bigint")
-    return e.union(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-
-
-def test_lpa_clique_converges_to_one_community(spark):
-    """On a clique every vertex sees all labels tied → min-label
-    tie-break collapses the whole clique to its minimum vid in one
-    round; the single-community invariance vs graph_components."""
-    verts = [10, 11, 12, 13]
-    clique = _sym(
-        spark, [(a, b) for a in verts for b in verts if a < b]
-    )
-    got = {
-        r.vid: r.community
-        for r in analytics.label_propagation(clique).collect()
-    }
-    assert got == {v: 10 for v in verts}
-
-
-def test_lpa_disjoint_cliques_stay_separate(spark):
-    """Two disconnected cliques: labels must never cross — communities
-    refine components, and each community is its component's min vid
-    here."""
-    a = [(x, y) for x in (1, 2, 3) for y in (1, 2, 3) if x < y]
-    b = [(x, y) for x in (7, 8, 9) for y in (7, 8, 9) if x < y]
-    got = {
-        r.vid: r.community
-        for r in analytics.label_propagation(_sym(spark, a + b)).collect()
-    }
-    assert got == {1: 1, 2: 1, 3: 1, 7: 7, 8: 7, 9: 7}
-
-
-def test_communities_refine_components(spark, sf_oracle):
-    """On the real co-purchase graph: every LPA community lies inside
-    exactly one connected component (a label can only spread along
-    edges), and LPA is at least as fine as components."""
-    e = analytics._copurchase_edges(spark, sf_oracle).select("p1", "p2")
-    sym = e.union(
-        e.select(F.col("p2").alias("p1"), F.col("p1").alias("p2"))
-    ).select(F.col("p1").alias("src"), F.col("p2").alias("dst"))
-    comp = {
-        r.vid: r.comp
-        for r in traversal.connected_components(spark, sym).collect()
-    }
-    comm_rows = analytics.graph_communities(spark, sf_oracle).collect()
-    assert set(comp) == {r.vid for r in comm_rows}
-    comps_of_comm: dict = {}
-    for r in comm_rows:
-        comps_of_comm.setdefault(r.community, set()).add(comp[r.vid])
-    for community, comps in comps_of_comm.items():
-        assert len(comps) == 1, (
-            f"community {community} spans components {comps}"
-        )
-    assert len(comps_of_comm) >= len(set(comp.values()))
+from distributed_graph_database_spark.graph import analytics
 
 
 def test_store_stats_approx_within_5pct_and_no_expand(spark, sf_oracle):

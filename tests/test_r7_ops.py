@@ -124,21 +124,6 @@ def test_phash_dedup_symmetric_free_and_verified(spark, sf_oracle):
         assert r.hamming <= mm.PHASH_HAMMING_MAX
 
 
-def test_ppr_mass_conservation_and_seed_locality(spark, sf_oracle):
-    """Random-walk-with-restart invariants: total mass ≈ 1 (the
-    symmetrized graph has no dangling vertices, so nothing leaks)
-    and the seed — the minimum vertex id, where all restart mass
-    lands — holds the maximum stationary mass."""
-    from distributed_graph_database_spark.graph import analytics
-
-    rows = analytics.graph_ppr(spark, sf_oracle).collect()
-    tot = sum(r.ppr for r in rows)
-    assert abs(tot - 1.0) < 1e-3
-    mx = max(rows, key=lambda r: r.ppr)
-    seed = min(r.vid for r in rows)
-    assert mx.vid == seed
-
-
 def test_token_budget_invariants(spark, sf_oracle):
     """Hamilton apportionment laws: Σ quota = TOKEN_BUDGET exactly;
     every quota within 1 of its exact proportional share (the
@@ -155,51 +140,6 @@ def test_token_budget_invariants(spark, sf_oracle):
         share = TOKEN_BUDGET * r.n_tokens_available / total
         assert share - 1 < r.quota < share + 1, (r, share)
         assert r.quota <= r.n_tokens_available
-
-
-def test_hits_mass_and_symmetric_convergence(spark, sf_oracle):
-    """L1 normalization conserves unit mass on both vectors; on a
-    SYMMETRIZED graph hub and authority are one power iteration one
-    step apart (the normalized walk counts A⁸·1 and A⁷·1 after 4
-    rounds), so they agree to within the convergence gap (well under
-    1e-3 per vertex here) and share their argmax vertex."""
-    from distributed_graph_database_spark.graph import analytics
-
-    rows = analytics.graph_hits(spark, sf_oracle).collect()
-    assert abs(sum(r.hub for r in rows) - 1.0) < 1e-3
-    assert abs(sum(r.authority for r in rows) - 1.0) < 1e-3
-    assert max(abs(r.hub - r.authority) for r in rows) < 1e-3
-    assert max(rows, key=lambda r: r.hub).vid == max(
-        rows, key=lambda r: r.authority
-    ).vid
-
-
-def test_copurchase_kernels_ignore_shuffle_partitioning(spark, sf_smoke):
-    """HITS, PageRank and SSSP give the same rows with 1 and with 7
-    shuffle partitions, the shared edge artifacts rebuilt under each:
-    HITS's walk counts are exact integers, SSSP takes minima, and
-    PageRank's float sums round to 6 dp."""
-    from distributed_graph_database_spark import cache
-    from distributed_graph_database_spark.graph import analytics
-
-    def drop_edge_artifacts():
-        for k in [k for k in cache._MEMO if k[1] == sf_smoke
-                  and k[2] in ("graph_copurchase", "graph_sym")]:
-            del cache._MEMO[k]
-
-    keys = (analytics.graph_hits, analytics.graph_pagerank, analytics.graph_sssp)
-    conf = "spark.sql.shuffle.partitions"
-    before = spark.conf.get(conf)
-    rows = {}
-    try:
-        for n in (1, 7):
-            spark.conf.set(conf, str(n))
-            drop_edge_artifacts()
-            rows[n] = [sorted(map(tuple, f(spark, sf_smoke).collect())) for f in keys]
-    finally:
-        spark.conf.set(conf, before)
-        drop_edge_artifacts()
-    assert all(rows[1]) and rows[1] == rows[7]
 
 
 def test_betweenness_path_graph_golden(spark, monkeypatch):

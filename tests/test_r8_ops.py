@@ -271,48 +271,6 @@ def test_audio_fingerprint_bounds_and_short_doc(spark, sf_smoke):
         assert 0 <= fp[doc_id] < (1 << mm.AUDIO_FP_BITS)
 
 
-def test_ppr_multi_restricted_to_one_seed_equals_single_source(spark, sf_smoke):
-    """The sparse PPR kernel run for one seed must reproduce
-    graph_ppr_multi's rows for that seed (the seed set ordered by vertex
-    id starts at the min-id vertex — the single-source kernel's seed
-    convention). Seeds never meet; only the order of the float sums may
-    differ, so the rounded values agree to 1e-6."""
-    from distributed_graph_database_spark.graph import analytics as g
-
-    one = g._ppr_sparse(spark, sf_smoke, 1).collect()
-    seed = one[0].seed
-    got = {r.vid: r.ppr for r in one}
-    want = {
-        r.vid: r.ppr
-        for r in g.graph_ppr_multi(spark, sf_smoke).collect()
-        if r.seed == seed
-    }
-    assert {r.seed for r in one} == {seed}
-    assert got.keys() == want.keys()
-    for vid, ppr in got.items():
-        assert abs(ppr - want[vid]) <= 1e-6 + 1e-12
-
-
-def test_ppr_multi_mass_conservation_per_seed(spark, sf_smoke):
-    """Every seed's walk conserves unit mass: the symmetrized
-    co-purchase graph has no dangling vertices, so per round the total
-    is (1−d)·1 + d·1 = 1 exactly — each seed's ppr column must sum to
-    1 within rounding tolerance, over exactly |V| rows per seed."""
-    from collections import defaultdict
-
-    from distributed_graph_database_spark.graph import analytics as g
-
-    rows = g.graph_ppr_multi(spark, sf_smoke).collect()
-    per_seed = defaultdict(list)
-    for r in rows:
-        per_seed[r.seed].append(r.ppr)
-    assert 1 <= len(per_seed) <= g.PPR_SEEDS
-    sizes = {len(v) for v in per_seed.values()}
-    assert len(sizes) == 1  # every seed enumerates the same vertex set
-    for seed, vals in per_seed.items():
-        assert abs(sum(vals) - 1.0) < 1e-4, (seed, sum(vals))
-
-
 def test_readability_matches_python_reference(spark, sf_smoke):
     """Every readability column vs an independent Python replay of the
     contract: vowel-group syllables with the max(1,·) floor, [.!?]+

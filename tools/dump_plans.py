@@ -179,9 +179,10 @@ HEADLINERS: dict[str, str] = {
     "graph_communities": (
         "Four lazy label-propagation supersteps in ONE job over the "
         "checkpointed sym edge table: per round a join on the vertex "
-        "key, a partial-aggregated (v, lbl) count, and a per-vertex "
-        "arg-max window — all sharing the vertex-key partitioning, the "
-        "same bounded-lineage Pregel shape as pagerank."
+        "key and one partial-aggregated deterministic `mode` of the "
+        "received labels per vertex (the count DESC, label ASC arg-max "
+        "with no window) — the same bounded-lineage Pregel shape as "
+        "pagerank."
     ),
     "ml_centroid_classify": (
         "Fit+predict with zero vector-sized shuffle: the (label, dim) "
