@@ -41,9 +41,10 @@ format in Python too, and DFS leaves over that same edge frame reuse
 those rows, so a read is one Spark job and its leaves come from the
 same snapshot as its levels. Anything larger runs the distributed
 kernel, with the prefix serving its start-vertex check. The prefix is
-read from the frame the caller hands over; a read of one graph from a
-matrix directory (`sources.matrix`, filtered on `graph_id`) scans only
-that graph's file.
+read from the frame the caller hands over. A read of one graph from a
+reference-sized matrix directory (`sources.matrix`, filtered on
+`graph_id`) is a local frame parsed on the driver, so that one job
+scans no file; from a larger catalog it scans only that graph's file.
 """
 
 from __future__ import annotations

@@ -9,8 +9,9 @@ Python after one bounded read. Two things are pinned here:
   sends every non-empty edge frame down the distributed path;
 - the cost: a read shaped like the benchmark's serve read (matrix dir →
   `symmetrize` → `bfs_levels(validate=True)` → formatter) runs at most
-  1 Spark job for BFS, DFS or a refused start, and that job scans only
-  the read graph's file.
+  1 Spark job for BFS, DFS or a refused start. Over a reference-sized
+  catalog that job scans no file (the catalog is parsed on the driver);
+  over any other catalog it scans only the read graph's file.
 
 `symmetrize` itself is pinned against its Python law `_sym_rows`.
 """
@@ -178,12 +179,14 @@ def test_symmetrize_keeps_a_null_end_once(spark):
     assert sorted(map(tuple, rows), key=str) == [(2, None), (None, 1)]
 
 
-def _serve_read(spark, catalog, kind):
-    """The benchmark's serve read of G5: matrix dir → symmetrize →
-    bfs_levels(validate=True) → the kind's formatter, collected."""
+def _serve_read(spark, catalog, kind, gid="G5"):
+    """The benchmark's serve read of a graph: matrix dir → symmetrize →
+    bfs_levels(validate=True) → the kind's formatter, collected →
+    the answer (BFS order or DFS leaves from vertex 1), or the refusal
+    message."""
     edges = (
         matrix.parse_matrix_dir(spark, catalog)
-        .filter(F.col("graph_id") == "G5")
+        .filter(F.col("graph_id") == gid)
         .select("src", "dst")
     )
     sym = derive.symmetrize(edges)
@@ -191,13 +194,10 @@ def _serve_read(spark, catalog, kind):
     try:
         lv = traversal.bfs_levels(spark, sym, start, cache_edges=False, validate=True)
     except ValueError as e:
-        assert kind == "refused" and str(e) == traversal.START_NOT_PRESENT_MSG
-        return
-    assert kind != "refused", "an absent start was not refused"
+        return str(e)
     if kind == "dfs":
-        traversal.dfs_leaves_from_levels(lv, sym).collect()
-    else:
-        traversal.bfs_order_from_levels(lv).collect()
+        return sorted(r.vid for r in traversal.dfs_leaves_from_levels(lv, sym).collect())
+    return traversal.bfs_order_from_levels(lv).collect()[0][0]
 
 
 # Jobs per serve-shaped read: the one bounded read of the graph's rows,
@@ -209,11 +209,11 @@ READ_JOB_CEILINGS = {"bfs": 1, "dfs": 1, "refused": 1}
 @pytest.mark.parametrize("kind", sorted(READ_JOB_CEILINGS))
 def test_serve_read_job_ceiling(spark, tmp_path, kind):
     catalog = matrix.write_fixture_matrix_files(str(tmp_path))
-    counts = [
-        len(group_jobs(spark, lambda: _serve_read(spark, catalog, kind))[1])
-        for _ in range(2)
-    ]
-    assert min(counts) <= READ_JOB_CEILINGS[kind], (kind, counts)
+    answers, counts = zip(*(
+        group_jobs(spark, lambda: _serve_read(spark, catalog, kind)) for _ in range(2)
+    ))
+    assert (answers[0] == traversal.START_NOT_PRESENT_MSG) == (kind == "refused")
+    assert min(map(len, counts)) <= READ_JOB_CEILINGS[kind], (kind, counts)
 
 
 def _files_read(spark, job_ids):
@@ -236,13 +236,85 @@ def _files_read(spark, job_ids):
 
 
 @pytest.mark.parametrize("kind", ["bfs", "dfs"])
-def test_serve_read_scans_only_its_graph_file(spark, tmp_path, kind):
-    """graph_id comes from file metadata, so the filter on it prunes the
-    catalog to the one file the read asks for."""
+def test_serve_read_scans_only_its_graph_file(spark, tmp_path, monkeypatch, kind):
+    """A reference-sized catalog is parsed on the driver, so the read
+    scans no file. On the Spark parse graph_id comes from file
+    metadata, so the filter on it prunes the catalog to the one file
+    the read asks for."""
     catalog = matrix.write_fixture_matrix_files(str(tmp_path))
     assert len(list(tmp_path.glob("*.txt"))) >= 6
-    _, jobs = group_jobs(spark, lambda: _serve_read(spark, catalog, kind))
+    want = "1 2 3 4 5" if kind == "bfs" else [2, 4, 5]
+    answer, jobs = group_jobs(spark, lambda: _serve_read(spark, catalog, kind))
+    assert answer == want and _files_read(spark, jobs) == []
+    monkeypatch.setattr(matrix, "LOCAL_PARSE_MAX_BYTES", 0)
+    answer, jobs = group_jobs(spark, lambda: _serve_read(spark, catalog, kind))
+    assert answer == want and _files_read(spark, jobs) == [1]
+
+
+# Catalogs the Spark parse takes → (path, a driver-parsed twin that
+# holds the same matrix files).
+def _over_the_bound(tmp_path):
+    """MAX_GRAPHS files of the largest graph fill the bound; a trailing
+    space in one of them is one byte over it."""
+    edges = [(v, v + 1) for v in range(1, matrix.MAX_VERTICES)]
+    text = matrix.matrix_text(matrix.MAX_VERTICES, edges)
+    at, over = tmp_path / "at", tmp_path / "over"
+    for d in (at, over):
+        d.mkdir()
+        for k in range(1, matrix.MAX_GRAPHS + 1):
+            (d / f"G{k}.txt").write_text(text)
+    (over / "G1.txt").write_text(text + " ")
+    assert sum(f.stat().st_size for f in at.iterdir()) == matrix.LOCAL_PARSE_MAX_BYTES
+    return str(over), str(at)
+
+
+def _with_subdirectory(tmp_path):
+    plain = matrix.write_fixture_matrix_files(str(tmp_path / "plain"))
+    nested = matrix.write_fixture_matrix_files(str(tmp_path / "nested"))
+    (tmp_path / "nested" / "old").mkdir()
+    return nested, plain
+
+
+def _as_uri(tmp_path):
+    catalog = matrix.write_fixture_matrix_files(str(tmp_path))
+    return "file://" + catalog, catalog
+
+
+@pytest.mark.parametrize("catalog", [_over_the_bound, _with_subdirectory, _as_uri])
+def test_gate_sends_other_catalogs_to_the_spark_parse(spark, tmp_path, catalog):
+    """A catalog one byte over the bound, one holding a subdirectory or
+    one named by a URI is parsed by Spark: the read scans its graph's
+    file, and the rows and answers are the driver-parsed twin's."""
+    path, twin = catalog(tmp_path)
+    got, want = (matrix.parse_matrix_dir(spark, p) for p in (path, twin))
+    assert not got.isLocal() and want.isLocal()
+    assert sorted(got.collect()) == sorted(want.collect())
+    answer, jobs = group_jobs(spark, lambda: _serve_read(spark, path, "bfs", "G1"))
+    assert answer == _serve_read(spark, twin, "bfs", "G1")
     assert _files_read(spark, jobs) == [1]
+
+
+@pytest.mark.parametrize("path", ["driver", "spark"])
+def test_serve_read_of_the_empty_graph_is_refused(spark, tmp_path, monkeypatch, path):
+    """G4 (n = 0) has no vertex, so a read from vertex 1 is refused."""
+    catalog = matrix.write_fixture_matrix_files(str(tmp_path))
+    if path == "spark":
+        monkeypatch.setattr(matrix, "LOCAL_PARSE_MAX_BYTES", 0)
+    for kind in ("bfs", "dfs"):
+        assert _serve_read(spark, catalog, kind, "G4") == traversal.START_NOT_PRESENT_MSG
+
+
+@pytest.mark.parametrize("path", ["driver", "spark"])
+def test_serve_read_sees_a_rewritten_graph(spark, tmp_path, monkeypatch, path):
+    """A graph file rewritten between two reads is what the second read
+    traverses: no read serves a stale graph."""
+    catalog = matrix.write_fixture_matrix_files(str(tmp_path))
+    if path == "spark":
+        monkeypatch.setattr(matrix, "LOCAL_PARSE_MAX_BYTES", 0)
+    assert _serve_read(spark, catalog, "bfs") == "1 2 3 4 5"
+    (tmp_path / "G5.txt").write_text(matrix.matrix_text(6, [(1, 6), (6, 2), (2, 3)]))
+    assert _serve_read(spark, catalog, "bfs") == "1 6 2 3"
+    assert _serve_read(spark, catalog, "dfs") == [3]
 
 
 def test_dfs_leaves_rereads_another_edge_frame(spark):
